@@ -20,16 +20,16 @@ never compacts doc IDs.
 
 from __future__ import annotations
 
-import hashlib
-import json
-import os
-import shutil
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lucene_solr_spark.operators.segments import SegmentIndex
+from lucene_solr_spark.operators.segments import (
+    SegmentIndex,
+    clear_orphans,
+    commit,
+    fresh_name,
+)
 
 __all__ = ["add_indexes"]
 
@@ -89,6 +89,8 @@ def add_indexes(
         )
     seg_shift = max(s["segment_id"] for s in mdst["segments"]) + 1
     offset = seg_shift * dst.segment_size
+    # a crashed graft's leftovers would mix into the partitioned appends
+    clear_orphans(dst.base, mdst)
 
     # segments: shift metadata columns, append (no re-encode)
     _shift_segments(src.segments(spark), seg_shift, offset).write.mode(
@@ -105,29 +107,26 @@ def add_indexes(
         .parquet(dst.seg_docs_path)
     )
 
-    # dictionary: merge (write-aside then swap — can't overwrite a
-    # parquet dir while reading it)
-    merged = (
+    # dictionary: merge into a fresh table
+    ts_name = fresh_name(mdst, "term_stats")
+    (
         dst.term_stats(spark)
         .unionByName(src.term_stats(spark))
         .groupBy("term")
         .agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
+        .repartitionByRange(4, "term")
+        .sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .parquet(f"{dst.base}/{ts_name}")
     )
-    tmp = f"{dst.base}/term_stats_tmp"
-    merged.repartitionByRange(4, "term").sortWithinPartitions("term").write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    shutil.rmtree(dst.term_stats_path)
-    os.rename(tmp, dst.term_stats_path)
-    dst.invalidate()
 
     # lineage for the grafted segments: recompute the content CRC from
     # the WRITTEN rows (singleton_doc / tail_blob changed), scanning
     # only the appended partitions
     appended_ids = [int(s["segment_id"]) + seg_shift for s in msrc["segments"]]
     crc_rows = (
-        dst.segments(spark)
-        .filter(F.col("segment_id").isin(appended_ids))
+        spark.read.option("basePath", dst.segments_path)
+        .parquet(*(f"{dst.segments_path}/segment_id={i}" for i in appended_ids))
         .groupBy("segment_id")
         .agg(
             F.sum(
@@ -153,18 +152,17 @@ def add_indexes(
         for s in msrc["segments"]
     ]
     manifest = {
+        **mdst,
         "doc_count": mdst["doc_count"] + msrc["doc_count"],
         "sum_ttf": mdst["sum_ttf"] + msrc["sum_ttf"],
-        "segment_size": dst.segment_size,
+        # docIDs are never reused: the next append starts past the graft
+        "next_doc_id": max(s["max_doc"] for s in grafted) + 1,
+        "term_stats": ts_name,
         "segments": sorted(
             mdst["segments"] + grafted, key=lambda s: s["segment_id"]
         ),
     }
-    manifest["manifest_sha256"] = hashlib.sha256(
-        json.dumps(manifest["segments"], sort_keys=True).encode()
-    ).hexdigest()
-    with open(f"{dst.base}/manifest.json", "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
+    commit(dst.base, manifest)
 
     return SegmentIndex(
         base=dst.base,

@@ -48,7 +48,6 @@ def _check_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
     for pdf in it:
         bad: list[tuple[int, str, str]] = []
-        seg_size = int(pdf["_seg_size"].iloc[0]) if len(pdf) else 0
         for r in pdf.itertuples(index=False):
             seg, term = int(r.segment_id), str(r.term)
 
@@ -70,9 +69,9 @@ def _check_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 report("tf < 1")
             if int(tfs.sum()) != enc.ttf:
                 report(f"sum(tf)={int(tfs.sum())} != ttf={enc.ttf}")
-            lo, hi = seg * seg_size, (seg + 1) * seg_size
-            if len(docs) and (int(docs[0]) < lo or int(docs[-1]) >= hi):
-                report(f"doc_id outside segment range [{lo},{hi})")
+            lo, hi = int(r.min_doc), int(r.max_doc)
+            if len(docs) and (int(docs[0]) < lo or int(docs[-1]) > hi):
+                report(f"doc_id outside segment range [{lo},{hi}]")
             if enc.singleton_doc < 0 and len(enc.block_last):
                 nb = len(enc.block_last)
                 if len(enc.imp_off) != nb + 1:
@@ -110,12 +109,18 @@ def check_index(spark: SparkSession, index: SegmentIndex) -> dict:
     seg = index.segments(spark)
     docs = index.seg_docs(spark)
     manifest = index.manifest()
-    seg_size = index.segment_size
+    # each segment's doc range as the manifest records it
+    ranges = F.broadcast(
+        spark.createDataFrame(
+            [(s["segment_id"], s["min_doc"], s["max_doc"]) for s in manifest["segments"]],
+            "segment_id int, min_doc long, max_doc long",
+        )
+    )
     problems: list[dict] = []
 
     # ---- deep per-term decode pass (distributed) ----------------------
     decoded_bad = (
-        seg.withColumn("_seg_size", F.lit(seg_size))
+        seg.join(ranges, "segment_id")
         .mapInPandas(_check_batch, schema=_CHECK_SCHEMA)
         .limit(1000)
         .collect()
@@ -138,10 +143,8 @@ def check_index(spark: SparkSession, index: SegmentIndex) -> dict:
             }
         )
     bad_range = (
-        docs.filter(
-            (F.col("doc_id") < F.col("segment_id") * seg_size)
-            | (F.col("doc_id") >= (F.col("segment_id") + 1) * seg_size)
-        )
+        docs.join(ranges, "segment_id")
+        .filter((F.col("doc_id") < F.col("min_doc")) | (F.col("doc_id") > F.col("max_doc")))
         .groupBy("segment_id")
         .count()
         .collect()

@@ -4,8 +4,9 @@ Re-expresses ``codecs/lucene90/Lucene90LiveDocsFormat.java`` +
 ``index/IndexWriter.deleteDocuments`` for the doc-range segment layout
 (SURVEY.md §1.1 "Live docs" row):
 
-- deletes are an append-only TOMBSTONE TABLE (``base/tombstones/``,
-  parquet of doc_id) committed atomically (tmp dir + rename) — the
+- deletes are a TOMBSTONE TABLE (parquet of doc_id): each delete
+  writes the whole new table under a fresh name and commits the
+  manifest that names it (``operators.segments.commit``) — the
   bitset-per-segment of the reference becomes one sorted doc_id column
   range-filterable per segment;
 - search masks tombstoned docs AFTER scoring candidates (the liveDocs
@@ -26,14 +27,16 @@ billion-row delete set never visits the driver.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lucene_solr_spark.operators.segments import SegmentIndex
+from lucene_solr_spark.operators.segments import (
+    SegmentIndex,
+    commit,
+    fresh_name,
+    table_path,
+)
 from lucene_solr_spark.plans import ir
 
 __all__ = [
@@ -45,8 +48,9 @@ __all__ = [
 ]
 
 
-def tombstones_path(index: SegmentIndex) -> str:
-    return f"{index.base}/tombstones"
+def tombstones_path(index: SegmentIndex) -> str | None:
+    """The committed tombstone table, or None when nothing is deleted."""
+    return table_path(index.base, index.manifest(), "tombstones")
 
 
 def read_tombstones(
@@ -57,7 +61,7 @@ def read_tombstones(
     """Sorted tombstoned doc_ids, optionally range-filtered (a segment
     task passes its own doc range so it reads only relevant row groups)."""
     path = tombstones_path(index)
-    if not os.path.isdir(path):
+    if path is None:
         return np.empty(0, np.int64)
     import pyarrow.parquet as pq
 
@@ -71,42 +75,25 @@ def read_tombstones(
 
 
 def _commit_tombstones(index: SegmentIndex, df: DataFrame) -> int:
-    """Atomically replace the tombstone table with ``df`` (distinct,
-    sorted doc_ids → range-filterable row groups); returns the count.
-    Commit order: data dir swapped into place first, manifest count
-    updated after (a crash leaves a consistent superset/subset, never a
-    torn table)."""
-    import hashlib
-    import json
-
-    path = tombstones_path(index)
-    tmp = f"{index.base}/tombstones.next"
+    """Replace the tombstone table with ``df`` (distinct, sorted doc_ids
+    → range-filterable row groups); returns the count. The table goes to
+    a fresh name and one ``commit`` publishes it with the count."""
+    manifest = index.manifest()
+    name = fresh_name(manifest, "tombstones")
+    path = f"{index.base}/{name}"
     (
         df.select(F.col("doc_id").cast("long"))
         .distinct()
         .repartitionByRange(max(1, df.sparkSession.sparkContext.defaultParallelism // 8), "doc_id")
         .sortWithinPartitions("doc_id")
         .write.mode("overwrite")
-        .parquet(tmp)
+        .parquet(path)
     )
-    n = int(df.sparkSession.read.parquet(tmp).count())
-    old = f"{index.base}/tombstones.old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(path):
-        os.replace(path, old)
-    os.replace(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-
-    manifest = index.manifest()
+    n = int(df.sparkSession.read.parquet(path).count())
+    manifest["tombstones"] = name
     manifest["n_deleted"] = n
     manifest.setdefault("next_doc_id", manifest["doc_count"])
-    manifest["manifest_sha256"] = hashlib.sha256(
-        json.dumps(manifest["segments"], sort_keys=True).encode()
-    ).hexdigest()
-    tmp_m = f"{index.base}/manifest.json.tmp"
-    with open(tmp_m, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp_m, f"{index.base}/manifest.json")
+    commit(index.base, manifest)
     return n
 
 
@@ -116,7 +103,7 @@ def delete_by_ids_df(index: SegmentIndex, ids: DataFrame) -> int:
     spark = ids.sparkSession
     new = ids.select(F.col("doc_id").cast("long"))
     path = tombstones_path(index)
-    if os.path.isdir(path):
+    if path is not None:
         new = new.unionByName(spark.read.parquet(path).select("doc_id"))
     return _commit_tombstones(index, new)
 

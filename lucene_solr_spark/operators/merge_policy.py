@@ -23,19 +23,16 @@ of operators.segments — the ``SegmentMerger``/``DocIDMerger`` path
    batches — many parallel tasks, term-sorted output files (row-group
    stats stay prunable, mirroring Lucene's term-sorted merged segment),
    no single-task ``coalesce(1)`` bottleneck;
-3. commit is two-phase and crash-safe IN ORDER: tmp dirs are moved into
-   place, the new manifest is written, and only then are the (now
-   unreferenced) child dirs deleted — a crash at any point leaves either
-   the old manifest over intact children or the new manifest over the
-   merged segment (``index/IndexWriter.java:3367`` prepareCommit).
+3. the merged segment is written under its new id, which no manifest
+   names yet, and one ``operators.segments.commit`` publishes it with the
+   shrunk dictionary and tombstone table of a purging merge; the commit
+   then deletes the children — a crash at any point leaves either the
+   old manifest over intact children or the new manifest over the merged
+   segment (``index/IndexWriter.java:3367`` prepareCommit).
 """
 
 from __future__ import annotations
 
-import hashlib
-import json
-import os
-import shutil
 from dataclasses import dataclass
 
 import numpy as np
@@ -44,7 +41,13 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from lucene_solr_spark.codecs.postings_codec import decode_postings, encode_postings
-from lucene_solr_spark.operators.segments import SEGMENT_SCHEMA, SegmentIndex
+from lucene_solr_spark.operators.segments import (
+    SEGMENT_SCHEMA,
+    SegmentIndex,
+    commit,
+    fresh_name,
+    table_path,
+)
 
 __all__ = ["TieredMergePolicy", "find_merges", "merge_segments", "run_merges"]
 
@@ -281,10 +284,10 @@ def _build_merged_segment(
     new_id: int,
 ) -> dict:
     """Build phase: all the distributed work of a merge — decode, purge,
-    re-encode, write the merged segment to per-merge TMP dirs, compute
-    its stats. Touches only ``tmp_merge/*_{new_id}`` paths and reads only
-    this merge's child dirs, so independent merges (disjoint child sets)
-    can run this concurrently from driver threads."""
+    re-encode, write the merged segment under ``new_id``, compute its
+    stats. Writes only the (not yet committed) ``new_id`` dirs and reads
+    only this merge's child dirs, so independent merges (disjoint child
+    sets) can run this concurrently from driver threads."""
     by_id = {s["segment_id"]: s for s in manifest["segments"]}
     children = [by_id[c] for c in child_ids]
 
@@ -298,10 +301,9 @@ def _build_merged_segment(
     # merge purges tombstoned docs (DocIDMerger skips deleted): anti-join
     # the live-docs table down BEFORE the norm attach — decoded postings
     # that miss from seg_docs are then recognized as deleted in the kernel
-    tomb_dir = f"{index.base}/tombstones"
-    purging = os.path.isdir(tomb_dir)
-    if purging:
-        tombs_df = spark.read.parquet(tomb_dir).select("doc_id")
+    tomb_path = table_path(index.base, manifest, "tombstones")
+    if tomb_path is not None:
+        tombs_df = spark.read.parquet(tomb_path).select("doc_id")
         seg_docs = seg_docs.join(tombs_df, "doc_id", "left_anti")
 
     import pyspark.sql.types as T
@@ -356,23 +358,21 @@ def _build_merged_segment(
         .mapInPandas(_reencode_stream, schema=out_schema)
     )
 
-    # tmp dirs live OUTSIDE the partitioned layout so concurrent readers
-    # never see a half-written partition value
-    tmp_path = f"{index.base}/tmp_merge/segments_{new_id}"
-    merged.write.mode("overwrite").parquet(tmp_path)
+    seg_path = f"{index.segments_path}/segment_id={new_id}"
+    merged.write.mode("overwrite").parquet(seg_path)
 
     # seg_docs for the merged range = concat of children (already disjoint)
     total_docs = sum(c["n_docs"] for c in children)
     doc_parts = max(1, min(64, total_docs // 4_000_000 + 1))
-    tmp_docs = f"{index.base}/tmp_merge/seg_docs_{new_id}"
+    docs_path = f"{index.seg_docs_path}/segment_id={new_id}"
     seg_docs.drop("segment_id").repartitionByRange(
         doc_parts, "doc_id"
-    ).sortWithinPartitions("doc_id").write.mode("overwrite").parquet(tmp_docs)
+    ).sortWithinPartitions("doc_id").write.mode("overwrite").parquet(docs_path)
 
     # merged-segment stats from the WRITTEN data (a purging merge shrinks
     # doc/posting counts — SegmentMerger writes exact per-segment stats)
     stats = (
-        spark.read.parquet(tmp_path)
+        spark.read.parquet(seg_path)
         .agg(
             F.count("*").alias("nt"),
             F.sum("df").alias("np"),
@@ -381,7 +381,7 @@ def _build_merged_segment(
         .collect()[0]
     )
     dstats = (
-        spark.read.parquet(tmp_docs)
+        spark.read.parquet(docs_path)
         .agg(
             F.count("*").alias("n"),
             F.min("doc_id").alias("mn"),
@@ -399,47 +399,25 @@ def _build_merged_segment(
         "sum_tf": int(stats["st"] or 0),
         "content_crc": 0,
     }
-    return {
-        "meta": merged_meta,
-        "child_ids": list(child_ids),
-        "children": children,
-        "tmp_path": tmp_path,
-        "tmp_docs": tmp_docs,
-        "purging": purging,
-    }
+    return {"meta": merged_meta, "children": children}
 
 
 def _commit_merged_segment(
     spark: SparkSession, index: SegmentIndex, build: dict
 ) -> None:
     """Commit phase: publish one built merge. SINGLE-WRITER — the caller
-    must serialize commits (the manifest has no lock). Cost is
-    O(metadata): dir renames + manifest rewrite (+ term-stats rebuild on
-    a purging merge)."""
+    serializes commits. A purging merge also rebuilds the dictionary and
+    drops the tombstones it purged, under fresh names, in the same
+    commit."""
     merged_meta = build["meta"]
-    child_ids = build["child_ids"]
     children = build["children"]
-    tmp_path, tmp_docs = build["tmp_path"], build["tmp_docs"]
-    purging = build["purging"]
-    new_id = merged_meta["segment_id"]
-    tomb_dir = f"{index.base}/tombstones"
+    child_ids = {c["segment_id"] for c in children}
     # fresh manifest: earlier commits in the same scheduling round have
     # already removed THEIR children (disjoint from ours by construction)
     manifest = index.manifest()
     n_purged = sum(c["n_docs"] for c in children) - merged_meta["n_docs"]
-
-    # --- two-phase commit, crash-safe ORDER (IndexWriter.java:3367):
-    # (1) move the new dirs into place, (2) publish the manifest that
-    # references them, (3) only then delete the now-unreferenced children
-    final_path = f"{index.segments_path}/segment_id={new_id}"
-    final_docs = f"{index.seg_docs_path}/segment_id={new_id}"
-    shutil.rmtree(final_path, ignore_errors=True)
-    shutil.rmtree(final_docs, ignore_errors=True)
-    os.replace(tmp_path, final_path)
-    os.replace(tmp_docs, final_docs)
-
     manifest["segments"] = sorted(
-        [s for s in manifest["segments"] if s["segment_id"] not in set(child_ids)]
+        [s for s in manifest["segments"] if s["segment_id"] not in child_ids]
         + [merged_meta],
         key=lambda s: s["segment_id"],
     )
@@ -451,72 +429,45 @@ def _commit_merged_segment(
         manifest.setdefault("next_doc_id", manifest["doc_count"])
         manifest["doc_count"] = sum(s["n_docs"] for s in manifest["segments"])
         manifest["sum_ttf"] = sum(s["sum_tf"] for s in manifest["segments"])
-        # the global dictionary shrinks too — rebuild it before the commit
-        # from the LIVE segment dirs only (children still exist on disk
-        # until after the manifest commit)
-        live_paths = [
-            f"{index.segments_path}/segment_id={s['segment_id']}"
-            for s in manifest["segments"]
-        ]
-        tmp_stats = f"{index.base}/term_stats.next"
+        # the global dictionary shrinks too: rebuild it from the segments
+        # the new manifest names
+        ts_name = fresh_name(manifest, "term_stats")
         (
             spark.read.option("basePath", index.segments_path)
-            .parquet(*live_paths)
+            .parquet(
+                *(
+                    f"{index.segments_path}/segment_id={s['segment_id']}"
+                    for s in manifest["segments"]
+                )
+            )
             .groupBy("term")
             .agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
             .repartitionByRange(4, "term")
             .sortWithinPartitions("term")
             .write.mode("overwrite")
-            .parquet(tmp_stats)
+            .parquet(f"{index.base}/{ts_name}")
         )
-        shutil.rmtree(f"{index.base}/term_stats.old", ignore_errors=True)
-        os.replace(index.term_stats_path, f"{index.base}/term_stats.old")
-        os.replace(tmp_stats, index.term_stats_path)
-        shutil.rmtree(f"{index.base}/term_stats.old", ignore_errors=True)
-    manifest["manifest_sha256"] = hashlib.sha256(
-        json.dumps(manifest["segments"], sort_keys=True).encode()
-    ).hexdigest()
-    tmp_manifest = f"{index.base}/manifest.json.tmp"
-    with open(tmp_manifest, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp_manifest, f"{index.base}/manifest.json")
-
-    # children are unreferenced garbage now — safe to leak on crash
-    for c in child_ids:
-        shutil.rmtree(f"{index.segments_path}/segment_id={c}", ignore_errors=True)
-        shutil.rmtree(f"{index.seg_docs_path}/segment_id={c}", ignore_errors=True)
-    # only THIS merge's tmp dirs (other merges' builds may still be live);
-    # both were os.replace'd away, so this is leftover-crumb cleanup
-    shutil.rmtree(tmp_path, ignore_errors=True)
-    shutil.rmtree(tmp_docs, ignore_errors=True)
-    try:
-        os.rmdir(f"{index.base}/tmp_merge")
-    except OSError:
-        pass
-
-    if purging and n_purged > 0:
-        # drop tombstones covered by the merged ranges (their docs no
-        # longer exist anywhere; keeping them is harmless, so this is a
-        # crash-safe post-commit cleanup, not part of the commit)
+        manifest["term_stats"] = ts_name
+        # tombstones covered by the merged ranges name docs that no
+        # longer exist anywhere: drop them with the purge
         cond = None
         for c in children:
             cc = (F.col("doc_id") >= c["min_doc"]) & (
                 F.col("doc_id") <= c["max_doc"]
             )
             cond = cc if cond is None else cond | cc
-        remaining = spark.read.parquet(tomb_dir).filter(~cond)
-        if remaining.isEmpty():
-            shutil.rmtree(tomb_dir, ignore_errors=True)
-        else:
-            tmp_t = f"{index.base}/tombstones.next"
+        remaining = spark.read.parquet(
+            table_path(index.base, manifest, "tombstones")
+        ).filter(~cond)
+        manifest["n_deleted"] = remaining.count()
+        if manifest["n_deleted"]:
+            manifest["tombstones"] = fresh_name(manifest, "tombstones")
             remaining.sortWithinPartitions("doc_id").write.mode(
                 "overwrite"
-            ).parquet(tmp_t)
-            old_t = f"{index.base}/tombstones.old"
-            shutil.rmtree(old_t, ignore_errors=True)
-            os.replace(tomb_dir, old_t)
-            os.replace(tmp_t, tomb_dir)
-            shutil.rmtree(old_t, ignore_errors=True)
+            ).parquet(f"{index.base}/{manifest['tombstones']}")
+        else:
+            manifest.pop("tombstones")
+    commit(index.base, manifest)
 
 
 def run_merges(

@@ -31,6 +31,8 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
+import tempfile
 from dataclasses import dataclass
 
 import numpy as np
@@ -42,7 +44,7 @@ from pyspark.sql import types as T
 from lucene_solr_spark.codecs.postings_codec import encode_positions, encode_postings
 from lucene_solr_spark.operators.index_build import InvertedIndex
 
-__all__ = ["SegmentIndex", "build_segments", "SEGMENT_SCHEMA"]
+__all__ = ["SegmentIndex", "build_segments", "commit", "SEGMENT_SCHEMA"]
 
 SEGMENT_SCHEMA = T.StructType(
     [
@@ -72,18 +74,29 @@ class SegmentIndex:
     """Handle to an on-disk segmented index.
 
     base/
+      manifest.json                     the commit point: collection stats,
+                                        per-segment lineage, table names
       segments/segment_id=N/*.parquet   encoded term rows (term-sorted)
       seg_docs/segment_id=N/*.parquet   (doc_id, length, norm)
-      term_stats/*.parquet              global (term, df, ttf) dictionary
-      manifest.json                     collection stats + per-segment lineage
+      term_stats[_G]/*.parquet          global (term, df, ttf) dictionary
+      tombstones_G/*.parquet            deleted doc_ids (operators.deletes)
+
+    Writers put new data under names no committed manifest uses and
+    publish it with ``commit``. Readers resolve every file through the
+    manifest at call time, never by listing a directory, so a writer's
+    uncommitted or orphaned files are never read. The manifest's
+    ``term_stats`` key names the live dictionary (absent: the bare
+    ``term_stats/`` of a fresh build) and its ``tombstones`` key the
+    tombstone table (absent: no deletes).
     """
 
     base: str
     doc_count: int
     sum_ttf: int
     segment_size: int
-    _df_cache: dict = None  # lazy DataFrame handles (read.parquet is a
-    # JVM round-trip with file listing — do it once per table, not per call)
+    _df_cache: dict = None  # lazy DataFrame handles keyed by resolved
+    # paths (read.parquet is a JVM round-trip with file listing — do it
+    # once per committed table, not per call)
 
     @property
     def segments_path(self) -> str:
@@ -95,42 +108,121 @@ class SegmentIndex:
 
     @property
     def term_stats_path(self) -> str:
-        return f"{self.base}/term_stats"
+        return table_path(self.base, self.manifest(), "term_stats")
 
-    def _cached(self, spark: SparkSession, path: str) -> DataFrame:
+    def _cached(
+        self, spark: SparkSession, root: str, parts: tuple[str, ...] | None = None
+    ) -> DataFrame:
         if self._df_cache is None:
             object.__setattr__(self, "_df_cache", {})
-        if path not in self._df_cache:
-            self._df_cache[path] = spark.read.parquet(path)
-        return self._df_cache[path]
+        key = (root, parts)
+        if key not in self._df_cache:
+            self._df_cache[key] = (
+                spark.read.option("basePath", root).parquet(*(f"{root}/{p}" for p in parts))
+                if parts is not None
+                else spark.read.parquet(root)
+            )
+        return self._df_cache[key]
+
+    def _committed(self, spark: SparkSession, root: str) -> DataFrame:
+        """The manifest's segments of one per-segment table."""
+        ids = [s["segment_id"] for s in self.manifest()["segments"]]
+        return self._cached(spark, root, tuple(f"segment_id={i}" for i in ids))
 
     def segments(self, spark: SparkSession) -> DataFrame:
-        return self._cached(spark, self.segments_path)
+        return self._committed(spark, self.segments_path)
 
     def seg_docs(self, spark: SparkSession) -> DataFrame:
-        return self._cached(spark, self.seg_docs_path)
+        return self._committed(spark, self.seg_docs_path)
 
     def term_stats(self, spark: SparkSession) -> DataFrame:
         return self._cached(spark, self.term_stats_path)
 
-    def invalidate(self) -> None:
-        """Drop cached DataFrame handles (after appends/merges)."""
-        object.__setattr__(self, "_df_cache", {})
-
     def manifest(self) -> dict:
-        with open(f"{self.base}/manifest.json") as f:
-            return json.load(f)
+        return read_manifest(self.base)
 
     @staticmethod
     def open(base: str) -> "SegmentIndex":
-        with open(f"{base}/manifest.json") as f:
-            m = json.load(f)
+        m = read_manifest(base)
         return SegmentIndex(
             base=base,
             doc_count=m["doc_count"],
             sum_ttf=m["sum_ttf"],
             segment_size=m["segment_size"],
         )
+
+
+def read_manifest(base: str) -> dict:
+    with open(f"{base}/manifest.json") as f:
+        m = json.load(f)
+    if "tombstones" not in m and m.get("n_deleted") and os.path.isdir(f"{base}/tombstones"):
+        m["tombstones"] = "tombstones"  # an index from before tables were named
+    return m
+
+
+def table_path(base: str, manifest: dict, table: str) -> str | None:
+    """Resolve ``term_stats`` or ``tombstones`` through ``manifest``."""
+    name = manifest.get(table, "term_stats" if table == "term_stats" else None)
+    return None if name is None else f"{base}/{name}"
+
+
+def fresh_name(manifest: dict, table: str) -> str:
+    """A name for ``table`` that the commit following ``manifest`` may
+    publish: ``commit`` bumps the generation, so no committed manifest of
+    this index has used it."""
+    return f"{table}_{manifest.get('generation', 0) + 1}"
+
+
+def _named(base: str, manifest: dict) -> set[str]:
+    paths = {table_path(base, manifest, t) for t in ("term_stats", "tombstones")}
+    for s in manifest["segments"]:
+        paths.add(f"{base}/segments/segment_id={s['segment_id']}")
+        paths.add(f"{base}/seg_docs/segment_id={s['segment_id']}")
+    return paths - {None}
+
+
+def commit(base: str, manifest: dict) -> None:
+    """The one commit point (``index/SegmentInfos.java`` role): publish
+    ``manifest`` atomically, then delete what the previous manifest named
+    and this one does not.
+
+    Every writer writes its new data under fresh names first, derives
+    ``manifest`` from the previous one, and calls this. The manifest is
+    written to a temp file, fsynced and renamed over ``manifest.json``,
+    and the directory is fsynced, so a crash leaves either the old
+    snapshot or the new one. A crash during the deletions only leaves
+    unreferenced files behind."""
+    path = f"{base}/manifest.json"
+    prev = read_manifest(base) if os.path.exists(path) else None
+    manifest["generation"] = (prev or manifest).get("generation", 0) + 1
+    manifest["manifest_sha256"] = hashlib.sha256(
+        json.dumps(manifest["segments"], sort_keys=True).encode()
+    ).hexdigest()
+    fd, tmp = tempfile.mkstemp(dir=base, prefix=".manifest.")
+    with os.fdopen(fd, "w") as f:
+        json.dump(manifest, f, indent=1, sort_keys=True)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+    dir_fd = os.open(base, os.O_RDONLY)
+    try:
+        os.fsync(dir_fd)
+    finally:
+        os.close(dir_fd)
+    if prev is not None:
+        for gone in sorted(_named(base, prev) - _named(base, manifest)):
+            shutil.rmtree(gone, ignore_errors=True)
+
+
+def clear_orphans(base: str, manifest: dict) -> None:
+    """Delete segment dirs ``manifest`` does not name (left by a crashed
+    writer), so a partitioned append cannot mix them with new files."""
+    named = _named(base, manifest)
+    for table in ("segments", "seg_docs"):
+        root = f"{base}/{table}"
+        for d in os.listdir(root) if os.path.isdir(root) else ():
+            if d.startswith("segment_id=") and f"{root}/{d}" not in named:
+                shutil.rmtree(f"{root}/{d}")
 
 
 def _encode_partition(segment_size: int):
@@ -267,11 +359,13 @@ def build_segments(
     prepareCommit/commit two-phase contract: data files first, manifest
     row only after — ``index/IndexWriter.java:3367``)."""
     spark = ix.postings.sparkSession
-    done: dict[str, dict] = {}
+    prev: dict = {}
     if resume and os.path.exists(f"{base}/manifest.json"):
-        done = {str(s["segment_id"]): s for s in SegmentIndex.open(base).manifest()["segments"]}
+        prev = read_manifest(base)
+        clear_orphans(base, prev)
+    done = [int(s["segment_id"]) for s in prev.get("segments", [])]
 
-    enc = encode_frame(ix, segment_size, skip_segment_ids=[int(k) for k in done])
+    enc = encode_frame(ix, segment_size, skip_segment_ids=done)
     # No repartition before the write: the groupBy already placed each
     # segment wholly inside one task, and _encode_partition emits its rows
     # term-sorted (groupby(sort=True)), so partitionBy still yields one
@@ -287,7 +381,7 @@ def build_segments(
         "segment_id", (F.col("doc_id") / segment_size).cast("long")
     )
     if done:
-        docs = docs.filter(~F.col("segment_id").isin([int(k) for k in done]))
+        docs = docs.filter(~F.col("segment_id").isin(done))
     (
         docs.select("segment_id", "doc_id", "length", "norm")
         .repartition(F.col("segment_id"))
@@ -300,7 +394,12 @@ def build_segments(
     # post-write bookkeeping: three SMALL independent jobs (dictionary
     # write, lineage hash, doc ranges) — run concurrently under the FAIR
     # scheduler; each is metadata-sized, so wall-clock ≈ the slowest one
-    seg_df = spark.read.parquet(f"{base}/segments")
+    def _new(table: str) -> DataFrame:
+        df = spark.read.parquet(f"{base}/{table}")
+        return df.filter(~F.col("segment_id").isin(done)) if done else df
+
+    # a resumed build must not overwrite the committed dictionary
+    ts_name = fresh_name(prev, "term_stats") if prev else "term_stats"
 
     def _write_term_stats():
         # global dictionary: per-segment dfs/ttfs sum to the collection
@@ -311,14 +410,15 @@ def build_segments(
             ix.term_stats.repartitionByRange(4, "term")
             .sortWithinPartitions("term")
             .write.mode("overwrite")
-            .parquet(f"{base}/term_stats")
+            .parquet(f"{base}/{ts_name}")
         )
 
     def _lineage():
         # lineage + content hash per segment from the WRITTEN data
         # (resume/idempotency key)
         return (
-            seg_df.groupBy("segment_id")
+            _new("segments")
+            .groupBy("segment_id")
             .agg(
                 F.count("*").alias("n_terms"),
                 F.sum("df").alias("n_postings"),
@@ -338,7 +438,7 @@ def build_segments(
     def _doc_counts():
         return {
             int(r["segment_id"]): (int(r["n"]), int(r["mn"]), int(r["mx"]))
-            for r in spark.read.parquet(f"{base}/seg_docs")
+            for r in _new("seg_docs")
             .groupBy("segment_id")
             .agg(
                 F.count("*").alias("n"),
@@ -371,17 +471,18 @@ def build_segments(
         for r in lineage
     ]
     manifest = {
+        **prev,
         "doc_count": ix.doc_count,
         "sum_ttf": ix.sum_ttf,
         "segment_size": segment_size,
-        "segments": sorted(segments_meta, key=lambda s: s["segment_id"]),
+        "segments": sorted(
+            prev.get("segments", []) + segments_meta,
+            key=lambda s: s["segment_id"],
+        ),
     }
-    manifest["manifest_sha256"] = hashlib.sha256(
-        json.dumps(manifest["segments"], sort_keys=True).encode()
-    ).hexdigest()
-    os.makedirs(base, exist_ok=True)
-    with open(f"{base}/manifest.json", "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
+    if prev:
+        manifest["term_stats"] = ts_name
+    commit(base, manifest)
 
     return SegmentIndex(
         base=base,

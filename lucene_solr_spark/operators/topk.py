@@ -43,7 +43,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from lucene_solr_spark.codecs.postings_codec import EncodedPostings, decode_blocks
-from lucene_solr_spark.operators.segments import SegmentIndex
+from lucene_solr_spark.operators.segments import SegmentIndex, table_path
 from lucene_solr_spark.oracle import bm25
 from lucene_solr_spark.plans import ir
 from lucene_solr_spark.plans.rewriter import rewrite
@@ -1701,7 +1701,6 @@ class SegmentSearcher:
         self,
         queries: dict[str, ir.Query],
         k: int | None = 10,
-        direct: bool = True,
         after: tuple[float, int] | None = None,
         segment_ids: list[int] | None = None,
     ) -> DataFrame:
@@ -1709,11 +1708,11 @@ class SegmentSearcher:
         segment (broadcast plans), then a driver-side window merge — the
         per-query-job latency answer at benchmark scale (SURVEY.md §7.1.6).
 
-        ``direct=True`` (default) runs MAP-ONLY: one task per segment
-        pyarrow-reads its own segment files (term predicate pushed to
-        parquet row groups, which are term-sorted) — no JVM shuffle at all;
-        the only exchange is the tiny per-segment top-k. ``direct=False``
-        keeps the cogroup path (works on any DataFrame-readable storage)."""
+        The job is MAP-ONLY: each task pyarrow-reads its own segments'
+        files (term predicate pushed to parquet row groups, which are
+        term-sorted) — no JVM shuffle at all; the only exchange is the tiny
+        per-task top-k. The segments and the tombstone table are those the
+        manifest names when this is called."""
         compiled: dict[str, dict] = {}
         all_terms: set[str] = set()
         all_ranges: list[tuple[str | None, str | None]] = []
@@ -1868,165 +1867,91 @@ class SegmentSearcher:
                     out.append((qids, docs, scores))
             return out
 
-        def eval_segment(
-            post_pdf: pd.DataFrame,
-            docs_pdf: pd.DataFrame,
-            tombs: np.ndarray | None = None,
-        ):
-            """DataFrame wrapper over eval_plans (cogroup fallback path)."""
+        base = self.index.base
+        manifest = self.index.manifest()
+        tomb_path = table_path(base, manifest, "tombstones")
+        seg_ids = [s["segment_id"] for s in manifest["segments"]]
+        if segment_ids is not None:
+            # caller-restricted scan (sorted-index early termination
+            # reads a doc-order PREFIX of segments)
+            allowed = {int(s) for s in segment_ids}
+            seg_ids = [s for s in seg_ids if int(s) in allowed]
+
+        def direct_kernel(iterator):
+            import pyarrow.parquet as pq
+
+            # evaluate every segment in this task, then merge top-k
+            # ACROSS the task's segments per query before emitting —
+            # a two-level TopDocs.merge that cuts the final exchange
+            # by the segments-per-task factor
+            acc_d: dict[str, list[np.ndarray]] = {}
+            acc_s: dict[str, list[np.ndarray]] = {}
+            for pdf in iterator:
+                for sid in pdf["segment_id"].tolist():
+                    post_tbl = pq.read_table(
+                        f"{base}/segments/segment_id={sid}",
+                        filters=pq_filters,
+                    )
+                    docs_tbl = pq.read_table(
+                        f"{base}/seg_docs/segment_id={sid}",
+                        columns=["doc_id", "norm"],
+                    )
+                    tombs = None
+                    if tomb_path is not None and docs_tbl.num_rows:
+                        # per-segment range read: each task touches
+                        # only its own doc-range's tombstone row groups
+                        import pyarrow.compute as _pc
+
+                        lo = _pc.min(docs_tbl["doc_id"]).as_py()
+                        hi = _pc.max(docs_tbl["doc_id"]).as_py()
+                        tombs = np.sort(
+                            pq.read_table(
+                                tomb_path,
+                                columns=["doc_id"],
+                                filters=[
+                                    ("doc_id", ">=", lo),
+                                    ("doc_id", "<=", hi),
+                                ],
+                            )["doc_id"]
+                            .to_numpy(zero_copy_only=False)
+                            .astype(np.int64)
+                        )
+                    for qids, docs, scores in eval_plans(
+                        post_tbl.to_pandas(), docs_tbl.to_pandas(), tombs
+                    ):
+                        for qid in qids:
+                            acc_d.setdefault(qid, []).append(docs)
+                            acc_s.setdefault(qid, []).append(scores)
             out_q: list[str] = []
             out_d: list[np.ndarray] = []
             out_s: list[np.ndarray] = []
-            for qids, docs, scores in eval_plans(post_pdf, docs_pdf, tombs):
-                for qid in qids:
-                    out_q.append(qid)
-                    out_d.append(docs)
-                    out_s.append(scores)
-            if not out_q:
-                return pd.DataFrame(
-                    {"query_id": [], "doc_id": [], "score": []}
-                ).astype({"doc_id": "int64"})
-            return pd.DataFrame(
+            for qid, dl in acc_d.items():
+                docs = np.concatenate(dl)
+                scores = np.concatenate(acc_s[qid])
+                if kk is not None and len(docs) > kk:
+                    order = np.lexsort((docs, -scores.astype(np.float64)))[:kk]
+                    docs, scores = docs[order], scores[order]
+                out_q.append(qid)
+                out_d.append(docs)
+                out_s.append(scores)
+            yield pd.DataFrame(
                 {
-                    "query_id": np.repeat(out_q, [len(d) for d in out_d]),
-                    "doc_id": np.concatenate(out_d),
-                    "score": np.concatenate(out_s),
+                    "query_id": np.repeat(out_q, [len(d) for d in out_d])
+                    if out_q
+                    else [],
+                    "doc_id": np.concatenate(out_d) if out_d else [],
+                    "score": np.concatenate(out_s) if out_s else [],
                 }
             )
 
-        import os as _os
-
-        tomb_dir = f"{self.index.base}/tombstones"
-        has_tombs = _os.path.isdir(tomb_dir)
-
-        if direct:
-            base = self.index.base
-            seg_ids = [
-                s["segment_id"] for s in self.index.manifest()["segments"]
-            ]
-            if segment_ids is not None:
-                # caller-restricted scan (sorted-index early termination
-                # reads a doc-order PREFIX of segments)
-                allowed = {int(s) for s in segment_ids}
-                seg_ids = [s for s in seg_ids if int(s) in allowed]
-
-            def direct_kernel(iterator):
-                import pyarrow.parquet as pq
-
-                # evaluate every segment in this task, then merge top-k
-                # ACROSS the task's segments per query before emitting —
-                # a two-level TopDocs.merge that cuts the final exchange
-                # by the segments-per-task factor
-                acc_d: dict[str, list[np.ndarray]] = {}
-                acc_s: dict[str, list[np.ndarray]] = {}
-                for pdf in iterator:
-                    for sid in pdf["segment_id"].tolist():
-                        post_tbl = pq.read_table(
-                            f"{base}/segments/segment_id={sid}",
-                            filters=pq_filters,
-                        )
-                        docs_tbl = pq.read_table(
-                            f"{base}/seg_docs/segment_id={sid}",
-                            columns=["doc_id", "norm"],
-                        )
-                        tombs = None
-                        if has_tombs and docs_tbl.num_rows:
-                            # per-segment range read: each task touches
-                            # only its own doc-range's tombstone row groups
-                            import pyarrow.compute as _pc
-
-                            lo = _pc.min(docs_tbl["doc_id"]).as_py()
-                            hi = _pc.max(docs_tbl["doc_id"]).as_py()
-                            tombs = np.sort(
-                                pq.read_table(
-                                    tomb_dir,
-                                    columns=["doc_id"],
-                                    filters=[
-                                        ("doc_id", ">=", lo),
-                                        ("doc_id", "<=", hi),
-                                    ],
-                                )["doc_id"]
-                                .to_numpy(zero_copy_only=False)
-                                .astype(np.int64)
-                            )
-                        for qids, docs, scores in eval_plans(
-                            post_tbl.to_pandas(), docs_tbl.to_pandas(), tombs
-                        ):
-                            for qid in qids:
-                                acc_d.setdefault(qid, []).append(docs)
-                                acc_s.setdefault(qid, []).append(scores)
-                out_q: list[str] = []
-                out_d: list[np.ndarray] = []
-                out_s: list[np.ndarray] = []
-                for qid, dl in acc_d.items():
-                    docs = np.concatenate(dl)
-                    scores = np.concatenate(acc_s[qid])
-                    if kk is not None and len(docs) > kk:
-                        order = np.lexsort((docs, -scores.astype(np.float64)))[:kk]
-                        docs, scores = docs[order], scores[order]
-                    out_q.append(qid)
-                    out_d.append(docs)
-                    out_s.append(scores)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(out_q, [len(d) for d in out_d])
-                        if out_q
-                        else [],
-                        "doc_id": np.concatenate(out_d) if out_d else [],
-                        "score": np.concatenate(out_s) if out_s else [],
-                    }
-                )
-
-            # 2 segments per task: halves per-task fixed cost and the
-            # final exchange, independent of cluster size (fair at any
-            # parallelism; still >= cores tasks for realistic indexes)
-            n_parts = max(1, (len(seg_ids) + 1) // 2)
-            ids_df = self.spark.createDataFrame(
-                [(int(s),) for s in seg_ids], "segment_id long"
-            ).repartition(n_parts, "segment_id")
-            res = ids_df.mapInPandas(direct_kernel, schema=schema)
-        else:
-            seg_rows = self.index.segments(self.spark)
-            if segment_ids is not None:
-                ids = [int(s) for s in segment_ids]
-                seg_rows = seg_rows.filter(F.col("segment_id").isin(ids))
-            if not full_scan:
-                conds = []
-                if needed_terms:
-                    conds.append(F.col("term").isin(needed_terms))
-                for lo, hi in term_ranges:
-                    c = F.lit(True)
-                    if lo is not None:
-                        c = c & (F.col("term") >= lo)
-                    if hi is not None:
-                        c = c & (F.col("term") <= hi)
-                    conds.append(c)
-                if conds:
-                    cond = conds[0]
-                    for c in conds[1:]:
-                        cond = cond | c
-                    seg_rows = seg_rows.filter(cond)
-            seg_docs = self.index.seg_docs(self.spark)
-            if segment_ids is not None:
-                seg_docs = seg_docs.filter(
-                    F.col("segment_id").isin([int(s) for s in segment_ids])
-                )
-            all_tombs = None
-            if has_tombs:
-                # cogroup fallback path: ship the (small) tombstone set
-                # with the task; the direct path range-reads instead
-                from lucene_solr_spark.operators.deletes import read_tombstones
-
-                all_tombs = read_tombstones(self.index)
-
-            def kernel(key: tuple, post_pdf: pd.DataFrame, docs_pdf: pd.DataFrame):
-                return eval_segment(post_pdf, docs_pdf, all_tombs)
-
-            res = (
-                seg_rows.groupBy("segment_id")
-                .cogroup(seg_docs.groupBy("segment_id"))
-                .applyInPandas(kernel, schema=schema)
-            )
+        # 2 segments per task: halves per-task fixed cost and the
+        # final exchange, independent of cluster size (fair at any
+        # parallelism; still >= cores tasks for realistic indexes)
+        n_parts = max(1, (len(seg_ids) + 1) // 2)
+        ids_df = self.spark.createDataFrame(
+            [(int(s),) for s in seg_ids], "segment_id long"
+        ).repartition(n_parts, "segment_id")
+        res = ids_df.mapInPandas(direct_kernel, schema=schema)
         if k is None:
             return res
         w = Window.partitionBy("query_id").orderBy(

@@ -6,13 +6,14 @@ searchable on reader reopen (``index/DirectoryReader.java:72``
 ``DirectoryReader.open(IndexWriter)``, ``search/SearcherManager.java``).
 
 Spark re-expression: ``readStream → foreachBatch(append_batch)``. Each
-micro-batch becomes ONE new immutable segment appended to the
-operators.segments layout + an atomic manifest commit — exactly a DWPT
-flush (``index/DocumentsWriterPerThread.java``) at micro-batch cadence.
-"Reopen" = ``SegmentIndex.open(base)`` reading the latest manifest — a
-SearcherManager.maybeRefresh. Late data is a non-issue: docIDs are
-assigned append-only per batch (batch base = current doc_count), matching
-Lucene's arrival-order docIDs for NRT writers.
+micro-batch becomes ONE new immutable segment, published together with
+its merged dictionary by one ``operators.segments.commit`` — exactly a
+DWPT flush (``index/DocumentsWriterPerThread.java``) at micro-batch
+cadence. "Reopen" = ``SegmentIndex.open(base)`` reading the latest
+manifest — a SearcherManager.maybeRefresh. Late data is a non-issue:
+docIDs are assigned append-only per batch (batch base = the manifest's
+``next_doc_id`` watermark), matching Lucene's arrival-order docIDs for
+NRT writers.
 
 After each append the tiered merge policy (operators.merge_policy) can
 compact the accumulating small segments — the ConcurrentMergeScheduler
@@ -25,12 +26,9 @@ index always score with the stats of that snapshot.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
-import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lucene_solr_spark.operators.index_build import assign_doc_ids, build_index
@@ -38,19 +36,13 @@ from lucene_solr_spark.operators.segments import (
     SEGMENT_SCHEMA,
     SegmentIndex,
     _encode_partition,
+    commit,
+    fresh_name,
+    read_manifest,
+    table_path,
 )
 
 __all__ = ["append_batch", "index_stream"]
-
-
-def _init_manifest(base: str) -> dict:
-    os.makedirs(base, exist_ok=True)
-    return {
-        "doc_count": 0,
-        "sum_ttf": 0,
-        "segment_size": 0,  # streaming segments are batch-sized, not ranged
-        "segments": [],
-    }
 
 
 def append_batch(
@@ -66,9 +58,10 @@ def append_batch(
     """Index one (micro-)batch as a new segment; returns its id.
 
     Callable directly on a static DataFrame (unit tests / backfill) or
-    from ``foreachBatch``. Commit order: segment files → seg_docs →
-    term_stats swap → manifest last (crash-safe: an unreferenced segment
-    dir is invisible until the manifest names it).
+    from ``foreachBatch``. The segment, its seg_docs and the merged
+    dictionary are written under fresh names, then one ``commit``
+    publishes them (a crash before it leaves unreferenced files that no
+    reader resolves).
 
     ``batch_id`` makes the append idempotent per micro-batch: Structured
     Streaming's foreachBatch is at-least-once, so a replayed batch would
@@ -79,9 +72,10 @@ def append_batch(
         return None
     spark = batch_df.sparkSession
     manifest = (
-        SegmentIndex.open(base).manifest()
+        read_manifest(base)
         if os.path.exists(f"{base}/manifest.json")
-        else _init_manifest(base)
+        # streaming segments are batch-sized, not ranged
+        else {"doc_count": 0, "sum_ttf": 0, "segment_size": 0, "segments": []}
     )
     if (
         batch_id is not None
@@ -125,29 +119,18 @@ def append_batch(
         "doc_id"
     ).write.mode("overwrite").parquet(docs_path)
 
-    # dictionary merge: old ∪ new, summed — atomic dir swap
-    new_stats = spark.read.parquet(seg_path).select("term", "df", "ttf")
-    old_path = f"{base}/term_stats"
-    if os.path.exists(old_path) and manifest["segments"]:
-        merged = (
-            spark.read.parquet(old_path)
-            .unionByName(new_stats)
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
-        )
-    else:
-        merged = new_stats.groupBy("term").agg(
-            F.sum("df").alias("df"), F.sum("ttf").alias("ttf")
-        )
-    tmp_stats = f"{base}/term_stats.next"
-    merged.repartitionByRange(4, "term").sortWithinPartitions("term").write.mode(
+    # dictionary merge: old ∪ new, summed, into a fresh table
+    stats = spark.read.parquet(seg_path).select("term", "df", "ttf")
+    if manifest["segments"]:
+        stats = spark.read.parquet(
+            table_path(base, manifest, "term_stats")
+        ).unionByName(stats)
+    ts_name = fresh_name(manifest, "term_stats")
+    stats.groupBy("term").agg(
+        F.sum("df").alias("df"), F.sum("ttf").alias("ttf")
+    ).repartitionByRange(4, "term").sortWithinPartitions("term").write.mode(
         "overwrite"
-    ).parquet(tmp_stats)
-    if os.path.exists(old_path):
-        shutil.rmtree(f"{base}/term_stats.old", ignore_errors=True)
-        os.replace(old_path, f"{base}/term_stats.old")
-    os.replace(tmp_stats, old_path)
-    shutil.rmtree(f"{base}/term_stats.old", ignore_errors=True)
+    ).parquet(f"{base}/{ts_name}")
 
     seg_stats = (
         spark.read.parquet(seg_path)
@@ -169,15 +152,12 @@ def append_batch(
     manifest["doc_count"] = manifest["doc_count"] + ix.doc_count
     manifest["next_doc_id"] = base_doc + ix.doc_count
     manifest["sum_ttf"] = manifest["sum_ttf"] + ix.sum_ttf
+    manifest["term_stats"] = ts_name
     if batch_id is not None:
         manifest["last_batch_id"] = int(batch_id)
     if not manifest.get("segment_size"):
         manifest["segment_size"] = max(ix.doc_count, 1)
-    manifest["manifest_sha256"] = hashlib.sha256(
-        json.dumps(manifest["segments"], sort_keys=True).encode()
-    ).hexdigest()
-    with open(f"{base}/manifest.json", "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
+    commit(base, manifest)
     return int(seg_id)
 
 

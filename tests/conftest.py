@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 
@@ -7,6 +9,10 @@ import pytest
 def spark():
     from lucene_solr_spark.session import get_spark
 
+    # The session's default heap (48g) lets the one test JVM grow past a
+    # small host's memory until the kernel kills it mid-suite; every
+    # fixture here is tiny.
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "4g")
     s = get_spark("tests", cores=8, shuffle_partitions=8)
     yield s
     s.stop()

@@ -101,3 +101,35 @@ def test_doc_ids_rebased_past_destination(spark, merged):
     assert docs.filter(f"doc_id >= {offset}").count() == N_B
     # no ID collisions across the graft boundary
     assert docs.select("doc_id").distinct().count() == N_A + N_B
+
+
+def test_append_after_graft_gets_fresh_doc_ids(spark, merged, tmp_path):
+    """The graft moves the doc-id watermark past the grafted docs, so a
+    later NRT append never reuses a grafted doc id."""
+    import shutil
+
+    from lucene_solr_spark.oracle.engine import OracleIndex
+    from lucene_solr_spark.streaming.nrt import append_batch
+
+    out, offset = merged
+    base = str(tmp_path / "grafted")
+    shutil.copytree(out.base, base)
+    new_rows = make_corpus_rows(8, seed=99)
+    schema = corpus_to_spark(spark, 1, seed=99).schema
+    append_batch(spark.createDataFrame(new_rows, schema), base)
+
+    ix = SegmentIndex.open(base)
+    docs = ix.seg_docs(spark)
+    assert docs.count() == N_A + N_B + 8
+    assert docs.select("doc_id").distinct().count() == N_A + N_B + 8
+
+    first = offset + N_B  # one past the last grafted doc
+    pairs = [(i, r["content"]) for i, r in enumerate(make_corpus_rows(N_A, seed=42))]
+    pairs += [(offset + i, r["content"]) for i, r in enumerate(make_corpus_rows(N_B, seed=7))]
+    pairs += [(first + i, r["content"]) for i, r in enumerate(new_rows)]
+    oracle = OracleIndex(pairs)
+    searcher = SegmentSearcher(spark, ix, mode="float32")
+    for q in QUERIES[:3]:
+        got = [(r["doc_id"], bits(r["score"])) for r in searcher.topk(q, k=15).collect()]
+        exp = [(sd.doc_id, bits(sd.score)) for sd in oracle.search(q, k=15)]
+        assert got == exp

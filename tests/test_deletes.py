@@ -216,3 +216,25 @@ def test_nrt_append_after_purge_never_reuses_ids(spark, base):
     assert m2["next_doc_id"] == 110
     new_seg = max(m2["segments"], key=lambda s_: s_["segment_id"])
     assert new_seg["min_doc"] >= 100  # no id reuse with docs 50-99 purged
+
+
+def test_tombstones_of_an_older_layout_still_mask(spark, base):
+    """An index written before the manifest named its tables keeps its
+    deletes in a bare ``tombstones/`` dir counted by ``n_deleted``; they
+    still mask hits, and the next delete carries them over."""
+    import json
+
+    six = SegmentIndex.open(base)
+    before = _ranking(SegmentSearcher(spark, six, mode="float32"), T("def"))
+    dead = before[0][0]
+    spark.createDataFrame([(dead,)], "doc_id long").write.parquet(f"{base}/tombstones")
+    m = six.manifest()
+    m["n_deleted"] = 1
+    with open(f"{base}/manifest.json", "w") as f:
+        json.dump(m, f)
+
+    s = SegmentSearcher(spark, SegmentIndex.open(base), mode="float32")
+    assert _ranking(s, T("def")) == before[1:]
+    assert delete_by_ids(spark, SegmentIndex.open(base), [before[1][0]]) == 2
+    assert set(read_tombstones(SegmentIndex.open(base))) == {dead, before[1][0]}
+    assert not os.path.isdir(f"{base}/tombstones")  # superseded, then deleted

@@ -76,7 +76,7 @@ def test_desc_sort_rejects_strings(spark):
 
 def test_segment_restricted_matches(sorted_setup):
     """segment_ids restriction prunes the scan for ANY query shape —
-    including MatchAll (the cogroup path must filter seg_docs too)."""
+    including MatchAll (seg_docs must be filtered too)."""
     docs, ix, searcher = sorted_setup
     all_ids = {r["doc_id"] for r in searcher.matches(ir.MatchAllDocsQuery()).collect()}
     assert len(all_ids) == 160
@@ -87,8 +87,8 @@ def test_segment_restricted_matches(sorted_setup):
         ).collect()
     }
     assert first == set(range(16))
-    # cogroup fallback honors the restriction as well
+    # the batch reader honors the restriction as well
     cg = searcher.topk_batch(
-        {"q": ir.MatchAllDocsQuery()}, k=None, direct=False, segment_ids=[0]
+        {"q": ir.MatchAllDocsQuery()}, k=None, segment_ids=[0]
     )
     assert {r["doc_id"] for r in cg.collect()} == set(range(16))
