@@ -96,7 +96,7 @@ def _build_luts():
     single_char = (ideo & word) | (emoji & ~word)
     return (
         run_char, single_char, letter, digit, mid_l, mid_n, lower,
-        bad_lower, utf8len, ext,
+        bad_lower, utf8len, ext, word,
     )
 
 
@@ -111,6 +111,7 @@ _LUT_NAMES = (
     "bad_lower",
     "utf8len",
     "ext",
+    "word",
 )
 
 
@@ -122,7 +123,7 @@ def _load_or_build_luts():
     import tempfile
 
     path = os.path.join(
-        tempfile.gettempdir(), f"lss_tokenizer_luts_v3_{FAST_LIMIT:x}.npz"
+        tempfile.gettempdir(), f"lss_tokenizer_luts_v4_{FAST_LIMIT:x}.npz"
     )
     if os.path.exists(path):
         try:
@@ -152,6 +153,7 @@ def _load_or_build_luts():
     _BAD_LOWER,
     _UTF8LEN,
     _EXT,
+    _WORD,
 ) = _load_or_build_luts()
 
 
@@ -285,23 +287,39 @@ def batch_tokenize(
         join_l = _MID_L[cpi] & _shift_prev(is_letter) & _shift_next(is_letter)
         join_n = _MID_N[cpi] & _shift_prev(is_digit) & _shift_next(is_digit)
         tok = is_run | join_l | join_n
+        not_single = tok
         ext = _EXT[cpi] & in_range
         if ext.any():
+            idx = np.arange(len(cp), dtype=np.int64)
+            # a mark counts as the letter left of a MidLetter join only
+            # inside one of the oracle's regex candidates: marks, and
+            # mid-chars followed by a \w char or a mark, continue the
+            # candidate of the nearest preceding \w char, so a mark at
+            # the start, after a space or after an emoji joins nothing
+            word = _WORD[cpi] & in_range
+            trans = ext | ((_MID_L[cpi] | _MID_N[cpi]) & _shift_next(word | ext))
+            anchor = np.maximum.accumulate(np.where(trans, -1, idx))
+            ext_in_run = ext & (anchor >= 0)
+            ext_in_run[ext_in_run] = word[anchor[ext_in_run]]
+            left = (is_letter & ~ext) | ext_in_run
+            join_l = _MID_L[cpi] & _shift_prev(left) & _shift_next(is_letter)
+            tok = is_run | join_l | join_n
             # WB4: Extend marks continue the token of the char they
             # follow and never start one — a mark run attaches iff its
             # nearest preceding non-Extend char is a token char
-            idx = np.arange(len(cp), dtype=np.int64)
             prev_nonext = np.maximum.accumulate(np.where(~ext, idx, -1))
             join_ext = ext & (prev_nonext >= 0)
             join_ext[join_ext] = tok[prev_nonext[join_ext]]
             tok = tok | join_ext
+            not_single = tok | ext_in_run
 
         d = np.diff(np.r_[np.int8(0), tok.view(np.int8), np.int8(0)])
         starts = np.nonzero(d == 1)[0]
         tlen = np.nonzero(d == -1)[0] - starts
-        # an emoji-class char that ALSO joined a word run as an Extend
-        # mark (VS16) is not a standalone single there
-        singles = np.nonzero(_SINGLE[cpi] & in_range & ~tok)[0]
+        # an emoji-class char that is ALSO an Extend mark (VS16) is not a
+        # standalone single inside a word run, whether it joined a token
+        # there or was trimmed off one
+        singles = np.nonzero(_SINGLE[cpi] & in_range & ~not_single)[0]
         if singles.size:
             starts = np.concatenate([starts, singles])
             tlen = np.concatenate([tlen, np.ones(singles.size, np.int64)])

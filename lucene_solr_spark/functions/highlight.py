@@ -40,6 +40,7 @@ import re
 from dataclasses import dataclass
 
 from lucene_solr_spark.oracle.tokenizer import (
+    _EXTEND_RE,
     _MID_SET,
     _IDEO_RE,
     _TOKEN_RE,
@@ -165,8 +166,14 @@ def analyze_with_offsets(
             cursor = 0
             for part in _split_candidate(cand):
                 i = cand.index(part, cursor)
-                raw.append((part, base + i, base + i + len(part)))
                 cursor = i + len(part)
+                # as in oracle tokenize: marks never START a token
+                lead = _EXTEND_RE.match(part)
+                if lead:
+                    part = part[lead.end():]
+                    i += lead.end()
+                if part:
+                    raw.append((part, base + i, base + i + len(part)))
     out: list[tuple[str, int, int, int]] = []
     for pos, (term, s, e) in enumerate(raw):
         if len(term) > max_token_length:

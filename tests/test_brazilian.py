@@ -11,10 +11,13 @@ from lucene_solr_spark.oracle.brazilian import (
     brazilian_chain_stem,
     brazilian_stem,
 )
+from reference_files import RESOURCES_ROOT, TEST_ROOT, needs_reference
 
-_REF = "/root/reference/lucene/analysis/common/src/test/org/apache/lucene/analysis/br"
+_REF = f"{TEST_ROOT}/br"
+_STOP = f"{RESOURCES_ROOT}/br/stopwords.txt"
 
 
+@needs_reference(f"{_REF}/TestBrazilianAnalyzer.java")
 def test_brazilian_goldens():
     txt = open(f"{_REF}/TestBrazilianAnalyzer.java", encoding="utf-8").read()
     pairs = re.findall(
@@ -35,13 +38,10 @@ def test_unindexable_keeps_original():
     assert brazilian_chain_stem("x" * 30) == "x" * 30
 
 
+@needs_reference(_STOP)
 def test_stop_set_matches_reference():
-    res = (
-        "/root/reference/lucene/analysis/common/src/resources/org/apache/"
-        "lucene/analysis/br/stopwords.txt"
-    )
     want = set()
-    for line in open(res, encoding="utf-8"):
+    for line in open(_STOP, encoding="utf-8"):
         line = line.split("#")[0].strip()
         if line:
             want.add(line)

@@ -4,7 +4,7 @@ for the index-build hot path (functions.fast_tokenizer)."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from lucene_solr_spark.functions.fast_tokenizer import batch_tokenize
@@ -39,6 +39,10 @@ EDGE_CASES = [
     "ΑΒΓ αβγ ЖЗИ ½⅓ ² x²y",
     "\U0001fbff\U0001fc00 edge",
     "vs16 a️b",
+    # Extend marks inside a word run that joined no token: the mark
+    # still lets a ':' join, and a VS16 there is no standalone emoji
+    "一\u1cd0:A 1:\u1cd0:A 1,\u1cd0:A",
+    "一\ufe0f 2,\ufe0f.",
 ]
 
 
@@ -81,6 +85,9 @@ def test_edge_case_parity(lowercase, stop):
         max_size=8,
     )
 )
+# a combining mark with no base before a MidLetter (UAX#29 WB4)
+@example(["\u1cd0:A"])
+@example(["\u08ca:A"])
 def test_property_parity_bmp(texts):
     assert _got(texts, True, frozenset()) == _expected(texts, True, frozenset())
 

@@ -11,10 +11,13 @@ from lucene_solr_spark.oracle.greek import (
     greek_lower,
     greek_stem,
 )
+from reference_files import RESOURCES_ROOT, TEST_ROOT, needs_reference
 
-_REF = "/root/reference/lucene/analysis/common/src/test/org/apache/lucene/analysis/el"
+_REF = f"{TEST_ROOT}/el"
+_STOP = f"{RESOURCES_ROOT}/el/stopwords.txt"
 
 
+@needs_reference(f"{_REF}/TestGreekStemmer.java")
 def test_greek_stemmer_goldens():
     txt = open(f"{_REF}/TestGreekStemmer.java", encoding="utf-8").read()
     pairs = re.findall(r'checkOneTerm\(\s*a\s*,\s*"([^"]*)"\s*,\s*"([^"]*)"\)', txt)
@@ -50,13 +53,10 @@ def test_greek_lower_table():
     assert greek_lower("΢") == "ς"
 
 
+@needs_reference(_STOP)
 def test_greek_stop_set_matches_reference():
-    res = (
-        "/root/reference/lucene/analysis/common/src/resources/org/apache/"
-        "lucene/analysis/el/stopwords.txt"
-    )
     want = set()
-    for line in open(res, encoding="utf-8"):
+    for line in open(_STOP, encoding="utf-8"):
         line = line.split("#")[0].strip()
         if line:
             want.add(line)

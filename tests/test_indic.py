@@ -15,8 +15,9 @@ from lucene_solr_spark.oracle.indic import (
     hindi_stem,
     indic_normalize,
 )
+from reference_files import RESOURCES_ROOT, TEST_ROOT, needs_reference
 
-_REF = "/root/reference/lucene/analysis/common/src/test/org/apache/lucene/analysis"
+_REF = TEST_ROOT
 _CHECK = re.compile(r'check\(\s*"([^"]*)"\s*,\s*"([^"]*)"\s*\)')
 
 
@@ -29,6 +30,7 @@ def _pairs(path):
     return [(_unesc(a), _unesc(b)) for a, b in _CHECK.findall(txt)]
 
 
+@needs_reference(f"{_REF}/in/TestIndicNormalizer.java")
 def test_indic_normalizer_goldens():
     pairs = _pairs(f"{_REF}/in/TestIndicNormalizer.java")
     assert len(pairs) >= 7
@@ -36,6 +38,7 @@ def test_indic_normalizer_goldens():
         assert indic_normalize(w) == e, (w.encode("unicode_escape"), e)
 
 
+@needs_reference(f"{_REF}/hi/TestHindiNormalizer.java")
 def test_hindi_normalizer_goldens():
     pairs = _pairs(f"{_REF}/hi/TestHindiNormalizer.java")
     assert len(pairs) >= 15
@@ -43,6 +46,7 @@ def test_hindi_normalizer_goldens():
         assert hindi_normalize(w) == e, (w.encode("unicode_escape"), e)
 
 
+@needs_reference(f"{_REF}/hi/TestHindiStemmer.java")
 def test_hindi_stemmer_goldens():
     pairs = _pairs(f"{_REF}/hi/TestHindiStemmer.java")
     assert len(pairs) >= 20
@@ -50,11 +54,9 @@ def test_hindi_stemmer_goldens():
         assert hindi_stem(w) == e, (w, e)
 
 
+@needs_reference(f"{RESOURCES_ROOT}/hi/stopwords.txt")
 def test_hindi_stop_set_matches_reference():
-    res = (
-        "/root/reference/lucene/analysis/common/src/resources/org/apache/"
-        "lucene/analysis/hi/stopwords.txt"
-    )
+    res = f"{RESOURCES_ROOT}/hi/stopwords.txt"
     want = set()
     for line in open(res, encoding="utf-8"):
         line = line.split("#")[0].strip()
@@ -147,6 +149,7 @@ from lucene_solr_spark.oracle.indic import (  # noqa: E402
 )
 
 
+@needs_reference(f"{_REF}/bn/TestBengaliNormalizer.java")
 def test_bengali_normalizer_goldens():
     pairs = _pairs(f"{_REF}/bn/TestBengaliNormalizer.java")
     assert len(pairs) >= 10
@@ -154,6 +157,7 @@ def test_bengali_normalizer_goldens():
         assert bengali_normalize(w) == e, (w.encode("unicode_escape"), e)
 
 
+@needs_reference(f"{_REF}/bn/TestBengaliStemmer.java")
 def test_bengali_stemmer_goldens():
     # the reference check() runs ONLY BengaliStemFilter (no normalizer)
     pairs = _pairs(f"{_REF}/bn/TestBengaliStemmer.java")
@@ -163,11 +167,9 @@ def test_bengali_stemmer_goldens():
         assert got == e, (w, e, got)
 
 
+@needs_reference(f"{RESOURCES_ROOT}/bn/stopwords.txt")
 def test_bengali_stop_set_matches_reference():
-    res = (
-        "/root/reference/lucene/analysis/common/src/resources/org/apache/"
-        "lucene/analysis/bn/stopwords.txt"
-    )
+    res = f"{RESOURCES_ROOT}/bn/stopwords.txt"
     want = set()
     for line in open(res, encoding="utf-8"):
         line = line.split("#")[0].strip()

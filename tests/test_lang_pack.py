@@ -25,8 +25,9 @@ from lucene_solr_spark.oracle.lang_pack import (
 )
 from lucene_solr_spark.oracle.light_stemmers import analyzer_config, resolve
 from lucene_solr_spark.oracle.tokenizer import analyze
+from reference_files import RESOURCES_ROOT, TEST_ROOT, needs_reference
 
-_REF = "/root/reference/lucene/analysis/common/src/test/org/apache/lucene/analysis"
+_REF = TEST_ROOT
 
 _ASSERT_RE = re.compile(
     r'assertAnalyzesTo\(\s*\w+\s*,\s*"([^"]+)"\s*,'
@@ -57,6 +58,21 @@ def _chain(name: str):
     return run, stop, stem
 
 
+def _sql_twin_bad(exprs, fn, words):
+    """``(word, sql, python)`` for every word the layered DuckDB chain
+    ``exprs`` maps differently from the Python ``fn``."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE w AS SELECT unnest(?) AS term", [words])
+    body = "SELECT term FROM w"
+    for e in exprs:
+        body = f"SELECT {e} AS term FROM ({body})"
+    got = [r[0] for r in con.execute(body).fetchall()]
+    return [(w, g, fn(w)) for w, g in zip(words, got) if g != fn(w)]
+
+
+@needs_reference(f"{_REF}/cz/TestCzechStemmer.java")
 def test_czech_stemmer_goldens():
     """Every TestCzechStemmer assertAnalyzesTo pair (the analyzer
     lowercases before the stem filter; the stemmer tests use no
@@ -70,6 +86,7 @@ def test_czech_stemmer_goldens():
         assert got == expected[0], (word, got, expected)
 
 
+@needs_reference(f"{_REF}/bg/TestBulgarianStemmer.java")
 def test_bulgarian_stemmer_goldens():
     pairs = _analyzer_goldens("bg/TestBulgarianStemmer.java")
     assert len(pairs) >= 100
@@ -125,6 +142,7 @@ def test_bulgarian_analyzer_chain():
 
 _CZ_ALPHA = "abcdeěéichíkmnostuůvyáýžčš"
 _BG_ALPHA = "абвгдеийконстцъщяover"
+_CZ_BG_GOLDENS = ("cz/TestCzechStemmer.java", "bg/TestBulgarianStemmer.java")
 
 
 @pytest.mark.parametrize(
@@ -138,26 +156,35 @@ _BG_ALPHA = "абвгдеийконстцъщяover"
 def test_sql_twin_parity_fuzz(exprs, fn, alpha):
     """DuckDB SQL twin ≡ Python stemmer over 30k random words drawn
     from the suffix-relevant alphabet (lengths 1-12 hit every length
-    guard) plus all reference golden inputs."""
-    import duckdb
-
+    guard)."""
     rng = random.Random(42)
     words = [
         "".join(rng.choice(alpha) for _ in range(rng.randrange(1, 13)))
         for _ in range(30_000)
     ]
-    for rel in ("cz/TestCzechStemmer.java", "bg/TestBulgarianStemmer.java"):
-        words += [w.lower() for w, _e in _analyzer_goldens(rel)]
-    con = duckdb.connect()
-    con.execute("CREATE TABLE w AS SELECT unnest(?) AS term", [words])
-    body = "SELECT term FROM w"
-    for e in exprs:
-        body = f"SELECT {e} AS term FROM ({body})"
-    got = [r[0] for r in con.execute(body).fetchall()]
-    bad = [(w, g, fn(w)) for w, g in zip(words, got) if g != fn(w)]
+    bad = _sql_twin_bad(exprs, fn, words)
     assert not bad, bad[:10]
 
 
+@needs_reference(*(f"{_REF}/{rel}" for rel in _CZ_BG_GOLDENS))
+@pytest.mark.parametrize(
+    "exprs, fn",
+    [(CZECH_SQL, czech_stem), (BULGARIAN_SQL, bulgarian_stem)],
+    ids=["czech", "bulgarian"],
+)
+def test_sql_twin_parity_reference_goldens(exprs, fn):
+    """DuckDB SQL twin ≡ Python stemmer over every reference golden
+    input of BOTH stemmers."""
+    words = []
+    for rel in _CZ_BG_GOLDENS:
+        words += [w.lower() for w, _e in _analyzer_goldens(rel)]
+    bad = _sql_twin_bad(exprs, fn, words)
+    assert not bad, bad[:10]
+
+
+@needs_reference(
+    f"{RESOURCES_ROOT}/cz/stopwords.txt", f"{RESOURCES_ROOT}/bg/stopwords.txt"
+)
 def test_stop_set_counts():
     """cz/stopwords.txt has 171 distinct entries, bg/stopwords.txt 190
     (after '#' comment stripping) — re-derived from the reference files
@@ -170,9 +197,8 @@ def test_stop_set_counts():
                 out.add(line)
         return out
 
-    res = "/root/reference/lucene/analysis/common/src/resources/org/apache/lucene/analysis"
-    assert CZECH_STOP_WORDS == load(f"{res}/cz/stopwords.txt")
-    assert BULGARIAN_STOP_WORDS == load(f"{res}/bg/stopwords.txt")
+    assert CZECH_STOP_WORDS == load(f"{RESOURCES_ROOT}/cz/stopwords.txt")
+    assert BULGARIAN_STOP_WORDS == load(f"{RESOURCES_ROOT}/bg/stopwords.txt")
 
 
 def test_batch_kernel_matches_scalar():
@@ -226,6 +252,7 @@ def _check_pairs(rel: str) -> list[tuple[str, str]]:
     return _CHECK_RE.findall(txt)
 
 
+@needs_reference(f"{_REF}/ar/TestArabicNormalizationFilter.java")
 def test_arabic_normalizer_goldens():
     """Every TestArabicNormalizationFilter check() pair (hamza-seated
     alefs, dotless yeh, teh marbuta, tatweel, all eight harakat)."""
@@ -235,6 +262,7 @@ def test_arabic_normalizer_goldens():
         assert arabic_normalize(w) == e, (w, e)
 
 
+@needs_reference(f"{_REF}/ar/TestArabicStemFilter.java")
 def test_arabic_stemmer_goldens():
     """Every TestArabicStemFilter check() pair (the 7 prefixes, the 10
     suffixes, and the shouldnt-stem length guards)."""
@@ -244,6 +272,7 @@ def test_arabic_stemmer_goldens():
         assert arabic_stem(w) == e, (w, e)
 
 
+@needs_reference(f"{_REF}/fa/TestPersianNormalizationFilter.java")
 def test_persian_normalizer_goldens():
     pairs = _check_pairs("fa/TestPersianNormalizationFilter.java")
     assert len(pairs) >= 6
@@ -251,6 +280,7 @@ def test_persian_normalizer_goldens():
         assert persian_normalize(arabic_normalize(w)) == e, (w, e)
 
 
+@needs_reference(f"{_REF}/ar/TestArabicAnalyzer.java")
 def test_arabic_analyzer_chain():
     """TestArabicAnalyzer default-analyzer rows (testBasicFeatures +
     testEnglishInput) through the named 'arabic' chain (LowerCase+
@@ -285,6 +315,7 @@ def test_arabic_stem_exclusion_chain():
     assert [t.term for t in toks] == ["كبير", "the", "quick", "ساهد"]
 
 
+@needs_reference(f"{_REF}/fa/TestPersianAnalyzer.java")
 def test_persian_analyzer_chain():
     """TestPersianAnalyzer default-analyzer rows (verbs/nouns incl. the
     ZWNJ char-filter splits of می‌خورد; the pre-normalized stop set then
@@ -335,35 +366,42 @@ _AR_FUZZ_ALPHA = (
 )
 
 
+_AR_SQL = (ARABIC_NORMALIZE_SQL,) + ARABIC_STEM_SQL
+
+
+def _arabic_chain(w):
+    return arabic_stem(arabic_normalize(w))
+
+
 def test_arabic_sql_twin_parity_fuzz():
     """ARABIC_NORMALIZE_SQL + ARABIC_STEM_SQL ≡ the Python chain over
-    30k random Arabic-alphabet words + every reference golden input."""
-    import duckdb
-
+    30k random Arabic-alphabet words."""
     rng = random.Random(7)
     words = [
         "".join(rng.choice(_AR_FUZZ_ALPHA) for _ in range(rng.randrange(1, 11)))
         for _ in range(30_000)
     ]
-    words += [w for w, _e in _check_pairs("ar/TestArabicNormalizationFilter.java")]
-    words += [w for w, _e in _check_pairs("ar/TestArabicStemFilter.java")]
-    con = duckdb.connect()
-    con.execute("CREATE TABLE w AS SELECT unnest(?) AS term", [words])
-    body = "SELECT term FROM w"
-    for e in (ARABIC_NORMALIZE_SQL,) + ARABIC_STEM_SQL:
-        body = f"SELECT {e} AS term FROM ({body})"
-    got = [r[0] for r in con.execute(body).fetchall()]
-
-    def py(w):
-        return arabic_stem(arabic_normalize(w))
-
-    bad = [(w, g, py(w)) for w, g in zip(words, got) if g != py(w)]
+    bad = _sql_twin_bad(_AR_SQL, _arabic_chain, words)
     assert not bad, bad[:10]
 
 
-def test_arabic_persian_stop_sets_match_reference():
-    res = "/root/reference/lucene/analysis/common/src/resources/org/apache/lucene/analysis"
+@needs_reference(
+    f"{_REF}/ar/TestArabicNormalizationFilter.java",
+    f"{_REF}/ar/TestArabicStemFilter.java",
+)
+def test_arabic_sql_twin_parity_reference_goldens():
+    """The same SQL chain ≡ Python over every reference golden input
+    of the Arabic normalizer and stemmer tests."""
+    words = [w for w, _e in _check_pairs("ar/TestArabicNormalizationFilter.java")]
+    words += [w for w, _e in _check_pairs("ar/TestArabicStemFilter.java")]
+    bad = _sql_twin_bad(_AR_SQL, _arabic_chain, words)
+    assert not bad, bad[:10]
 
+
+@needs_reference(
+    f"{RESOURCES_ROOT}/ar/stopwords.txt", f"{RESOURCES_ROOT}/fa/stopwords.txt"
+)
+def test_arabic_persian_stop_sets_match_reference():
     def load(path):
         out = set()
         for line in open(path, encoding="utf-8"):
@@ -372,8 +410,8 @@ def test_arabic_persian_stop_sets_match_reference():
                 out.add(line)
         return out
 
-    assert ARABIC_STOP_WORDS == load(f"{res}/ar/stopwords.txt")
-    assert PERSIAN_STOP_WORDS == load(f"{res}/fa/stopwords.txt")
+    assert ARABIC_STOP_WORDS == load(f"{RESOURCES_ROOT}/ar/stopwords.txt")
+    assert PERSIAN_STOP_WORDS == load(f"{RESOURCES_ROOT}/fa/stopwords.txt")
 
 
 def test_arabic_batch_kernel_matches_scalar():
@@ -414,6 +452,7 @@ _ONE_TERM_RE = re.compile(
 )
 
 
+@needs_reference(f"{_REF}/lv/TestLatvianStemmer.java")
 def test_latvian_stemmer_goldens():
     """Every TestLatvianStemmer checkOneTerm pair (173 rows covering all
     six declensions, definite adjectives, and the palatalization
@@ -426,6 +465,7 @@ def test_latvian_stemmer_goldens():
         assert latvian_stem(w.strip()) == e, (w, e)
 
 
+@needs_reference(f"{_REF}/id/TestIndonesianStemmer.java")
 def test_indonesian_stemmer_goldens():
     """Every TestIndonesianStemmer checkOneTerm pair — var 'a' is the
     full derivational stemmer, var 'b' inflectional-only
@@ -440,32 +480,28 @@ def test_indonesian_stemmer_goldens():
 
 
 def test_latvian_sql_twin_parity_fuzz():
-    import duckdb
-
     rng = random.Random(11)
     alpha = "aeiouāīēūsšjmkņļčžbptvdzngl"
     words = [
         "".join(rng.choice(alpha) for _ in range(rng.randrange(1, 12)))
         for _ in range(30_000)
     ]
+    bad = _sql_twin_bad(LATVIAN_SQL, latvian_stem, words)
+    assert not bad, bad[:10]
+
+
+@needs_reference(f"{_REF}/lv/TestLatvianStemmer.java")
+def test_latvian_sql_twin_parity_reference_goldens():
     txt = open(f"{_REF}/lv/TestLatvianStemmer.java", encoding="utf-8").read()
-    words += [w.strip() for _v, w, _e in _ONE_TERM_RE.findall(txt)]
-    con = duckdb.connect()
-    con.execute("CREATE TABLE w AS SELECT unnest(?) AS term", [words])
-    body = "SELECT term FROM w"
-    for e in LATVIAN_SQL:
-        body = f"SELECT {e} AS term FROM ({body})"
-    got = [r[0] for r in con.execute(body).fetchall()]
-    bad = [(w, g, latvian_stem(w)) for w, g in zip(words, got) if g != latvian_stem(w)]
+    words = [w.strip() for _v, w, _e in _ONE_TERM_RE.findall(txt)]
+    bad = _sql_twin_bad(LATVIAN_SQL, latvian_stem, words)
     assert not bad, bad[:10]
 
 
 def test_indonesian_sql_twin_parity_fuzz():
     """The state-encoded (syllable count + single live flag riding a
-    2-char header) SQL chain ≡ the stateful Python stemmer over 48k
+    2-char header) SQL chain ≡ the stateful Python stemmer over 38k
     words incl. systematically composed prefix+root+suffix shapes."""
-    import duckdb
-
     rng = random.Random(5)
     alpha = "aeioumnpgkrbdtslyhj"
     words = [
@@ -478,23 +514,24 @@ def test_indonesian_sql_twin_parity_fuzz():
     mid = ["ajar", "erat", "beri", "turun", "ekonomi", "buku", "lari", "s", "a"]
     for _ in range(8_000):
         words.append(rng.choice(pre) + rng.choice(mid) + rng.choice(suf))
-    txt = open(f"{_REF}/id/TestIndonesianStemmer.java", encoding="utf-8").read()
-    words += [w for v, w, _e in _ONE_TERM_RE.findall(txt) if v == "a"]
-    con = duckdb.connect()
-    con.execute("CREATE TABLE w AS SELECT unnest(?) AS term", [words])
-    body = "SELECT term FROM w"
-    for e in INDONESIAN_SQL:
-        body = f"SELECT {e} AS term FROM ({body})"
-    got = [r[0] for r in con.execute(body).fetchall()]
-    bad = [
-        (w, g, indonesian_stem(w)) for w, g in zip(words, got) if g != indonesian_stem(w)
-    ]
+    bad = _sql_twin_bad(INDONESIAN_SQL, indonesian_stem, words)
     assert not bad, bad[:10]
 
 
-def test_lv_id_stop_sets_match_reference():
-    res = "/root/reference/lucene/analysis/common/src/resources/org/apache/lucene/analysis"
+@needs_reference(f"{_REF}/id/TestIndonesianStemmer.java")
+def test_indonesian_sql_twin_parity_reference_goldens():
+    """The same chain ≡ Python over every derivational-variant
+    TestIndonesianStemmer golden input."""
+    txt = open(f"{_REF}/id/TestIndonesianStemmer.java", encoding="utf-8").read()
+    words = [w for v, w, _e in _ONE_TERM_RE.findall(txt) if v == "a"]
+    bad = _sql_twin_bad(INDONESIAN_SQL, indonesian_stem, words)
+    assert not bad, bad[:10]
 
+
+@needs_reference(
+    f"{RESOURCES_ROOT}/lv/stopwords.txt", f"{RESOURCES_ROOT}/id/stopwords.txt"
+)
+def test_lv_id_stop_sets_match_reference():
     def load(path):
         out = set()
         for line in open(path, encoding="utf-8"):
@@ -503,8 +540,8 @@ def test_lv_id_stop_sets_match_reference():
                 out.add(line)
         return out
 
-    assert LATVIAN_STOP_WORDS == load(f"{res}/lv/stopwords.txt")
-    assert INDONESIAN_STOP_WORDS == load(f"{res}/id/stopwords.txt")
+    assert LATVIAN_STOP_WORDS == load(f"{RESOURCES_ROOT}/lv/stopwords.txt")
+    assert INDONESIAN_STOP_WORDS == load(f"{RESOURCES_ROOT}/id/stopwords.txt")
 
 
 def test_lv_id_chain_and_batch_parity():
@@ -546,6 +583,7 @@ from lucene_solr_spark.oracle.lang_pack import (  # noqa: E402
 )
 
 
+@needs_reference(f"{_REF}/ckb/TestSoraniNormalizationFilter.java")
 def test_sorani_normalizer_goldens():
     """Every TestSoraniNormalizationFilter checkOneTerm pair."""
     txt = open(f"{_REF}/ckb/TestSoraniNormalizationFilter.java", encoding="utf-8").read()
@@ -557,6 +595,7 @@ def test_sorani_normalizer_goldens():
         assert sorani_normalize(w) == e, (w.encode("unicode_escape"), e)
 
 
+@needs_reference(f"{_REF}/ckb/TestSoraniStemFilter.java")
 def test_sorani_stemmer_goldens():
     """Every TestSoraniStemFilter checkOneTerm pair — the test analyzer
     is the FULL SoraniAnalyzer, so normalize composes before stem."""
@@ -568,11 +607,9 @@ def test_sorani_stemmer_goldens():
         assert got == e, (w, e, got)
 
 
+@needs_reference(f"{RESOURCES_ROOT}/ckb/stopwords.txt")
 def test_sorani_stop_set_matches_reference():
-    res = (
-        "/root/reference/lucene/analysis/common/src/resources/org/apache/"
-        "lucene/analysis/ckb/stopwords.txt"
-    )
+    res = f"{RESOURCES_ROOT}/ckb/stopwords.txt"
     want = set()
     for line in open(res, encoding="utf-8"):
         line = line.split("#")[0].strip()

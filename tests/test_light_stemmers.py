@@ -45,8 +45,9 @@ from lucene_solr_spark.oracle.light_stemmers import (
     swedish_light_stem,
 )
 from lucene_solr_spark.oracle.tokenizer import analyze
+from reference_files import TEST_ROOT, needs_reference
 
-_REF = "/root/reference/lucene/analysis/common/src/test/org/apache/lucene/analysis"
+_REF = TEST_ROOT
 
 
 def _golden_pairs(rel: str):
@@ -60,9 +61,17 @@ def _golden_pairs(rel: str):
     return out
 
 
+def _vocab_params(rows):
+    """Each ``(zip_rel, ...)`` row as a parametrization gated on its zip."""
+    return [
+        pytest.param(*row, marks=needs_reference(f"{_REF}/{row[0]}"))
+        for row in rows
+    ]
+
+
 @pytest.mark.parametrize(
     "zip_rel, fn, expected_n",
-    [
+    _vocab_params([
         ("de/delighttestdata.zip", german_light_stem, 35033),
         ("fr/frlighttestdata.zip", french_light_stem, 20403),
         ("es/eslighttestdata.zip", spanish_light_stem, 28377),
@@ -72,7 +81,7 @@ def _golden_pairs(rel: str):
         ("hu/hulighttestdata.zip", hungarian_light_stem, 30000),
         ("ru/rulighttestdata.zip", russian_light_stem, 49673),
         ("fi/filighttestdata.zip", finnish_light_stem, 50000),
-    ],
+    ]),
     ids=[
         "german", "french", "spanish", "italian", "portuguese",
         "swedish", "hungarian", "russian", "finnish",
@@ -221,7 +230,7 @@ _SQL_TWINS = [
 
 @pytest.mark.parametrize(
     "zip_rel, exprs, fn",
-    _SQL_TWINS,
+    _vocab_params(_SQL_TWINS),
     ids=[
         "german", "spanish", "italian", "portuguese", "swedish",
         "hungarian", "russian", "finnish", "norwegian",
@@ -271,6 +280,7 @@ def test_german_normalize_sql_twin():
     assert not bad, bad[:10]
 
 
+@needs_reference(f"{_REF}/no/nb_light.txt", f"{_REF}/no/nn_light.txt")
 def test_norwegian_goldens():
     """The reference's own hand-crafted expectation files, BOTH flag
     variants (nb_light.txt = BOKMAAL, nn_light.txt = NYNORSK — the

@@ -12,8 +12,11 @@ from lucene_solr_spark.oracle.rslp import (
     galician_stem,
     portuguese_rslp_stem,
 )
+from reference_files import RESOURCES_ROOT, TEST_ROOT, needs_reference
 
-_T = "/root/reference/lucene/analysis/common/src/test/org/apache/lucene/analysis"
+_T = TEST_ROOT
+_GL_ZIP = f"{_T}/gl/gltestdata.zip"
+_PT_MINIMAL_ZIP = f"{_T}/pt/ptminimaltestdata.zip"
 
 
 def _vocab(zip_path, name):
@@ -25,10 +28,11 @@ def _vocab(zip_path, name):
             yield line.split("\t")
 
 
+@needs_reference(_GL_ZIP)
 def test_galician_full_vocabulary():
     bad = []
     n = 0
-    for w, e in _vocab(f"{_T}/gl/gltestdata.zip", "gl.txt"):
+    for w, e in _vocab(_GL_ZIP, "gl.txt"):
         n += 1
         got = galician_stem(w)
         if got != e:
@@ -37,6 +41,7 @@ def test_galician_full_vocabulary():
     assert not bad, (len(bad), bad[:5])
 
 
+@needs_reference(f"{_T}/pt/ptrslptestdata.zip")
 def test_portuguese_rslp_full_vocabulary():
     bad = []
     n = 0
@@ -67,11 +72,9 @@ def test_grammar_shapes():
     )
 
 
+@needs_reference(f"{RESOURCES_ROOT}/gl/stopwords.txt")
 def test_stop_set_matches_reference():
-    res = (
-        "/root/reference/lucene/analysis/common/src/resources/org/apache/"
-        "lucene/analysis/gl/stopwords.txt"
-    )
+    res = f"{RESOURCES_ROOT}/gl/stopwords.txt"
     want = set()
     for line in open(res, encoding="utf-8"):
         line = line.split("#")[0].strip()
@@ -80,12 +83,13 @@ def test_stop_set_matches_reference():
     assert GALICIAN_STOP_WORDS == want
 
 
+@needs_reference(_PT_MINIMAL_ZIP)
 def test_portuguese_minimal_full_vocabulary():
     from lucene_solr_spark.oracle.rslp import portuguese_minimal_stem
 
     bad = []
     n = 0
-    for w, e in _vocab(f"{_T}/pt/ptminimaltestdata.zip", "ptminimal.txt"):
+    for w, e in _vocab(_PT_MINIMAL_ZIP, "ptminimal.txt"):
         n += 1
         got = portuguese_minimal_stem(w)
         if got != e:
@@ -94,6 +98,7 @@ def test_portuguese_minimal_full_vocabulary():
     assert not bad, (len(bad), bad[:5])
 
 
+@needs_reference(_PT_MINIMAL_ZIP, _GL_ZIP)
 def test_minimal_sql_twins_fuzz():
     """The generated one-CASE twins ≡ the Plural-step engine over the
     full reference vocabularies (every rule + exception exercised)."""
@@ -107,9 +112,9 @@ def test_minimal_sql_twins_fuzz():
     )
 
     cases = (
-        (f"{_T}/pt/ptminimaltestdata.zip", "ptminimal.txt",
+        (_PT_MINIMAL_ZIP, "ptminimal.txt",
          PORTUGUESE_MINIMAL_SQL, portuguese_minimal_stem),
-        (f"{_T}/gl/gltestdata.zip", "gl.txt",
+        (_GL_ZIP, "gl.txt",
          GALICIAN_MINIMAL_SQL, galician_minimal_stem),
     )
     con = duckdb.connect()

@@ -54,11 +54,9 @@ from lucene_solr_spark.oracle.snowball import (
     spanish_snowball_stem,
     swedish_snowball_stem,
 )
+from reference_files import TEST_ROOT, needs_reference
 
-_REF = (
-    "/root/reference/lucene/analysis/common/src/test/org/apache/lucene/"
-    "analysis/snowball"
-)
+_REF = f"{TEST_ROOT}/snowball"
 
 _LANGS = [
     ("swedish", swedish_snowball_stem, SWEDISH_SNOWBALL_SQL),
@@ -138,17 +136,24 @@ def _vocab(lang: str):
     return list(zip(voc, out))
 
 
+def _vocab_param(lang, *args):
+    """One parametrization per language, gated on its vocabulary zip."""
+    return pytest.param(
+        lang, *args, id=lang, marks=needs_reference(f"{_REF}/{lang}.zip")
+    )
+
+
 @pytest.mark.parametrize(
     "lang, fn",
-    [(l, f) for l, f, _ in _LANGS] + _LANGS_NOSQL,
-    ids=[l[0] for l in _LANGS] + [l[0] for l in _LANGS_NOSQL],
+    [_vocab_param(l, f) for l, f, _ in _LANGS]
+    + [_vocab_param(l, f) for l, f in _LANGS_NOSQL],
 )
 def test_full_vocabulary_parity(lang, fn):
     bad = [(w, fn(w), o) for w, o in _vocab(lang) if fn(w) != o]
     assert not bad, bad[:10]
 
 
-@pytest.mark.parametrize("lang, fn, sql", _LANGS, ids=[l[0] for l in _LANGS])
+@pytest.mark.parametrize("lang, fn, sql", [_vocab_param(*row) for row in _LANGS])
 def test_sql_twin_parity(lang, fn, sql):
     import duckdb
 

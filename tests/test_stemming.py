@@ -18,6 +18,10 @@ from hypothesis import strategies as st
 
 from lucene_solr_spark.oracle.porter import porter_stem, strip_possessive
 from lucene_solr_spark.oracle.tokenizer import ENGLISH_STOP_WORDS, analyze
+from reference_files import TEST_ROOT, needs_reference
+
+_PORTER_ZIP = f"{TEST_ROOT}/snowball/porter.zip"
+_PORTER_TEST_DATA_ZIP = f"{TEST_ROOT}/en/porterTestData.zip"
 
 PORTER_GOLDENS = {
     "caresses": "caress", "ponies": "poni", "ties": "ti", "caress": "caress",
@@ -152,6 +156,7 @@ def test_stemmed_index_rank_identity(spark, term):
     assert got == expected
 
 
+@needs_reference(_PORTER_ZIP)
 def test_porter_vs_snowball_vocabulary():
     """Full-vocabulary evidence for the Porter stemmer: the reference
     ships the Snowball project's 2,000-word 'porter' vocabulary
@@ -166,11 +171,7 @@ def test_porter_vs_snowball_vocabulary():
 
     from lucene_solr_spark.oracle.porter import porter_stem
 
-    ref = (
-        "/root/reference/lucene/analysis/common/src/test/org/apache/"
-        "lucene/analysis/snowball/porter.zip"
-    )
-    with zipfile.ZipFile(ref) as z:
+    with zipfile.ZipFile(_PORTER_ZIP) as z:
         voc = z.read("voc.txt").decode("utf-8").split()
         out = z.read("output.txt").decode("utf-8").split()
     assert len(voc) == len(out) == 2000
@@ -186,6 +187,7 @@ def test_porter_vs_snowball_vocabulary():
     assert diffs["palynology"] == ("palynolog", "palynologi")
 
 
+@needs_reference(_PORTER_TEST_DATA_ZIP)
 def test_porter_vs_lucene_vocabulary():
     """THE definitive Porter parity evidence: the reference's own
     23,531-word Porter test vocabulary (en/porterTestData.zip, used by
@@ -195,11 +197,7 @@ def test_porter_vs_lucene_vocabulary():
 
     from lucene_solr_spark.oracle.porter import porter_stem
 
-    ref = (
-        "/root/reference/lucene/analysis/common/src/test/org/apache/"
-        "lucene/analysis/en/porterTestData.zip"
-    )
-    with zipfile.ZipFile(ref) as z:
+    with zipfile.ZipFile(_PORTER_TEST_DATA_ZIP) as z:
         voc = z.read("voc.txt").decode("utf-8").split()
         out = z.read("output.txt").decode("utf-8").split()
     assert len(voc) == len(out) == 23531
