@@ -1,100 +1,35 @@
-"""Analysis chain as a vectorized Arrow (pandas) UDF.
+"""Analysis chain as Spark ``mapInPandas`` stages.
 
 The Spark analog of StandardAnalyzer's pipeline
-(``analysis/standard/StandardAnalyzer.java:84-96``): one scalar pandas UDF
-``content → array<struct<term:string, pos:int>>`` so the whole analysis of
-an Arrow batch happens in one Python call (no per-row Spark Python UDF).
-The kernel is the SAME code the oracle uses
-(lucene_solr_spark.oracle.tokenizer), so Spark-vs-oracle token parity is
-by construction; goldens in tests/test_tokenizer.py pin the semantics.
+(``analysis/standard/StandardAnalyzer.java:84-96``): each stage hands a
+whole Arrow batch to the vectorized ``functions.fast_tokenizer``
+kernel, so analysis is one Python call per batch, not one per row. That
+kernel is not the oracle's code: ``tests/test_fast_tokenizer.py`` pins
+it to ``oracle.tokenizer.analyze`` (goldens in tests/test_tokenizer.py
+pin the oracle), and documents it cannot classify take the oracle's
+chain itself.
 
 At 100 TB scale this is the map-side-only stage: no shuffle is introduced
-here; Catalyst prunes unused columns around it, and the UDF cost is the
+here; Catalyst prunes unused columns around it, and the kernel cost is the
 corpus-bytes-proportional part of the build.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lucene_solr_spark.oracle.tokenizer import (
     ENGLISH_STOP_WORDS,
     MAX_TOKEN_LENGTH_DEFAULT,
-    analyze,
 )
 
-__all__ = ["TOKEN_SCHEMA", "make_tokenize_udf", "tokenize_standard", "ENGLISH_STOP_WORDS"]
-
-TOKEN_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("term", T.StringType(), False),
-            T.StructField("pos", T.IntegerType(), False),
-        ]
-    )
-)
-
-
-def make_tokenize_udf(
-    *,
-    lowercase: bool | str = True,
-    stopwords: frozenset[str] = frozenset(),
-    max_token_length: int = MAX_TOKEN_LENGTH_DEFAULT,
-    strip_possessive: bool = False,
-    stemmer: str | None = None,
-    elide: frozenset[str] | None = None,
-    stem_exclusions: frozenset[str] | None = None,
-    pre_stop: frozenset[str] | None = None,
-    apostrophe: bool = False,
-    cjk_bigrams: bool = False,
-    cjk_unigrams: bool = False,
-    zwnj_to_space: bool = False,
-):
-    """Build a tokenizer pandas UDF with a fixed analyzer config.
-
-    The config is captured by value in the closure (broadcast with the
-    task), mirroring Lucene's per-field Analyzer binding.
-    """
-    stop = frozenset(stopwords)
-
-    @F.pandas_udf(TOKEN_SCHEMA)
-    def tokenize(content: pd.Series) -> pd.Series:
-        return content.map(
-            lambda text: [
-                {"term": t, "pos": p}
-                for t, p in analyze(
-                    text if text is not None else "",
-                    lowercase=lowercase,
-                    stopwords=stop,
-                    max_token_length=max_token_length,
-                    strip_possessive=strip_possessive,
-                    stemmer=stemmer,
-                    elide=elide,
-                    stem_exclusions=stem_exclusions,
-                    pre_stop=pre_stop,
-                    apostrophe=apostrophe,
-                    cjk_bigrams=cjk_bigrams,
-                    cjk_unigrams=cjk_unigrams,
-                    zwnj_to_space=zwnj_to_space,
-                )
-            ]
-        )
-
-    return tokenize
-
-
-#: default StandardAnalyzer config (lowercase, NO stopwords —
-#: StandardAnalyzer.java:51-53)
-tokenize_standard = None  # initialized lazily: pandas_udf needs an active session
-
-
-def get_tokenize_standard():
-    global tokenize_standard
-    if tokenize_standard is None:
-        tokenize_standard = make_tokenize_udf()
-    return tokenize_standard
+__all__ = [
+    "tokens_frame",
+    "multi_postings_frame",
+    "postings_frame",
+    "ENGLISH_STOP_WORDS",
+]
 
 
 def tokens_frame(
@@ -119,9 +54,8 @@ def tokens_frame(
     """corpus → flat (doc_id, term, pos) token rows via ONE ``mapInPandas``
     pass over the VECTORIZED batch tokenizer (functions.fast_tokenizer):
     the whole Arrow batch tokenizes as numpy/Arrow array ops — no
-    per-document Python in the hot path. The scalar UDF
-    (``make_tokenize_udf``) remains the per-document API used by parity
-    tests, and the batch kernel is pinned against it."""
+    per-document Python in the hot path. ``oracle.tokenizer.analyze`` is
+    the per-document API, and the batch kernel is pinned against it."""
     import numpy as np
     import pyarrow as pa
 
@@ -186,7 +120,7 @@ def multi_postings_frame(
     where analyzer opts are the tokenizer kwargs (lowercase, stopwords,
     max_token_length, strip_possessive, fold_ascii, stemmer) — the
     PerFieldAnalyzerWrapper role (each field's analyzer binding is
-    captured by value, like make_tokenize_udf's closure).
+    captured by value in the task closure).
     """
     import numpy as np
     import pyarrow as pa

@@ -27,6 +27,7 @@ import pyarrow as pa
 import pyspark.sql.types as T
 
 from lucene_solr_spark.functions.fast_tokenizer import FAST_LIMIT
+from lucene_solr_spark.oracle.tokenizer import lowercase as _lowercase
 
 GRAMMARS = ("whitespace", "letter", "keyword")
 
@@ -116,7 +117,7 @@ def batch_tokenize_grammar(
     norm_texts = ["" if t is None else t for t in texts]
 
     if grammar == "keyword":
-        toks = [t.lower() if lowercase else t for t in norm_texts]
+        toks = [_lowercase(t) if lowercase else t for t in norm_texts]
         keep = np.fromiter((len(t) > 0 for t in toks), np.bool_, n_docs)
         tdoc = np.nonzero(keep)[0].astype(np.int64)
         terms = pa.array([toks[i] for i in tdoc.tolist()], pa.utf8())
@@ -181,7 +182,7 @@ def batch_tokenize_grammar(
                 np.cumsum(tlen, out=offs[1:])
                 toks = [gtxt[offs[i] : offs[i + 1]] for i in range(len(tlen))]
                 if lowercase:
-                    toks = [t.lower() for t in toks]
+                    toks = [_lowercase(t) for t in toks]
                 out_doc.append(tdoc)
                 out_terms.append(pa.array(toks, pa.utf8()))
                 out_pos.append(pos)
@@ -195,7 +196,7 @@ def batch_tokenize_grammar(
             continue
         toks = [t for t, _, _ in spans]
         if lowercase:
-            toks = [t.lower() for t in toks]
+            toks = [_lowercase(t) for t in toks]
         out_doc.append(np.full(len(toks), i, np.int64))
         out_terms.append(pa.array(toks, pa.utf8()))
         out_pos.append(np.arange(len(toks), dtype=np.int32))

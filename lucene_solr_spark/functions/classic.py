@@ -26,6 +26,8 @@ import re
 import numpy as np
 import pyarrow as pa
 
+from lucene_solr_spark.oracle.tokenizer import lowercase as _lowercase
+
 __all__ = [
     "classic_tokenize",
     "classic_filter_term",
@@ -127,7 +129,7 @@ def batch_classic_tokenize(
         ):
             term = classic_filter_term(term, typ)
             if lowercase:
-                term = term.lower()
+                term = _lowercase(term)
             if term in stopwords:
                 continue  # gap preserved — pos already assigned
             d_out.append(di)

@@ -36,7 +36,10 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from lucene_solr_spark.oracle import tokenizer as _otok
-from lucene_solr_spark.oracle.tokenizer import MAX_TOKEN_LENGTH_DEFAULT, analyze
+from lucene_solr_spark.oracle.tokenizer import (
+    MAX_TOKEN_LENGTH_DEFAULT,
+    analyze_with_offsets,
+)
 
 __all__ = ["batch_tokenize", "FAST_LIMIT"]
 
@@ -477,37 +480,7 @@ def batch_tokenize(
                 out_eoff.append(eoff)
 
     for i in slow_docs.tolist():
-        if with_offsets:
-            from lucene_solr_spark.functions.highlight import analyze_with_offsets
-
-            otoks = analyze_with_offsets(
-                norm_texts[i],
-                lowercase=lowercase,
-                stopwords=stopwords,
-                max_token_length=max_token_length,
-                strip_possessive=strip_possessive,
-                fold_ascii=fold_ascii,
-                stemmer=stemmer,
-                elide=elide,
-                stem_exclusions=stem_exclusions,
-                pre_stop=pre_stop,
-                apostrophe=apostrophe,
-            )
-            if not otoks:
-                continue
-            out_doc.append(np.full(len(otoks), i, np.int64))
-            out_terms.append(pa.array([t for t, _p, _s, _e in otoks], pa.utf8()))
-            out_pos.append(
-                np.fromiter((p for _t, p, _s, _e in otoks), np.int32, len(otoks))
-            )
-            out_soff.append(
-                np.fromiter((s_ for _t, _p, s_, _e in otoks), np.int32, len(otoks))
-            )
-            out_eoff.append(
-                np.fromiter((e for _t, _p, _s, e in otoks), np.int32, len(otoks))
-            )
-            continue
-        toks = analyze(
+        otoks = analyze_with_offsets(
             norm_texts[i],
             lowercase=lowercase,
             stopwords=stopwords,
@@ -520,11 +493,15 @@ def batch_tokenize(
             pre_stop=pre_stop,
             apostrophe=apostrophe,
         )
-        if not toks:
+        if not otoks:
             continue
-        out_doc.append(np.full(len(toks), i, np.int64))
-        out_terms.append(pa.array([t.term for t in toks], pa.utf8()))
-        out_pos.append(np.fromiter((t.pos for t in toks), np.int32, len(toks)))
+        terms_i, pos_i, soff_i, eoff_i = zip(*otoks)
+        out_doc.append(np.full(len(otoks), i, np.int64))
+        out_terms.append(pa.array(terms_i, pa.utf8()))
+        out_pos.append(np.array(pos_i, np.int32))
+        if with_offsets:
+            out_soff.append(np.array(soff_i, np.int32))
+            out_eoff.append(np.array(eoff_i, np.int32))
 
     if not out_doc:
         empty = (

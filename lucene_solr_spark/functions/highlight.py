@@ -8,10 +8,11 @@ uhighlight/UnifiedHighlighter.java`` for the Spark engine:
   ``IndexOptions...AND_OFFSETS``), so offsets come from re-running the
   analyzer over the document text at highlight time — exactly
   UnifiedHighlighter's ``OffsetSource.ANALYSIS`` fallback
-  (``UnifiedHighlighter.java:1000-1032``). The scan reuses the oracle
-  tokenizer's candidate regex + split rules, so highlight spans line up
-  with indexed terms BY CONSTRUCTION (same chain: lowercase →
-  possessive → stop → stem).
+  (``UnifiedHighlighter.java:1000-1032``). The spans come from
+  ``oracle.tokenizer.analyze_with_offsets``, the chain ``analyze`` runs,
+  so a highlighted term is the oracle's term. The index itself is
+  built by ``functions.fast_tokenizer``, a separate vectorized kernel
+  that the parity tests pin to that chain.
 - **Passages.** Lucene breaks at sentence boundaries via
   ``BreakIterator.getSentenceInstance`` (``UnifiedHighlighter.java:72-74,
   117-121``). ``break_mode="sentence"`` mirrors that with a deterministic
@@ -39,14 +40,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from lucene_solr_spark.oracle.tokenizer import (
-    _EXTEND_RE,
-    _MID_SET,
-    _IDEO_RE,
-    _TOKEN_RE,
-    MAX_TOKEN_LENGTH_DEFAULT,
-    _split_candidate,
-)
+from lucene_solr_spark.oracle.tokenizer import analyze_with_offsets
 
 __all__ = [
     "Passage",
@@ -90,134 +84,6 @@ class Passage:
     score: float
     n_matches: int
     snippet: str
-
-
-def analyze_with_offsets(
-    text: str,
-    *,
-    lowercase: bool | str = True,
-    stopwords: frozenset = frozenset(),
-    max_token_length: int = MAX_TOKEN_LENGTH_DEFAULT,
-    strip_possessive: bool = False,
-    fold_ascii: bool = False,
-    stemmer: str | None = None,
-    elide: frozenset | None = None,
-    stem_exclusions: frozenset | None = None,
-    pre_stop: frozenset | None = None,
-    apostrophe: bool = False,
-    cjk_bigrams: bool = False,
-    cjk_unigrams: bool = False,
-    zwnj_to_space: bool = False,
-) -> list[tuple[str, int, int, int]]:
-    """Analyzer chain WITH character offsets → [(term, pos, start, end)].
-
-    Same semantics as ``oracle.tokenizer.analyze`` (parity-tested), plus
-    the source span of each surviving token — the ANALYSIS offset source.
-    Sub-tokens of a split candidate (``obj.method``) get their exact
-    sub-spans; stopwords drop but consume positions (gaps preserved).
-    Elision/stemming rewrite the term but keep the ORIGINAL span, like
-    Lucene's token filters."""
-    from lucene_solr_spark.oracle.light_stemmers import french_elide
-    from lucene_solr_spark.oracle.light_stemmers import (
-        resolve_with_exclusions as _resolve,
-    )
-    from lucene_solr_spark.oracle.porter import strip_possessive as _sp
-
-    stem_fn = _resolve(stemmer, stem_exclusions)
-    if zwnj_to_space:
-        # PersianCharFilter: length-preserving, so spans stay valid
-        # against the ORIGINAL text (correct(off) == off)
-        text = text.replace("‌", " ")
-
-    if cjk_bigrams:
-        # CJKAnalyzer chain (cjk/CJKAnalyzer.java:95-103): width fold is
-        # applied pre-tokenize, so spans index the FOLDED text (disclosed
-        # in oracle/cjk.py); bigram positions renumber, stop after
-        from lucene_solr_spark.oracle.cjk import cjk_bigram_stream, width_fold
-
-        raw0 = [
-            (t, s, e)
-            for t, _p, s, e in analyze_with_offsets(
-                width_fold(text),
-                lowercase=lowercase,
-                max_token_length=max_token_length,
-            )
-        ]
-        out_cjk: list[tuple[str, int, int, int]] = []
-        for term, pos, s, e in cjk_bigram_stream(
-            raw0, output_unigrams=cjk_unigrams
-        ):
-            if term in stopwords:
-                continue
-            if stem_fn is not None:
-                term = stem_fn(term)
-            out_cjk.append((term, pos, s, e))
-        return out_cjk
-
-    raw: list[tuple[str, int, int]] = []  # (raw_term, start, end)
-    for m in _TOKEN_RE.finditer(text):
-        cand = m.group(0)
-        base = m.start()
-        if len(cand) == 1 or not (set(cand) & _MID_SET or _IDEO_RE.search(cand)):
-            raw.append((cand, base, base + len(cand)))
-        else:
-            # locate each split part inside the candidate (parts appear
-            # in order and never overlap, so a moving cursor is exact)
-            cursor = 0
-            for part in _split_candidate(cand):
-                i = cand.index(part, cursor)
-                cursor = i + len(part)
-                # as in oracle tokenize: marks never START a token
-                lead = _EXTEND_RE.match(part)
-                if lead:
-                    part = part[lead.end():]
-                    i += lead.end()
-                if part:
-                    raw.append((part, base + i, base + i + len(part)))
-    out: list[tuple[str, int, int, int]] = []
-    for pos, (term, s, e) in enumerate(raw):
-        if len(term) > max_token_length:
-            continue  # skipped but consumes a position (skippedPositions)
-        if pre_stop is not None and term.lower() in pre_stop:
-            continue  # IrishAnalyzer HYPHENATIONS slot — gap preserved
-        if apostrophe:
-            from lucene_solr_spark.oracle.light_stemmers import (
-                apostrophe_strip,
-            )
-
-            term = apostrophe_strip(term)
-        if lowercase == "irish":
-            # ga/IrishAnalyzer.java:120-128: elide BEFORE the Irish fold
-            from lucene_solr_spark.oracle.light_stemmers import irish_lower
-
-            if elide:
-                term = french_elide(term, elide)
-            term = irish_lower(term)
-        elif lowercase == "turkish":
-            from lucene_solr_spark.oracle.light_stemmers import turkish_lower
-
-            term = turkish_lower(term)
-        elif isinstance(lowercase, str):
-            from lucene_solr_spark.oracle.light_stemmers import resolve_fold
-
-            term = resolve_fold(lowercase)(term)
-        else:
-            if lowercase:
-                term = term.lower()
-            if strip_possessive:
-                term = _sp(term)
-            if elide:
-                term = french_elide(term, elide)
-        if fold_ascii:
-            from lucene_solr_spark.oracle.tokenizer import fold_accents
-
-            term = fold_accents(term)
-        if term in stopwords:
-            continue
-        if stem_fn is not None:
-            term = stem_fn(term)
-        out.append((term, pos, s, e))
-    return out
 
 
 def best_passages(

@@ -1,5 +1,7 @@
-"""StandardAnalyzer-equivalent tokenizer kernel (pure Python, shared by the
-single-node oracle and the Spark Arrow UDF in functions.analysis).
+"""StandardAnalyzer-equivalent tokenizer kernel (pure Python): the one
+place that turns text into terms. ``analyze_with_offsets`` is the chain;
+``analyze``, ``tokenize``, the highlighter and the batch tokenizer's
+slow path all run it, and ``functions.fast_tokenizer`` is pinned to it.
 
 Semantics parity (cited, not copied) with the reference:
 
@@ -22,8 +24,9 @@ Semantics parity (cited, not copied) with the reference:
   position (``analysis/standard/StandardTokenizer.java:145-168``
   skippedPositions).
 - LowerCaseFilter = per-codepoint toLowerCase
-  (``analysis/LowerCaseFilter.java:46``); Python ``str.lower()`` matches on
-  ASCII (non-ASCII deltas covered by goldens).
+  (``analysis/LowerCaseFilter.java:46``) — :func:`lowercase`, which is
+  ``str.lower()`` without its Final_Sigma context rule (``Σ`` → ``σ``
+  everywhere, never ``ς``).
 - StopFilter drops tokens *after* position assignment, so surviving tokens
   keep their original position gaps
   (``analysis/FilteringTokenFilter.java:49-63``).
@@ -45,7 +48,9 @@ __all__ = [
     "ENGLISH_STOP_WORDS",
     "MAX_TOKEN_LENGTH_DEFAULT",
     "tokenize",
+    "lowercase",
     "analyze",
+    "analyze_with_offsets",
 ]
 
 MAX_TOKEN_LENGTH_DEFAULT = 255
@@ -108,7 +113,7 @@ def _build_extend_class() -> str:
 
 
 _EXTEND = _build_extend_class()
-_EXTEND_RE = re.compile(rf"^[{_EXTEND}]+")
+_EXTEND_RE = re.compile(rf"[{_EXTEND}]+")  # a leading mark run (.match)
 
 # A raw candidate: word chars (Extend marks may continue but never start
 # a token), with single mid-chars only in the interior. Validation of
@@ -121,7 +126,6 @@ _TOKEN_RE = re.compile(
 
 _MID_SET = set(_MID_ALL)
 _IDEO_RE = re.compile(rf"[{_IDEO}]")
-_KATA_RE = re.compile(rf"[{_KATA}]+|[^{_KATA}]+")
 
 
 _EXT_SET_RE = re.compile(rf"[{_EXTEND}]")
@@ -136,10 +140,11 @@ def _is_letter(ch: str) -> bool:
     ) and not _IDEO_RE.match(ch) and ch not in _MID_SET
 
 
-def _split_candidate(cand: str) -> list[str]:
+def _split_candidate(cand: str) -> list[tuple[int, int]]:
     """Split a raw candidate at mid-chars whose context is invalid, and
-    break CJK ideographs into single-char tokens."""
-    parts: list[str] = []
+    break CJK ideographs into single-char tokens. Returns the parts as
+    ``(start, end)`` spans within ``cand``, in order."""
+    spans: list[tuple[int, int]] = []
     start = 0
     for i, ch in enumerate(cand):
         if ch in _MID_SET:
@@ -149,53 +154,59 @@ def _split_candidate(cand: str) -> list[str]:
                 or (ch in _MID_NUM and prev.isdigit() and nxt.isdigit())
             )
             if not ok:
-                if i > start:
-                    parts.append(cand[start:i])
+                spans.append((start, i))
                 start = i + 1
-    parts.append(cand[start:])
-    # explode CJK ideographs / separate katakana runs
-    out: list[str] = []
-    for p in parts:
-        if not p:
+        elif _IDEO_RE.match(ch):
+            spans.append((start, i))
+            spans.append((i, i + 1))  # one token per ideograph
+            start = i + 1
+    spans.append((start, len(cand)))
+    return [(s, e) for s, e in spans if e > s]
+
+
+def _spans(text: str):
+    """StandardTokenizer's candidate loop: yields each raw token as
+    ``(term, start, end)``, in order, before any length limit or filter."""
+    for m in _TOKEN_RE.finditer(text):
+        cand = m.group(0)
+        base = m.start()
+        if len(cand) == 1 or not (set(cand) & _MID_SET or _IDEO_RE.search(cand)):
+            yield cand, base, m.end()
             continue
-        if _IDEO_RE.search(p):
-            buf = ""
-            for ch in p:
-                if _IDEO_RE.match(ch):
-                    if buf:
-                        out.append(buf)
-                        buf = ""
-                    out.append(ch)  # one token per ideograph
-                else:
-                    buf += ch
-            if buf:
-                out.append(buf)
-        else:
-            out.append(p)
-    return out
+        for s, e in _split_candidate(cand):
+            # a part may start with Extend marks (the char after an
+            # invalid mid): marks never START a token — trim, drop empty
+            lead = _EXTEND_RE.match(cand, s, e)
+            if lead:
+                s = lead.end()
+            if s < e:
+                yield cand[s:e], base + s, base + e
 
 
 def tokenize(text: str, max_token_length: int = MAX_TOKEN_LENGTH_DEFAULT) -> list[Token]:
     """StandardTokenizer: raw (not lowercased, not stop-filtered) tokens with
     0-based positions; over-long tokens are skipped but consume a position."""
-    raw: list[str] = []
-    for m in _TOKEN_RE.finditer(text):
-        cand = m.group(0)
-        if len(cand) == 1 or not (set(cand) & _MID_SET or _IDEO_RE.search(cand)):
-            raw.append(cand)
-        else:
-            # split parts may start with Extend marks (the char after an
-            # invalid mid): marks never START a token — trim, drop empty
-            for p in _split_candidate(cand):
-                p = _EXTEND_RE.sub("", p)
-                if p:
-                    raw.append(p)
-    out: list[Token] = []
-    for pos, term in enumerate(raw):
-        if len(term) > max_token_length:
-            continue  # skipped, but pos was consumed (skippedPositions)
-        out.append(Token(term, pos))
-    return out
+    return [
+        Token(term, pos)
+        for pos, (term, _s, _e) in enumerate(_spans(text))
+        if len(term) <= max_token_length  # skippedPositions
+    ]
+
+
+def lowercase(term: str) -> str:
+    """LowerCaseFilter: ``Character.toLowerCase`` per code point
+    (``analysis/LowerCaseFilter.java:46``). ``str.lower()`` applies
+    Unicode's Final_Sigma context and turns a word-final ``Σ`` into
+    ``ς``; per code point ``Σ`` is always ``σ``, the term the batch
+    tokenizer indexes. A ``ς`` in the text stays ``ς``. U+0130 keeps
+    ``str.lower()``'s two code points: the batch tokenizer sends the
+    documents that hold it to this chain."""
+    if "Σ" in term:
+        term = term.replace("Σ", "σ")
+    return term.lower()
+
+
+_lowercase = lowercase  # the chain's ``lowercase`` keyword shadows the name
 
 
 def fold_accents(term: str) -> str:
@@ -214,7 +225,7 @@ def fold_accents(term: str) -> str:
     )
 
 
-def analyze(
+def analyze_with_offsets(
     text: str,
     *,
     lowercase: bool | str = True,
@@ -230,9 +241,16 @@ def analyze(
     cjk_bigrams: bool = False,
     cjk_unigrams: bool = False,
     zwnj_to_space: bool = False,
-) -> list[Token]:
-    """Full analyzer chain. Default = Lucene StandardAnalyzer (lowercase,
-    NO stopwords). The EnglishAnalyzer chain
+) -> list[tuple[str, int, int, int]]:
+    """Full analyzer chain → ``[(term, pos, start, end)]``, where
+    ``text[start:end]`` is the source span of each surviving token (the
+    highlighter's ANALYSIS offset source). Sub-tokens of a split
+    candidate (``obj.2method`` → ``obj``, ``2method``) get their exact
+    sub-spans; filters rewrite the term but keep the ORIGINAL span, like
+    Lucene's token filters.
+
+    Default = Lucene StandardAnalyzer (lowercase, NO stopwords). The
+    EnglishAnalyzer chain
     (``analysis/common/.../en/EnglishAnalyzer.java:46-52``: possessive →
     lowercase → stop → PorterStem) = ``stopwords=ENGLISH_STOP_WORDS,
     strip_possessive=True, stemmer="porter"``. The FrenchAnalyzer chain
@@ -258,11 +276,15 @@ def analyze(
     dotted/dotless-i semantics — together the TurkishAnalyzer chain
     (``tr/TurkishAnalyzer.java:109-118``).
 
+    ``zwnj_to_space=True`` is PersianCharFilter: length-preserving, so
+    spans stay valid against the original text.
+
     ``cjk_bigrams=True`` selects the CJKAnalyzer chain
     (``cjk/CJKAnalyzer.java:95-103``): width fold → lowercase → CJK
     bigrams (positions RENUMBER over the emitted stream) → stop;
     ``cjk_unigrams=True`` adds the unigram+bigram combined mode
-    (bigrams stack at posInc 0). See ``oracle/cjk.py``."""
+    (bigrams stack at posInc 0). The width fold runs before
+    tokenization, so spans index the folded text. See ``oracle/cjk.py``."""
     from lucene_solr_spark.oracle.light_stemmers import (
         apostrophe_strip,
         french_elide,
@@ -284,13 +306,7 @@ def analyze(
         # CJKAnalyzer chain: width fold pre-tokenize (see oracle/cjk.py
         # docstring), lowercase raw tokens, bigram merge (positions
         # renumber over the emitted stream), THEN stop (gaps preserved)
-        from lucene_solr_spark.functions.highlight import (
-            analyze_with_offsets,
-        )
-        from lucene_solr_spark.oracle.cjk import (
-            cjk_bigram_stream,
-            width_fold,
-        )
+        from lucene_solr_spark.oracle.cjk import cjk_bigram_stream, width_fold
 
         raw = [
             (t, s, e)
@@ -301,18 +317,20 @@ def analyze(
             )
         ]
         out = []
-        for term, pos, _s, _e in cjk_bigram_stream(
+        for term, pos, s, e in cjk_bigram_stream(
             raw, output_unigrams=cjk_unigrams
         ):
             if term in stopwords:
                 continue
             if stem is not None:
                 term = stem(term)
-            out.append(Token(term, pos))
+            out.append((term, pos, s, e))
         return out
-    out: list[Token] = []
-    for term, pos in tokenize(text, max_token_length):
-        if pre_stop is not None and term.lower() in pre_stop:
+    out = []
+    for pos, (term, s, e) in enumerate(_spans(text)):
+        if len(term) > max_token_length:
+            continue  # skipped, but pos was consumed (skippedPositions)
+        if pre_stop is not None and _lowercase(term) in pre_stop:
             continue  # consumed its position — gap preserved
         if apostrophe:
             term = apostrophe_strip(term)
@@ -328,7 +346,7 @@ def analyze(
             term = resolve_fold(lowercase)(term)
         else:
             if lowercase:
-                term = term.lower()
+                term = _lowercase(term)
             if strip_possessive:
                 term = _sp(term)
             if elide:
@@ -339,5 +357,11 @@ def analyze(
             continue
         if stem is not None:
             term = stem(term)
-        out.append(Token(term, pos))
+        out.append((term, pos, s, e))
     return out
+
+
+def analyze(text: str, **chain) -> list[Token]:
+    """:func:`analyze_with_offsets` without the spans: ``[Token(term,
+    pos)]`` under the same keyword arguments."""
+    return [Token(t, p) for t, p, _s, _e in analyze_with_offsets(text, **chain)]

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import re
 
+from ..oracle.tokenizer import lowercase
 from . import ir
 from .parser import _word_to_query
 
@@ -51,7 +52,7 @@ def _phrase_slot(tok: str, fuzzy_prefix_length: int = 0) -> ir.Query:
     [lo TO hi] range, or handled upstream as a group."""
     rm = _RANGE_RX.match(tok)
     if rm:
-        return ir.TermRangeQuery(rm.group(1).lower(), rm.group(2).lower())
+        return ir.TermRangeQuery(lowercase(rm.group(1)), lowercase(rm.group(2)))
     q = _word_to_query(tok)
     if isinstance(q, ir.BoostQuery):
         q = q.query  # boosts inside phrases are dropped (reference :221)

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import re
 
-from lucene_solr_spark.oracle.tokenizer import analyze
+from lucene_solr_spark.oracle.tokenizer import analyze, lowercase
 from lucene_solr_spark.plans import ir
 
 __all__ = ["parse_query", "parse_query_file_line"]
@@ -119,11 +119,11 @@ def _word_to_query(w: str) -> ir.Query:
     q: ir.Query
     fm = re.search(r"~(\d*)$", w)
     if w.endswith("*") and "*" not in w[:-1] and "?" not in w:
-        q = ir.PrefixQuery(w[:-1].lower(), field=fld)
+        q = ir.PrefixQuery(lowercase(w[:-1]), field=fld)
     elif "*" in w or "?" in w:
-        q = ir.WildcardQuery(w.lower(), field=fld)
+        q = ir.WildcardQuery(lowercase(w), field=fld)
     elif fm:
-        base = w[: fm.start()].lower()
+        base = lowercase(w[: fm.start()])
         q = ir.FuzzyQuery(base, max_edits=int(fm.group(1) or 2), field=fld)
     else:
         toks = analyze(w)
@@ -217,7 +217,7 @@ class _Parser:
         if t.kind == "range":
             lo, hi = t.val
             return ir.TermRangeQuery(
-                lo.lower(), hi.lower(), True, True, field=t.extra
+                lowercase(lo), lowercase(hi), True, True, field=t.extra
             )
         if t.kind == "word":
             return _word_to_query(t.val)

@@ -17,7 +17,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from . import ir
-from ..oracle.tokenizer import analyze
+from ..oracle.tokenizer import analyze, lowercase
 
 __all__ = ["SimpleQueryParser", "parse_simple"]
 
@@ -296,13 +296,13 @@ class SimpleQueryParser:
 
     def _new_prefix_query(self, text: str) -> ir.Query:
         # analyzer.normalize role: lowercase only (:563)
-        return ir.PrefixQuery(text.lower())
+        return ir.PrefixQuery(lowercase(text))
 
     def _new_fuzzy_query(self, text: str, fuzziness: int) -> ir.Query:
         # reference FuzzyQuery defaults: scored blended rewrite,
         # transpositions, maxExpansions 50 (:558-567)
         return ir.FuzzyQuery(
-            text.lower(), max_edits=fuzziness, constant_score=False
+            lowercase(text), max_edits=fuzziness, constant_score=False
         )
 
 

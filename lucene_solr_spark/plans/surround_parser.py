@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import re
 
+from ..oracle.tokenizer import lowercase
 from . import ir
 
 __all__ = ["SurroundParseError", "parse_surround"]
@@ -39,12 +40,12 @@ class SurroundParseError(ValueError):
     pass
 
 
-_TOKEN_RE = re.compile(r"\(|\)|,|[^\s(),:^]+")
+_LEX_RE = re.compile(r"\(|\)|,|[^\s(),:^]+")
 _DIST_RE = re.compile(r"^(\d{1,2})?([wn])$", re.IGNORECASE)
 
 
 def _lex(text: str) -> list[str]:
-    return _TOKEN_RE.findall(text)
+    return _LEX_RE.findall(text)
 
 
 def _dist_op(tok: str):
@@ -217,7 +218,7 @@ class _Parser:
 def _term_query(tok: str) -> ir.Query:
     if tok in ("*", "?") or set(tok) <= {"*", "?"}:
         raise SurroundParseError(f"pure wildcard term {tok!r}")
-    term = tok.lower()
+    term = lowercase(tok)
     if term.endswith("*") and "*" not in term[:-1] and "?" not in term:
         return ir.PrefixQuery(term[:-1])
     if "*" in term or "?" in term:

@@ -43,6 +43,8 @@ EDGE_CASES = [
     # still lets a ':' join, and a VS16 there is no standalone emoji
     "一\u1cd0:A 1:\u1cd0:A 1,\u1cd0:A",
     "一\ufe0f 2,\ufe0f.",
+    # capital sigma lowers per code point: σ, never the final form ς
+    "ΟΔΟΣ ΟΔΟΣ. AΣ aΣb",
 ]
 
 
@@ -88,6 +90,7 @@ def test_edge_case_parity(lowercase, stop):
 # a combining mark with no base before a MidLetter (UAX#29 WB4)
 @example(["\u1cd0:A"])
 @example(["\u08ca:A"])
+@example(["AΣ"])  # word-final capital sigma
 def test_property_parity_bmp(texts):
     assert _got(texts, True, frozenset()) == _expected(texts, True, frozenset())
 

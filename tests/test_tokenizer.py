@@ -3,8 +3,12 @@
 from StandardTokenizer.java:145-168; stop positions from
 FilteringTokenFilter.java:49-63."""
 
+import ast
+from pathlib import Path
+
 import pytest
 
+import lucene_solr_spark
 from lucene_solr_spark.oracle.tokenizer import (
     ENGLISH_STOP_WORDS,
     analyze,
@@ -94,3 +98,53 @@ def test_ideographs_single_char_tokens():
 
 def test_emoji_single_token():
     assert terms("snow ☃ man") == ["snow", "☃", "man"]
+
+
+def test_final_sigma_query_finds_indexed_term():
+    """LowerCaseFilter lowers per code point: a word-final ``Σ`` is
+    ``σ`` in the index, so query terms must carry ``σ`` too — for the
+    analyzed word and for the multi-term normalize path alike."""
+    from lucene_solr_spark.functions.fast_tokenizer import batch_tokenize
+    from lucene_solr_spark.plans import ir
+    from lucene_solr_spark.plans.parser import parse_query
+
+    (indexed,) = batch_tokenize(["ΟΔΟΣ"])[1].to_pylist()
+    assert indexed == "οδοσ"
+    assert parse_query("ΟΔΟΣ") == ir.TermQuery(indexed)
+    assert parse_query("ΟΔΟΣ*") == ir.PrefixQuery(indexed)
+    assert terms("AΣ") == ["aσ"]
+    assert terms("λόγος") == ["λόγος"]  # a final ς in the text stays ς
+
+
+PKG = Path(lucene_solr_spark.__file__).parent
+TOKENIZER_INTERNALS = {"_TOKEN_RE", "_split_candidate"}
+
+
+def test_one_candidate_loop():
+    """The candidate regex and its split rules are used only inside
+    ``oracle/tokenizer.py``, which imports nothing from ``functions/``;
+    the highlighter's offsets come from the same chain — a second
+    analyzer copy fails here."""
+    from lucene_solr_spark.functions import highlight
+    from lucene_solr_spark.oracle import tokenizer
+
+    assert highlight.analyze_with_offsets is tokenizer.analyze_with_offsets
+    bad = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        tree = ast.parse(path.read_text())
+        if rel == "oracle/tokenizer.py":
+            for n in ast.walk(tree):
+                if isinstance(n, (ast.Import, ast.ImportFrom)) and "functions" in ast.unparse(n):
+                    bad.append(f"{rel}:{n.lineno} {ast.unparse(n)}")
+            continue
+        for n in ast.walk(tree):
+            name = (
+                n.id if isinstance(n, ast.Name)
+                else n.attr if isinstance(n, ast.Attribute)
+                else n.name if isinstance(n, ast.alias)
+                else None
+            )
+            if name in TOKENIZER_INTERNALS:
+                bad.append(f"{rel}:{n.lineno} uses {name}")
+    assert not bad, bad
