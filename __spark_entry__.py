@@ -165,9 +165,7 @@ def _seg_searcher(spark: SparkSession, sf_dir: str):
         ex = _executor(spark, sf_dir)
         base = f"/tmp/entry_segments_{_hl.md5(sf_dir.encode()).hexdigest()[:8]}"
         build_segments(ex.index, base, segment_size=1 << 10)
-        _CACHE[key] = SegmentSearcher(
-            spark, SegmentIndex.open(base), mode="double", prune="block_max"
-        )
+        _CACHE[key] = SegmentSearcher(spark, SegmentIndex.open(base), mode="double")
     return _CACHE[key]
 
 
@@ -1623,9 +1621,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 ),
             )
             assert merged_ids, "policy must select merges on 64-doc segments"
-            _CACHE[key] = SegmentSearcher(
-                spark, SegmentIndex.open(base), mode="double", prune="block_max"
-            )
+            _CACHE[key] = SegmentSearcher(spark, SegmentIndex.open(base), mode="double")
         return _CACHE[key].topk(_T("dup"), k=10).select("doc_id", "score")
 
     out["merged_term_topk"] = merged_term_topk
@@ -1672,9 +1668,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         base = _deleted_base(spark, sf_dir)
         key = f"segdel_searcher::{sf_dir}"
         if key not in _CACHE:
-            _CACHE[key] = SegmentSearcher(
-                spark, SegmentIndex.open(base), mode="double", prune="block_max"
-            )
+            _CACHE[key] = SegmentSearcher(spark, SegmentIndex.open(base), mode="double")
         return _CACHE[key].topk(_T("dup"), k=10).select("doc_id", "score")
 
     out["search_after_delete"] = search_after_delete
@@ -1699,9 +1693,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             merge_segments(
                 spark, six, [s["segment_id"] for s in six.manifest()["segments"]]
             )
-            _CACHE[key] = SegmentSearcher(
-                spark, SegmentIndex.open(base), mode="double", prune="block_max"
-            )
+            _CACHE[key] = SegmentSearcher(spark, SegmentIndex.open(base), mode="double")
         return _CACHE[key].topk(_T("dup"), k=10).select("doc_id", "score")
 
     out["purged_term_topk"] = purged_term_topk

@@ -126,7 +126,7 @@ def main() -> int:
     gb_per_hour = gb / (index_sec / 3600.0) if index_sec > 0 else 0.0
 
     # ---- phase 2: batched ranked retrieval (ONE job) -------------------
-    searcher = SegmentSearcher(spark, six, mode="float32", prune="block_max")
+    searcher = SegmentSearcher(spark, six, mode="float32")
     sample_texts = [
         r["text"] for r in docs.orderBy("doc_id").limit(20).collect()
     ]

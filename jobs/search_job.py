@@ -3,7 +3,7 @@
 Usage:
     spark-submit --py-files dist/lucene_solr_spark.zip jobs/search_job.py \\
         --index /data/index --queries queries.txt [--k 10] \\
-        [--mode float32] [--prune block_max] [--output results_parquet]
+        [--mode float32] [--output results_parquet]
 
 ``queries.txt``: one classic-syntax query per line (term / +a +b / a OR b /
 "phrase" / prefix* / fuzzy~1); '#' comments. The WHOLE file runs as ONE
@@ -28,7 +28,6 @@ def main() -> int:
     ap.add_argument("--queries", required=True)
     ap.add_argument("--k", type=int, default=10)
     ap.add_argument("--mode", default="float32", choices=["float32", "double"])
-    ap.add_argument("--prune", default="block_max", choices=["block_max", "exhaustive"])
     ap.add_argument("--output", default=None, help="write results parquet here")
     args = ap.parse_args()
 
@@ -51,9 +50,7 @@ def main() -> int:
             if q is not None:
                 qset[f"q{i:05d}"] = q
 
-    searcher = SegmentSearcher(
-        spark, SegmentIndex.open(args.index), mode=args.mode, prune=args.prune
-    )
+    searcher = SegmentSearcher(spark, SegmentIndex.open(args.index), mode=args.mode)
     t0 = time.perf_counter()
     res = searcher.topk_batch(qset, k=args.k)
     if args.output:

@@ -10,7 +10,9 @@ user would switch to.
     eng2 = SearchEngine.open(spark, "/data/myindex")   # reopen anywhere
 
 Query strings use the classic syntax subset (plans.parser); results are
-Lucene-parity BM25 float32 rankings from the block-max segment kernel.
+Lucene-parity BM25 float32 rankings from the segment kernel
+(operators.topk), which skips the 2048-doc windows of a segment that
+block-max bounds show cannot reach the top k.
 """
 
 from __future__ import annotations
@@ -53,9 +55,7 @@ class SearchEngine:
     def __init__(self, spark: SparkSession, index: SegmentIndex):
         self.spark = spark
         self.index = index
-        self._searcher = SegmentSearcher(
-            spark, index, mode="float32", prune="block_max"
-        )
+        self._searcher = SegmentSearcher(spark, index, mode="float32")
 
     # ------------------------------------------------------------- build
     @classmethod
@@ -86,9 +86,7 @@ class SearchEngine:
     def refresh(self) -> None:
         """Reopen the latest committed snapshot (SearcherManager role)."""
         self.index = SegmentIndex.open(self.index.base)
-        self._searcher = SegmentSearcher(
-            self.spark, self.index, mode="float32", prune="block_max"
-        )
+        self._searcher = SegmentSearcher(self.spark, self.index, mode="float32")
 
     # ------------------------------------------------------------ search
     def search(

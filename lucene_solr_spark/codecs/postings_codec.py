@@ -302,7 +302,7 @@ def _pfor_encode(vals: np.ndarray) -> bytes:
     return bytes(out)
 
 
-def _pfor_decode(buf: memoryview, n: int) -> tuple[np.ndarray, int]:
+def _pfor_decode(buf: memoryview, n: int) -> np.ndarray:
     base_w, n_exc = buf[0], buf[1]
     nbytes = (n * base_w + 7) // 8
     vals = unpack_bits(bytes(buf[2 : 2 + nbytes]), n, base_w).astype(np.int64)
@@ -311,16 +311,18 @@ def _pfor_decode(buf: memoryview, n: int) -> tuple[np.ndarray, int]:
         idx = buf[pos]
         vals[idx] = int.from_bytes(bytes(buf[pos + 1 : pos + 5]), "little")
         pos += 5
-    return vals, pos
+    return vals
 
 
 # ------------------------------------------------------------- decoding
 def decode_blocks(
     enc: EncodedPostings, block_ids: np.ndarray | None = None
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Decode selected blocks (or all) → (doc_ids, tfs). Random block access
-    is the codec's skip-list replacement: callers prune blocks by
-    ``block_first/block_last/impacts`` before decoding."""
+    """Decode selected blocks (or all) → (doc_ids, tfs), in block order.
+    Random block access is the codec's skip-list replacement: a skipped
+    block costs only the walk past its header bytes, so the block-max
+    window selector (operators.topk) decodes just the blocks that overlap
+    the windows it evaluates."""
     if enc.singleton_doc >= 0:
         return (
             np.asarray([enc.singleton_doc], np.int64),
@@ -352,12 +354,11 @@ def decode_blocks(
                     bytes(doc_buf[dpos + 1 : dpos + 1 + dlen]), 127, w
                 ).astype(np.int64)
                 d = enc.block_first[i] + np.r_[0, np.cumsum(deltas)]
-        dpos += 1 + dlen
-        tf_vals, used = _pfor_decode(tf_buf[tpos:], BLOCK_SIZE)
-        tpos += used
-        if i in want:
             docs_out.append(d)
-            tfs_out.append(tf_vals + 1)
+            tfs_out.append(_pfor_decode(tf_buf[tpos:], BLOCK_SIZE) + 1)
+        dpos += 1 + dlen
+        # PFOR block length from its header: [width][n_exc][packed][exc*5]
+        tpos += 2 + (BLOCK_SIZE * tf_buf[tpos] + 7) // 8 + 5 * tf_buf[tpos + 1]
     # tail block
     tail_id = enc.n_full_blocks
     if enc.tail_blob and tail_id < n_blocks_total and tail_id in want:

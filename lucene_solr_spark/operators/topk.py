@@ -16,12 +16,18 @@ Kernel operators (reference semantics, vectorized):
   windowed BooleanScorer (``search/BooleanScorer.java:112-193``)
 - MUST_NOT / FILTER = setdiff / semi-membership (``ReqExclScorer``)
 - req+opt           = float32 add (``ReqOptSumScorer.java:260-277``)
-- block-max pruning (``prune="block_max"``): per-(term, block) max scores
-  derive from the stored impact frontiers (``search/MaxScoreCache.java:
-  58-97``); doc-space windows are processed in decreasing upper-bound
-  order and skipped once ub < θ (the minCompetitiveScore feedback,
-  ``search/WANDScorer.java:273-335``, ``TopScoreDocCollector.java:84-98``)
-  — windows with ub == θ are still processed so tie-breaks stay exact.
+- block-max pruning: a window selector in front of the one evaluator.
+  Per-(term, block) max scores derive from the stored impact frontiers
+  (``search/MaxScoreCache.java:58-97``) and bound each 2048-doc window of
+  a segment; windows run in decreasing bound order, and once k accepted
+  hits give θ, only windows with ub >= θ run (the minCompetitiveScore
+  feedback, ``search/WANDScorer.java:273-335``,
+  ``TopScoreDocCollector.java:84-98``) — windows with ub == θ still run so
+  tie-breaks stay exact. A window batch decodes only the posting blocks
+  that overlap it.
+- acceptDocs: liveDocs and the searchAfter cursor filter every batch's
+  hits before θ is taken, so deleted or already-paged docs never hold a
+  top-k slot.
 
 Two scoring modes (same contract as plans.df_executor):
   "float32" — Lucene-exact float32 arithmetic (rank-identity mode);
@@ -42,7 +48,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from lucene_solr_spark.codecs.postings_codec import EncodedPostings, decode_blocks
+from lucene_solr_spark.codecs.postings_codec import (
+    BLOCK_SIZE,
+    EncodedPostings,
+    decode_blocks,
+)
 from lucene_solr_spark.operators.segments import SegmentIndex, table_path
 from lucene_solr_spark.oracle import bm25
 from lucene_solr_spark.plans import ir
@@ -819,8 +829,10 @@ class _SegmentEval:
         self.cache_f32 = cache_f32
         self.inv_f64 = inv_f64
         self.sim = sim  # pluggable similarity: weight payload = list
+        # origin of the segment's _WINDOW-doc window grid
+        self.lo = int(seg_docs[0]) if len(seg_docs) else 0
         self._decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        self._gmax_cache: dict[str, np.ndarray] = {}
+        self._gmax_cache: dict[str, np.ndarray] = {}  # per-window, per term
         # per-(term, weight) scored-postings memo: benchmark query sets
         # reuse terms across many queries; scoring each term once per
         # segment amortizes the kernel across the whole batch
@@ -838,6 +850,10 @@ class _SegmentEval:
         return self._dict_arr
 
     # --- postings access ---
+    def _window_of(self, docs):
+        """Index of each doc's window in the segment's window grid."""
+        return (docs - self.lo) // _WINDOW
+
     def postings(self, term: str) -> tuple[np.ndarray, np.ndarray]:
         if term not in self._decoded:
             enc = self.term_enc.get(term)
@@ -849,6 +865,11 @@ class _SegmentEval:
             else:
                 self._decoded[term] = decode_blocks(enc, None)
         return self._decoded[term]
+
+    def posting_index(self, term: str, docs: np.ndarray) -> np.ndarray:
+        """Indexes of ``docs`` (all in ``term``'s postings) in the term's
+        full posting list — what its position offsets are keyed by."""
+        return np.searchsorted(self.postings(term)[0], docs)
 
     def norms_of(self, docs: np.ndarray) -> np.ndarray:
         idx = np.searchsorted(self.seg_docs, docs)
@@ -882,7 +903,7 @@ class _SegmentEval:
     def _out_dtype(self):
         return np.float32 if self.mode == "float32" else np.float64
 
-    # --- evaluation: returns (docs sorted, scores, match_counts|None) ---
+    # --- evaluation: returns (docs sorted, scores) ---
     def eval(self, plan: dict) -> tuple[np.ndarray, np.ndarray]:
         op = plan["op"]
         empty = (np.empty(0, np.int64), np.empty(0, self._out_dtype()))
@@ -972,7 +993,7 @@ class _SegmentEval:
             if not cand.size:
                 return empty
         cand, tfs = self._phrase_freqs(
-            terms, plan["offsets"], cand, doc_arrays, plan.get("slop", 0)
+            terms, plan["offsets"], cand, plan.get("slop", 0)
         )
         if not cand.size:
             return empty
@@ -983,25 +1004,21 @@ class _SegmentEval:
         terms: tuple,
         offsets: tuple,
         cand: np.ndarray,
-        doc_arrays: list,
         slop: int,
     ) -> tuple[np.ndarray, np.ndarray]:
         """Position verification for conjunction candidates → (docs⊆cand,
         freqs). Exact phrases use the FULLY VECTORIZED composite-key
         intersection ((candidate_index << 32 | adjusted_position) — no
         per-document Python loop); sloppy phrases run the shared
-        oracle.sloppy kernel per candidate (SloppyPhraseMatcher role).
-        ``doc_arrays`` are the FULL per-term doc arrays (position offsets
-        index the full posting list), while ``cand`` may be any subset —
-        the window-restricted block-max path reuses this directly."""
+        oracle.sloppy kernel per candidate (SloppyPhraseMatcher role)."""
         from lucene_solr_spark.codecs.postings_codec import decode_positions_batch
 
         empty = (np.empty(0, np.int64), np.empty(0, np.int64))
         if slop:
             flat = []
-            for ti, t in enumerate(terms):
+            for t in terms:
                 enc = self._enc_with_positions(t)
-                idxs = np.searchsorted(doc_arrays[ti], cand)
+                idxs = self.posting_index(t, cand)
                 pos, counts = decode_positions_batch(enc.pos_blob, enc.pos_off, idxs)
                 flat.append((pos, counts))
             if len(terms) == 2 and terms[0] != terms[1] and offsets[0] < offsets[1]:
@@ -1029,7 +1046,7 @@ class _SegmentEval:
         base_keys: np.ndarray | None = None
         for ti, t in enumerate(terms):
             enc = self._enc_with_positions(t)
-            idxs = np.searchsorted(doc_arrays[ti], cand)
+            idxs = self.posting_index(t, cand)
             pos, counts = decode_positions_batch(enc.pos_blob, enc.pos_off, idxs)
             ci = np.repeat(np.arange(len(cand), dtype=np.int64), counts)
             adj = pos - offsets[ti]
@@ -1066,7 +1083,7 @@ class _SegmentEval:
                     continue
                 enc = self._enc_with_positions(t)
                 pos, counts = decode_positions_batch(
-                    enc.pos_blob, enc.pos_off, np.arange(len(d))
+                    enc.pos_blob, enc.pos_off, self.posting_index(t, d)
                 )
                 lists = np.split(pos, np.cumsum(counts)[:-1])
                 for di, pl in zip(d.tolist(), lists):
@@ -1132,9 +1149,9 @@ class _SegmentEval:
             if not cand.size:
                 return empty
         pos_per_term = []
-        for ti, t in enumerate(terms):
+        for t in terms:
             enc = self._enc_with_positions(t)
-            idxs = np.searchsorted(doc_arrays[ti], cand)
+            idxs = self.posting_index(t, cand)
             pos, counts = decode_positions_batch(enc.pos_blob, enc.pos_off, idxs)
             pos_per_term.append(np.split(pos, np.cumsum(counts)[:-1]))
         freqs = np.empty(len(cand), np.float64)
@@ -1184,7 +1201,7 @@ class _SegmentEval:
                 present = _in_sorted(cand, d)
                 if present.any():
                     enc = self._enc_with_positions(t)
-                    idxs = np.searchsorted(d, cand[present])
+                    idxs = self.posting_index(t, cand[present])
                     pos, counts = decode_positions_batch(
                         enc.pos_blob, enc.pos_off, idxs
                     )
@@ -1285,238 +1302,177 @@ class _SegmentEval:
             out_scores = out_scores[keep]
         return out_docs, out_scores
 
-    # --- block-max pruned top-k (term/phrase components, req+opt bool) ---
-    def blockmax_topk(self, plan: dict, k: int) -> tuple[np.ndarray, np.ndarray]:
-        """Window-batched block-max pruning (WANDScorer/ImpactsDISI +
-        Boolean2ScorerSupplier.java:109-151 decision table). Supported
-        shapes (caller guarantees via _blockmax_eligible): a single
-        term/phrase, or a flat bool whose musts/shoulds are terms and
-        phrases (msm==0 when mixed, msm<=1 when should-only; no
-        filters/nots).
-
-        Each component (term or phrase) contributes a per-window score
-        upper bound; a phrase is bounded by its conjunction approximation
-        — min over its terms of the window's block-max factor — which is
-        sound because each phrase/sloppy occurrence consumes one
-        occurrence of every term, so phrase freq <= min term freq and the
-        BM25 factor is monotone in freq (PhraseQuery.java:71 two-phase
-        approximation). Required components additionally gate window
-        coverage: a window not covered by ALL musts scores 0."""
-        empty = (np.empty(0, np.int64), np.empty(0, self._out_dtype()))
-        if plan["op"] in ("term", "phrase"):
-            req_plans, opt_plans = [plan], []
-        else:
-            req_plans = list(plan["musts"])
-            opt_plans = list(plan["shoulds"])
-
-        # per component: window bound array + coverage over the global grid
-        comps: list[dict] = []
-        for cp, required in [(p, True) for p in req_plans] + [
-            (p, False) for p in opt_plans
-        ]:
-            terms = [cp["term"]] if cp["op"] == "term" else list(cp["terms"])
-            infos = []
-            for t in terms:
-                enc = self.term_enc.get(t)
-                if enc is None:
-                    infos = None
-                    break
-                infos.append((t,) + self._block_bounds(t, enc))
-            if infos is None:
-                if required:
-                    return empty
-                continue  # optional component absent from this segment
-            comps.append({"plan": cp, "infos": infos, "required": required})
-        if not comps:
-            return empty
-
-        lo = int(min(i[1][0] for c in comps for i in c["infos"]))
-        hi = int(max(i[2][-1] for c in comps for i in c["infos"]))
-        n_win = (hi - lo) // _WINDOW + 1
-        ub = np.zeros(n_win)
-        req_cover = np.zeros(n_win, np.int64)
-        n_req = sum(1 for c in comps if c["required"])
-        for c in comps:
-            w = c["plan"]["weight"]
-            comp_g: np.ndarray | None = None  # min over terms of win gmax
-            comp_cov: np.ndarray | None = None  # AND over terms of coverage
-            for _t, first, last, gmax in c["infos"]:
-                w0 = (first - lo) // _WINDOW
-                w1 = (last - lo) // _WINDOW
-                per_win_max = np.zeros(n_win + 1)
-                # a term's bound per window = max over its blocks there
-                for a, b_, m in zip(w0.tolist(), w1.tolist(), gmax.tolist()):
-                    seg = per_win_max[a : b_ + 1]
-                    np.maximum(seg, m, out=seg)
-                cover = np.zeros(n_win + 1, np.int64)
-                # np.add.at, NOT fancy-index +=: several blocks of one term
-                # can start in the same window and += drops the duplicate
-                # increments, leaving cumsum<0 and under-counting coverage
-                # (required windows would then be zeroed — dropped hits)
-                np.add.at(cover, w0, 1)
-                np.add.at(cover, w1 + 1, -1)
-                cov = np.cumsum(cover[:-1]) > 0
-                g = per_win_max[:n_win]
-                comp_g = g if comp_g is None else np.minimum(comp_g, g)
-                comp_cov = cov if comp_cov is None else (comp_cov & cov)
-            # the 1e-6 inflation keeps the bound sound vs float32 rounding;
-            # gmax caches per (term, block) across ALL queries (weight-free)
-            comp_ub = w * comp_g * (1.0 + 1e-6)
-            comp_ub[~comp_cov] = 0.0
-            ub += comp_ub
-            if c["required"]:
-                req_cover += comp_cov
-        if n_req:
-            ub[req_cover < n_req] = 0.0
-
-        dt = self._out_dtype()
-        order = np.argsort(-ub, kind="stable")
-        cand_docs: list[np.ndarray] = []
-        cand_scores: list[np.ndarray] = []
-        theta = -np.inf
-        n_cand = 0
-        for wi in order.tolist():
-            if ub[wi] < theta or ub[wi] <= 0.0:
-                break
-            w_lo = lo + wi * _WINDOW
-            w_hi = w_lo + _WINDOW - 1
-            # required components: window conjunction, float64 sum in
-            # clause order (bit-parity with _eval_bool's MUST chain)
-            docs: np.ndarray | None = None
-            sums: np.ndarray | None = None
-            dead = False
-            for c in comps:
-                if not c["required"]:
-                    continue
-                d, s = self._eval_comp_window(c["plan"], w_lo, w_hi)
-                if not d.size:
-                    dead = True
-                    break
-                if docs is None:
-                    docs, sums = d, s.astype(np.float64)
-                else:
-                    keep = _in_sorted(docs, d)
-                    docs, sums = docs[keep], sums[keep]
-                    if not docs.size:
-                        dead = True
-                        break
-                    sums = sums + s[
-                        _in_sorted(d, docs)
-                    ].astype(np.float64)
-            if dead:
-                continue
-            # optional components: window disjunction (_disjunction parity)
-            parts_d: list[np.ndarray] = []
-            parts_s: list[np.ndarray] = []
-            for c in comps:
-                if c["required"]:
-                    continue
-                d, s = self._eval_comp_window(c["plan"], w_lo, w_hi)
-                if d.size:
-                    parts_d.append(d)
-                    parts_s.append(s.astype(np.float64))
-            if docs is None:
-                if not parts_d:
-                    continue
-                alld = np.concatenate(parts_d)
-                od, inv = np.unique(alld, return_inverse=True)
-                osums = np.zeros(len(od))
-                np.add.at(osums, inv, np.concatenate(parts_s))
-                out_docs, out_scores = od, osums.astype(dt)
-            else:
-                out_docs = docs
-                out_scores = sums.astype(dt)
-                if parts_d:
-                    alld = np.concatenate(parts_d)
-                    od, inv = np.unique(alld, return_inverse=True)
-                    osums = np.zeros(len(od))
-                    np.add.at(osums, inv, np.concatenate(parts_s))
-                    osc = osums.astype(dt)
-                    pos = np.searchsorted(od, out_docs)
-                    has = (pos < len(od)) & (
-                        od[np.clip(pos, 0, max(len(od) - 1, 0))] == out_docs
-                    )
-                    out_scores = out_scores.copy()
-                    if self.mode == "float32":
-                        out_scores[has] = (
-                            out_scores[has] + osc[pos[has]]
-                        ).astype(np.float32)
-                    else:
-                        out_scores[has] = out_scores[has] + osc[pos[has]]
-            if not out_docs.size:
-                continue
-            cand_docs.append(out_docs)
-            cand_scores.append(out_scores)
-            n_cand += len(out_docs)
-            if n_cand >= k:
-                allsc = np.concatenate(cand_scores)
-                theta = float(np.partition(allsc, -k)[-k])
-        if not cand_docs:
-            return empty
-        return np.concatenate(cand_docs), np.concatenate(cand_scores)
-
-    def _eval_comp_window(
-        self, plan: dict, w_lo: int, w_hi: int
+    # --- block-max window selection ---
+    def top_hits(
+        self, plan: dict, k: int | None, accept
     ) -> tuple[np.ndarray, np.ndarray]:
-        """Exact (docs, scores) of one term/phrase component restricted to
-        a docID window — the per-window scorer of the generalized
-        block-max loop. Docs ascending; scores bit-identical to the
-        exhaustive evaluator's for the same docs."""
-        if plan["op"] == "term":
-            d, tf = self.postings(plan["term"])
-            a, b_ = np.searchsorted(d, (w_lo, w_hi + 1))
-            d = d[a:b_]
-            if not d.size:
-                return d, np.empty(0, self._out_dtype())
-            return d, self.score_tf_norm(
-                tf[a:b_], self.norms_of(d), plan["weight"]
-            )
-        terms = plan["terms"]
-        doc_arrays = []
-        cand: np.ndarray | None = None
-        for t in terms:
-            d, _tf = self.postings(t)
-            doc_arrays.append(d)
-            a, b_ = np.searchsorted(d, (w_lo, w_hi + 1))
-            dw = d[a:b_]
-            cand = dw if cand is None else cand[_in_sorted(cand, dw)]
-            if not cand.size:
-                return np.empty(0, np.int64), np.empty(0, self._out_dtype())
-        cand, tfs = self._phrase_freqs(
-            terms, plan["offsets"], cand, doc_arrays, plan.get("slop", 0)
-        )
-        if not cand.size:
-            return cand, np.empty(0, self._out_dtype())
-        return cand, self.score_tf_norm(tfs, self.norms_of(cand), plan["weight"])
+        """``accept``-ed hits of ``plan`` that hold its top ``k`` (every
+        accepted hit when ``k`` is None) — block-max as a dispatcher that
+        picks which doc windows ``eval`` runs over.
 
-    def _block_bounds(self, term: str, enc: EncodedPostings):
+        Windows run in decreasing ``window_ub`` order, in batches that
+        double until they yield k accepted hits; θ is then the k-th score,
+        and every remaining window with ub >= θ runs in one last batch.
+        A doc in a skipped window scores <= ub < θ, so it cannot enter
+        the top k; ub == θ windows run, so the (score desc, doc asc)
+        tie-break stays exact. A segment that fits one window, or a plan
+        with an unbounded window, runs whole on ``self`` (and its
+        cross-query term-score memo)."""
+        seg = self.seg_docs
+        if not k or not seg.size or seg[-1] - seg[0] < _WINDOW:
+            return accept(*self.eval(plan))
+        ub = self.window_ub(plan)
+        if np.isposinf(ub).any():
+            return accept(*self.eval(plan))
+        order = np.argsort(-ub, kind="stable")
+        order = order[ub[order] > -np.inf]
+        docs: list[np.ndarray] = [np.empty(0, np.int64)]
+        scores: list[np.ndarray] = [np.empty(0, self._out_dtype())]
+        n_hits, start, size = 0, 0, 1
+        while start < len(order) and n_hits < k:
+            d, s = accept(*_WindowView(self, order[start : start + size]).eval(plan))
+            docs.append(d)
+            scores.append(s)
+            n_hits, start, size = n_hits + len(d), start + size, 2 * size
+        if n_hits >= k:
+            theta = np.partition(np.concatenate(scores), -k)[-k]
+            rest = order[start:][ub[order[start:]] >= theta]
+            if rest.size:
+                d, s = accept(*_WindowView(self, rest).eval(plan))
+                docs.append(d)
+                scores.append(s)
+        return np.concatenate(docs), np.concatenate(scores)
+
+    def window_ub(self, plan: dict) -> np.ndarray:
+        """Upper bound of ``plan``'s score in each ``_WINDOW``-doc window of
+        the segment: ``-inf`` where it cannot match, ``+inf`` where the
+        bound is unknown (ops other than term/phrase/bool, or a pluggable
+        similarity, whose scores the BM25 impacts do not bound).
+
+        A term is weight × its window's block-max factor. A phrase is
+        bounded by its conjunction approximation, the min over its terms:
+        each (sloppy) occurrence consumes one occurrence of every term, so
+        phrase freq <= min term freq, and the BM25 factor is monotone in
+        freq (PhraseQuery.java:71 two-phase approximation). A bool sums
+        its MUSTs and SHOULDs; FILTER and MUST_NOT add 0, and the MUSTs
+        and FILTERs (else the SHOULDs' union) gate where it can match
+        (Boolean2ScorerSupplier.java:109-151)."""
+        n_win = int(self._window_of(self.seg_docs[-1])) + 1
+        op = plan["op"]
+        if op == "none":
+            return np.full(n_win, -np.inf)
+        if self.sim is not None or op not in ("term", "phrase", "bool"):
+            return np.full(n_win, np.inf)
+        if op != "bool":
+            terms = [plan["term"]] if op == "term" else plan["terms"]
+            g = np.min([self._window_gmax(t, n_win) for t in terms], axis=0)
+            # the 1e-6 inflation keeps the bound sound vs float32 rounding;
+            # a negative weight scores <= 0
+            w = max(plan["weight"], 0.0) * (1.0 + 1e-6)
+            return np.where(g > -np.inf, w * g, -np.inf)
+        musts = [self.window_ub(p) for p in plan["musts"]]
+        shoulds = [self.window_ub(p) for p in plan["shoulds"]]
+        gates = musts + [self.window_ub(p) for p in plan["filters"]]
+        total = np.zeros(n_win)
+        for u in musts + shoulds:
+            total += np.where(u > -np.inf, u, 0.0)
+        if gates:
+            cover = np.logical_and.reduce([u > -np.inf for u in gates])
+        else:
+            cover = np.logical_or.reduce([u > -np.inf for u in shoulds], axis=0)
+        return np.where(cover, total, -np.inf)
+
+    def _window_gmax(self, term: str, n_win: int) -> np.ndarray:
+        """Weight-free per-window max of ``term``'s block bound factor
+        (MaxScoreCache.java role), ``-inf`` in windows none of its blocks
+        reaches. The factor is the max over a block's impact frontier of
+        1 - 1/(1 + f*inv[n]) in float64; cached per term across queries."""
+        g = self._gmax_cache.get(term)
+        if g is None:
+            g = np.full(n_win, -np.inf)
+            enc = self.term_enc.get(term)
+            if enc is not None:
+                f = np.asarray(enc.imp_freq, np.float64)
+                n = np.asarray(enc.imp_norm, np.int64)
+                per_block = np.maximum.reduceat(
+                    1.0 - 1.0 / (1.0 + f * self.inv_f64[n]),
+                    np.asarray(enc.imp_off[:-1], np.int64),
+                )
+                first, last = self._block_range(enc)
+                w0 = self._window_of(first)
+                span = self._window_of(last) - w0 + 1
+                wins = np.repeat(w0 - np.cumsum(span) + span, span)
+                wins += np.arange(len(wins))
+                np.maximum.at(g, wins, np.repeat(per_block, span))
+            self._gmax_cache[term] = g
+        return g
+
+    def _block_range(self, enc: EncodedPostings) -> tuple[np.ndarray, np.ndarray]:
+        """(first, last) doc of each of ``enc``'s blocks. The tail block's
+        first doc is not stored: it starts after the last full block, and
+        no earlier than the segment's first doc."""
         if enc.singleton_doc >= 0:
             first = np.asarray([enc.singleton_doc], np.int64)
-            last = first
-        else:
-            n_blocks = len(enc.block_last)
-            first = np.empty(n_blocks, np.int64)
-            first[: enc.n_full_blocks] = enc.block_first
-            if n_blocks > enc.n_full_blocks:  # tail block
-                first[-1] = (
-                    enc.block_last[enc.n_full_blocks - 1] + 1
-                    if enc.n_full_blocks
-                    else 0
-                )
-            last = enc.block_last
-        # weight-free per-block bound factor from the impact frontier
-        # (MaxScoreCache.java role): gmax = max over frontier of
-        # 1 - 1/(1 + f*inv[n]) in float64, VECTORIZED over all blocks via
-        # np.maximum.reduceat on the flattened frontier arrays
-        if term not in self._gmax_cache:
-            f = np.asarray(enc.imp_freq, np.float64)
-            n = np.asarray(enc.imp_norm, np.int64)
-            g = 1.0 - 1.0 / (1.0 + f * self.inv_f64[n])
-            off = np.asarray(enc.imp_off[:-1], np.int64)
-            gmax = np.maximum.reduceat(g, off) if len(g) else np.empty(0)
-            self._gmax_cache[term] = gmax
-        return first, last, self._gmax_cache[term]
+            return first, first
+        first = np.empty(len(enc.block_last), np.int64)
+        first[: enc.n_full_blocks] = enc.block_first
+        if len(first) > enc.n_full_blocks:
+            first[-1] = (
+                enc.block_last[enc.n_full_blocks - 1] + 1
+                if enc.n_full_blocks
+                else self.lo
+            )
+        return first, enc.block_last
 
+
+class _WindowView(_SegmentEval):
+    """``ev`` restricted to some of its doc windows: the same evaluator,
+    over postings decoded only from the blocks that overlap the windows
+    (``decode_blocks``' ``block_ids``) and masked to them."""
+
+    def __init__(self, ev: _SegmentEval, windows: np.ndarray):
+        self._sel = np.zeros(int(ev._window_of(ev.seg_docs[-1])) + 1, bool)
+        self._sel[windows] = True
+        self._csel = np.r_[0, np.cumsum(self._sel)]
+        keep = self._sel[ev._window_of(ev.seg_docs)]
+        super().__init__(
+            ev.term_enc,
+            ev.seg_docs[keep],
+            ev.seg_norms[keep],
+            ev.mode,
+            ev.cache_f32,
+            ev.inv_f64,
+            ev.sim,
+        )
+        self.lo = ev.lo
+        self._ev = ev
+        self._gidx: dict[str, np.ndarray] = {}
+
+    def dict_arr(self):
+        return self._ev.dict_arr()
+
+    def postings(self, term: str) -> tuple[np.ndarray, np.ndarray]:
+        if term not in self._decoded:
+            docs = tfs = gidx = np.empty(0, np.int64)
+            enc = self.term_enc.get(term)
+            if enc is not None:
+                first, last = self._block_range(enc)
+                w0, w1 = self._window_of(first), self._window_of(last)
+                ids = np.nonzero(self._csel[w1 + 1] > self._csel[w0])[0]
+                if ids.size:
+                    docs, tfs = decode_blocks(enc, ids)
+                    size = np.minimum(enc.df - ids * BLOCK_SIZE, BLOCK_SIZE)
+                    gidx = np.repeat(ids * BLOCK_SIZE - np.cumsum(size) + size, size)
+                    gidx += np.arange(len(gidx))
+                    keep = self._sel[self._window_of(docs)]
+                    docs, tfs, gidx = docs[keep], tfs[keep], gidx[keep]
+            self._decoded[term] = (docs, tfs)
+            self._gidx[term] = gidx
+        return self._decoded[term]
+
+    def posting_index(self, term: str, docs: np.ndarray) -> np.ndarray:
+        d, _ = self.postings(term)
+        return self._gidx[term][np.searchsorted(d, docs)]
 
 
 # ---------------------------------------------------------------- searcher
@@ -1527,11 +1483,10 @@ class SegmentSearcher:
     mode: str = "float32"
     k1: float = bm25.K1_DEFAULT
     b: float = bm25.B_DEFAULT
-    prune: str = "exhaustive"  # or "block_max"
     #: pluggable similarity (functions.similarities.Similarity): scoring
-    #: runs sim.score in the segment tasks; block-max pruning is
-    #: disabled (impact bounds encode the BM25 shape) — evaluation is
-    #: exhaustive, exactly like the DF executor path
+    #: runs sim.score in the segment tasks; the impact bounds encode the
+    #: BM25 shape, so no window is bounded and every segment evaluates
+    #: whole, exactly like the DF executor path
     similarity: object | None = None
     _stats_cache: dict = field(default_factory=dict)
     #: scored multi-term expansions keyed by the frozen query dataclass
@@ -1784,7 +1739,6 @@ class SegmentSearcher:
         inv_f64 = 1.0 / (
             k1 * ((1.0 - b_) + b_ * bm25.LENGTH_TABLE_F32.astype(np.float64) / avgdl_f64)
         )
-        prune = self.prune
         sim = self.similarity
         kk = k
         # searchAfter cursor (IndexSearcher.searchAfter,
@@ -1818,47 +1772,24 @@ class SegmentSearcher:
                 inv_f64,
                 sim,
             )
-            has_live_mask = tombs is not None and tombs.size > 0
-            seg_docs_arr = ev.seg_docs
-            # a segment whose doc range fits ONE pruning window gains
-            # nothing from block-max (the window IS the segment) — the
-            # exhaustive evaluator with its cross-query term-score memo
-            # is strictly cheaper there
-            multi_window = (
-                len(seg_docs_arr) > 0
-                and (int(seg_docs_arr[-1]) - int(seg_docs_arr[0])) >= _WINDOW
-            )
-            out = []
-            for plan, qids in plan_groups:
-                if (
-                    kk is not None
-                    and prune == "block_max"
-                    and multi_window
-                    and sim is None
-                    and _blockmax_eligible(plan)
-                    # a tombstoned segment runs exhaustive: blockmax
-                    # returns exactly k candidates, and masking a deleted
-                    # doc OUT of those k would under-return live hits
-                    # (same reason a searchAfter cursor runs exhaustive)
-                    and not has_live_mask
-                    and after_s is None
-                ):
-                    docs, scores = ev.blockmax_topk(plan, kk)
-                else:
-                    docs, scores = ev.eval(plan)
-                if tombs is not None and tombs.size and docs.size:
-                    # liveDocs mask (Lucene90LiveDocsFormat role): deleted
-                    # docs never surface, BEFORE top-k truncation; stats
-                    # stay un-adjusted until a merge purges (Lucene parity)
-                    idx = np.searchsorted(tombs, docs)
-                    idxc = np.clip(idx, 0, len(tombs) - 1)
-                    keep = tombs[idxc] != docs
+
+            def accept(docs: np.ndarray, scores: np.ndarray):
+                """acceptDocs: live docs (the Lucene90LiveDocsFormat
+                mask; stats stay un-adjusted until a merge purges, as in
+                Lucene) that come strictly after the searchAfter cursor."""
+                if tombs is not None:
+                    keep = ~_in_sorted(docs, tombs)
                     docs, scores = docs[keep], scores[keep]
-                if after_s is not None and docs.size:
+                if after_s is not None:
                     keep = (scores < after_s) | (
                         (scores == after_s) & (docs > after_d)
                     )
                     docs, scores = docs[keep], scores[keep]
+                return docs, scores
+
+            out = []
+            for plan, qids in plan_groups:
+                docs, scores = ev.top_hits(plan, kk, accept)
                 if kk is not None and len(docs) > kk:
                     # per-segment top-k (TopScoreDocCollector heap role)
                     order = np.lexsort((docs, -scores.astype(np.float64)))[:kk]
@@ -1975,30 +1906,3 @@ def _in_sorted(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     idx = np.searchsorted(b, a)
     np.minimum(idx, len(b) - 1, out=idx)
     return b[idx] == a
-
-
-def _blockmax_leaf(plan: dict) -> bool:
-    """Leaves the pruned kernel can bound: terms, and (sloppy) phrases —
-    a phrase occurrence consumes one occurrence of each term so its freq
-    is <= min term freq and the term block-max bounds apply. Spans and
-    multi-phrases are NOT boundable this way (unordered span freq can
-    exceed min term freq; a multi-phrase slot's freq is the SUM over the
-    group's terms), so they stay exhaustive."""
-    return plan["op"] in ("term", "phrase")
-
-
-def _blockmax_eligible(plan: dict) -> bool:
-    """Boolean2ScorerSupplier.java:109-151 decision table, pruned subset:
-    single term/phrase, MUST-only, SHOULD-only (msm<=1), and mixed
-    MUST+SHOULD (ReqOptSum, msm==0). Filters/nots/msm>1 stay exhaustive."""
-    if _blockmax_leaf(plan):
-        return True
-    if plan["op"] != "bool":
-        return False
-    if plan["filters"] or plan["nots"] or plan["msm"] > 1:
-        return False
-    if not all(_blockmax_leaf(s) for s in plan["musts"] + plan["shoulds"]):
-        return False
-    if plan["musts"] and plan["shoulds"]:
-        return plan["msm"] == 0
-    return bool(plan["musts"] or plan["shoulds"])

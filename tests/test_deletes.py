@@ -80,26 +80,52 @@ def test_delete_masks_hits_and_preserves_scores(spark, base):
     assert after == [h for h in before if h[0] not in dead]
 
 
-def test_delete_blockmax_returns_full_k(spark, base):
-    """Regression: with block_max pruning, a deleted doc occupying a
-    top-k slot must not under-return — tombstoned segments fall back to
-    exhaustive eval before the mask."""
-    six = SegmentIndex.open(base)
-    s = SegmentSearcher(spark, six, mode="float32", prune="block_max")
-    before = _ranking(s, T("def"))
-    assert len(before) > 7
-    dead = {before[0][0], before[1][0]}
-    delete_by_ids(spark, six, sorted(dead))
+B = ir.BooleanQuery
+C = ir.BooleanClause
+O = ir.Occur
 
-    s2 = SegmentSearcher(
-        spark, SegmentIndex.open(base), mode="float32", prune="block_max"
-    )
-    got = [
-        (r["doc_id"], bits(r["score"]))
-        for r in s2.topk(T("def"), k=5).collect()
-    ]
-    assert got == [h for h in before if h[0] not in dead][:5]
-    assert len(got) == 5
+#: one query per shape the block-max window selector bounds
+BLOCKMAX_QUERIES = {
+    "term": T("def"),
+    "and": B((C(O.MUST, T("import")), C(O.MUST, T("return"))), 0),
+    "or": B((C(O.SHOULD, T("merge")), C(O.SHOULD, T("segment"))), 0),
+    "req_opt": B((C(O.MUST, T("def")), C(O.SHOULD, T("error"))), 0),
+    "phrase": ir.PhraseQuery(("x", "y")),
+    "sloppy": ir.PhraseQuery(("def", "foo"), slop=2),
+    "filter": B((C(O.MUST, T("error")), C(O.FILTER, T("import"))), 0),
+    "must_not": B((C(O.MUST, T("def")), C(O.MUST_NOT, T("class"))), 0),
+    "msm2": B(
+        tuple(C(O.SHOULD, T(t)) for t in ("error", "warning", "fixme")), 2
+    ),
+}
+
+
+def test_delete_blockmax_returns_full_k(
+    spark, multiwindow_base, multiwindow_oracle, tmp_path
+):
+    """Regression: a deleted doc occupying a top-k slot must not make a
+    pruned search under-return. On segments that span several block-max
+    windows, the liveDocs mask filters each window batch before the
+    selector takes its threshold, so every shape still returns a full k,
+    ranked exactly as the oracle ranks the live docs."""
+    base = str(tmp_path / "ix")
+    shutil.copytree(multiwindow_base, base)
+    ranked = {
+        name: multiwindow_oracle.search(q, k=200)
+        for name, q in BLOCKMAX_QUERIES.items()
+    }
+    dead = {sd.doc_id for hits in ranked.values() for sd in hits[:3]}
+    delete_by_ids(spark, SegmentIndex.open(base), sorted(dead))
+
+    s = SegmentSearcher(spark, SegmentIndex.open(base), mode="float32")
+    rows = s.topk_batch(BLOCKMAX_QUERIES, k=10).collect()
+    got: dict[str, list] = {}
+    for r in sorted(rows, key=lambda r: (-r["score"], r["doc_id"])):
+        got.setdefault(r["query_id"], []).append((r["doc_id"], bits(r["score"])))
+    for name, hits in ranked.items():
+        live = [(sd.doc_id, bits(sd.score)) for sd in hits if sd.doc_id not in dead]
+        assert got[name] == live[:10], name
+        assert len(got[name]) == 10, name
 
 
 def test_delete_by_query_and_compose(spark, base):

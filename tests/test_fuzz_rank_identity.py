@@ -71,9 +71,7 @@ def fuzz_setup(spark):
     build_segments(ix, base, segment_size=32)
     return (
         DFExecutor(ix, mode="float32"),
-        SegmentSearcher(
-            spark, SegmentIndex.open(base), mode="float32", prune="block_max"
-        ),
+        SegmentSearcher(spark, SegmentIndex.open(base), mode="float32"),
     )
 
 

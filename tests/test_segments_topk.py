@@ -1,9 +1,12 @@
 """Segment layer + kernel searcher tests.
 
-(a) rank identity: SegmentSearcher (float32, exhaustive) vs the single-node
-    oracle — exact (doc_id, float32 bits) top-k equality;
-(b) block-max pruned mode ≡ exhaustive mode (pruning must never change
-    results — the WANDScorer soundness contract);
+(a) rank identity: SegmentSearcher (float32) vs the single-node oracle —
+    exact (doc_id, float32 bits) top-k equality;
+(b) block-max window selection ≡ exhaustive evaluation (pruning must
+    never change results — the WANDScorer soundness contract): searches
+    on an index whose segments span several 2048-doc windows rank exactly
+    as the oracle, fresh, after deletes and on a searchAfter page, and
+    Spark-free checks pin the selector against ``_SegmentEval.eval``;
 (c) segment build determinism / manifest lineage / resume idempotency.
 """
 
@@ -13,10 +16,15 @@ import struct
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
+from lucene_solr_spark.codecs.postings_codec import encode_positions, encode_postings
+from lucene_solr_spark.operators import topk as topk_mod
 from lucene_solr_spark.operators.index_build import build_index
 from lucene_solr_spark.operators.segments import SegmentIndex, build_segments
-from lucene_solr_spark.operators.topk import SegmentSearcher
+from lucene_solr_spark.operators.topk import SegmentSearcher, _SegmentEval
+from lucene_solr_spark.oracle import bm25, smallfloat
 from lucene_solr_spark.plans import ir
 from lucene_solr_spark.sources.corpus import corpus_to_spark
 
@@ -116,25 +124,47 @@ def test_kernel_rank_identity(name, searcher, tiny_oracle):
     assert [(d, bits(s)) for d, s in got] == exp, f"{name}: {got} != {expected}"
 
 
-@pytest.mark.parametrize(
-    "name",
-    [
-        "term_head", "term_mid", "and2", "and3", "or2", "or3",
-        # generalized kernel (Boolean2ScorerSupplier table): phrases as
-        # components + mixed MUST+SHOULD (ReqOptSum) are pruned too
-        "phrase2", "phrase3", "sloppy2", "req_opt",
-        "phrase_and_term", "phrase_or_term", "req_opt_phrase", "boost",
-    ],
-)
-def test_blockmax_equals_exhaustive(name, spark, seg_base, tiny_oracle):
+#: shapes the window selector bounds (Boolean2ScorerSupplier table):
+#: terms and phrases as components, MUST-only, SHOULD-only, req+opt, and
+#: FILTER / MUST_NOT / msm=2, which add no score but narrow the matches
+BLOCKMAX_SHAPES = [
+    "term_head", "term_mid", "and2", "and3", "or2", "or3",
+    "phrase2", "phrase3", "sloppy2", "req_opt",
+    "phrase_and_term", "phrase_or_term", "req_opt_phrase", "boost",
+    "filter", "must_not", "msm2",
+]
+
+
+@pytest.fixture(scope="module")
+def mw_searcher(spark, multiwindow_base):
+    return SegmentSearcher(spark, SegmentIndex.open(multiwindow_base), mode="float32")
+
+
+@pytest.mark.parametrize("name", BLOCKMAX_SHAPES)
+def test_blockmax_equals_exhaustive(name, mw_searcher, multiwindow_oracle):
+    """On segments that span several windows, the pruned search returns
+    the oracle's exhaustive top-10: the same ids and float32 bits."""
     q = KERNEL_QUERIES[name]
-    ex = SegmentSearcher(spark, SegmentIndex.open(seg_base), mode="float32")
-    bm = SegmentSearcher(
-        spark, SegmentIndex.open(seg_base), mode="float32", prune="block_max"
-    )
-    a = [(r["doc_id"], bits(r["score"])) for r in ex.topk(q, k=10).collect()]
-    b = [(r["doc_id"], bits(r["score"])) for r in bm.topk(q, k=10).collect()]
-    assert a == b
+    got = [(r["doc_id"], bits(r["score"])) for r in mw_searcher.topk(q, k=10).collect()]
+    exp = [(sd.doc_id, bits(sd.score)) for sd in multiwindow_oracle.search(q, k=10)]
+    assert got == exp
+    assert len(got) == 10
+
+
+@pytest.mark.parametrize(
+    "name", ["term_head", "and2", "or3", "req_opt", "sloppy2", "filter", "msm2"]
+)
+def test_blockmax_search_after_page2(name, mw_searcher, multiwindow_oracle):
+    """Page 2 of a searchAfter cursor on a multi-window index: docs at or
+    before the cursor never hold a top-k slot, so the page is full and
+    equals the oracle's ranks 11-20."""
+    q = KERNEL_QUERIES[name]
+    exp = [(sd.doc_id, bits(sd.score)) for sd in multiwindow_oracle.search(q, k=20)]
+    last = multiwindow_oracle.search(q, k=10)[-1]
+    page2 = mw_searcher.topk(q, k=10, after=(float(last.score), last.doc_id))
+    got = [(r["doc_id"], bits(r["score"])) for r in page2.collect()]
+    assert got == exp[10:20]
+    assert len(got) == 10
 
 
 def test_blockmax_multiwindow_coverage_regression():
@@ -146,10 +176,6 @@ def test_blockmax_multiwindow_coverage_regression():
     silently dropping valid hits. This builds exactly that layout (dense
     term: 8 block-starts per window over a 4-window segment) and asserts
     block-max == exhaustive, including hits in the later windows."""
-    from lucene_solr_spark.codecs.postings_codec import encode_postings
-    from lucene_solr_spark.operators.topk import _SegmentEval
-    from lucene_solr_spark.oracle import bm25, smallfloat
-
     n_docs = 8192  # 4 windows of 2048
     seg_docs = np.arange(n_docs, dtype=np.int64)
     norm_byte = smallfloat.int_to_byte4(7)
@@ -196,7 +222,7 @@ def test_blockmax_multiwindow_coverage_regression():
             "msm": 0,
         }
         exhaustive = topk(*ev.eval(plan))
-        pruned = topk(*ev.blockmax_topk(plan, 10))
+        pruned = topk(*ev.top_hits(plan, 10, lambda d, s: (d, s)))
         assert pruned == exhaustive
         assert len(exhaustive) > 0
     # the conjunction has exactly the 4 sparse-term docs as hits
@@ -211,6 +237,220 @@ def test_blockmax_multiwindow_coverage_regression():
         }
     )
     assert d.tolist() == b_docs.tolist()
+
+
+_AVGDL = 40.0
+
+
+def _eval_over(seg_docs, seg_norms, postings, mode="float32"):
+    """``_SegmentEval`` over synthetic ``{term: (docs, tfs, positions)}``."""
+    enc = {}
+    for t, (docs, tfs, pos) in postings.items():
+        e = encode_postings(docs, tfs, seg_norms[np.searchsorted(seg_docs, docs)])
+        e.pos_blob, e.pos_off = encode_positions(pos)
+        enc[t] = e
+    cache_f32 = bm25.norm_inverse_cache(1.2, 0.75, np.float32(_AVGDL))
+    inv_f64 = 1.0 / (
+        1.2 * (0.25 + 0.75 * bm25.LENGTH_TABLE_F32.astype(np.float64) / _AVGDL)
+    )
+    return _SegmentEval(enc, seg_docs, seg_norms, mode, cache_f32, inv_f64)
+
+
+def _top(docs, scores, k):
+    order = np.lexsort((docs, -scores.astype(np.float64)))[:k]
+    return [(int(d), s.tobytes()) for d, s in zip(docs[order], scores[order])]
+
+
+def _term(ev, t):
+    n = len(ev.seg_docs)
+    return {
+        "op": "term",
+        "term": t,
+        "weight": float(bm25.term_weight(1.0, bm25.idf(ev.term_enc[t].df, n))),
+    }
+
+
+def _bool(musts=(), shoulds=(), filters=(), nots=(), msm=0):
+    return {
+        "op": "bool",
+        "musts": list(musts),
+        "filters": list(filters),
+        "shoulds": list(shoulds),
+        "nots": list(nots),
+        "msm": msm,
+    }
+
+
+def _phrase(ev, a, b, slop=0):
+    w = _term(ev, a)["weight"] + _term(ev, b)["weight"]
+    return {
+        "op": "phrase",
+        "terms": [a, b],
+        "offsets": [0, 1],
+        "slop": slop,
+        "weight": w,
+    }
+
+
+def test_tail_block_window_grid_high_base(monkeypatch):
+    """A segment whose doc ids start at 64 × 65536 gets a window grid over
+    its own 32 windows. A term with no full block (under 128 postings)
+    bounds its tail block from the segment's first doc: starting it at
+    doc 0 grew the grid with the doc-id base (2080 windows here). The
+    selector still returns the exhaustive top-k, and on a term whose
+    block maxima differ it evaluates only the windows that can win."""
+    base = 64 * 65536
+    seg_docs = base + np.arange(0, 32 * 2048, 4, dtype=np.int64)
+    seg_norms = np.full(len(seg_docs), smallfloat.int_to_byte4(40), np.int64)
+    rng = np.random.default_rng(7)
+
+    def postings(docs, tfs):
+        return docs, tfs, [np.arange(tf, dtype=np.int64) for tf in tfs.tolist()]
+
+    h = seg_docs[::2]  # two full blocks per window; tf 8 in windows 3, 17
+    h_tf = np.where(np.isin((h - base) // 2048, [3, 17]), 8, 1)
+    s = np.sort(rng.choice(seg_docs, 100, replace=False))
+    t = np.sort(rng.choice(seg_docs, 60, replace=False))
+    ev = _eval_over(
+        seg_docs,
+        seg_norms,
+        {
+            "h": postings(h, h_tf),
+            "s": postings(s, rng.integers(1, 4, len(s))),
+            "t": postings(t, rng.integers(1, 4, len(t))),
+        },
+    )
+    for enc in ev.term_enc.values():
+        assert ev._block_range(enc)[0].min() >= base
+    assert ev.term_enc["s"].n_full_blocks == 0
+
+    evaluated: list[int] = []
+
+    class RecordingView(topk_mod._WindowView):
+        def __init__(self, ev, windows):
+            evaluated.extend(np.asarray(windows).tolist())
+            super().__init__(ev, windows)
+
+    monkeypatch.setattr(topk_mod, "_WindowView", RecordingView)
+    plans = {
+        "h": _term(ev, "h"),
+        "s": _term(ev, "s"),
+        "s_or_t": _bool(shoulds=[_term(ev, "s"), _term(ev, "t")]),
+        "h_and_s": _bool(musts=[_term(ev, "h"), _term(ev, "s")]),
+    }
+    for name, plan in plans.items():
+        evaluated.clear()
+        assert len(ev.window_ub(plan)) == 32, name
+        got = _top(*ev.top_hits(plan, 10, lambda d, s: (d, s)), 10)
+        assert got == _top(*ev.eval(plan), 10), name
+        assert len(got) == 10 and evaluated, name
+    evaluated.clear()
+    ev.top_hits(plans["h"], 10, lambda d, s: (d, s))
+    assert sorted(evaluated) == [3, 17]
+
+
+@st.composite
+def _selector_cases(draw):
+    """A random multi-window segment with positions, a plan, tombstones,
+    a searchAfter cursor, k and a scoring mode."""
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    base = draw(st.sampled_from([0, 3000, 64 * 65536]))
+    n_win = draw(st.integers(2, 8))
+    seg_docs = base + np.flatnonzero(
+        rng.random(n_win * 2048) < draw(st.sampled_from([0.25, 0.5, 1.0]))
+    )
+    # windows differ in doc lengths and tf caps, so block maxima differ
+    # and the selector has windows to skip
+    win = (seg_docs - base) // 2048
+    seg_norms = rng.choice([10, 40, 70, 110], n_win)[win]
+    seg_norms += rng.integers(0, 10, len(win))
+    tf_cap = rng.choice([1, 2, 4, 8], n_win)
+    postings = {}
+    for t in "abcd":
+        p = draw(st.sampled_from([0.002, 0.02, 0.1, 0.3, 0.6]))
+        sel = rng.random(len(seg_docs)) < p
+        if not sel.any():
+            sel[0] = True
+        docs = seg_docs[sel]
+        tfs = rng.integers(0, tf_cap[win[sel]]) + 1
+        pos = [np.sort(rng.choice(12, tf, replace=False)) for tf in tfs.tolist()]
+        postings[t] = (docs, tfs, pos)
+    mode = draw(st.sampled_from(["float32", "double"]))
+    ev = _eval_over(seg_docs, seg_norms, postings, mode)
+    a, b, c, d = draw(st.permutations("abcd"))
+    T = lambda t: _term(ev, t)  # noqa: E731
+    shapes = {
+        "term": T(a),
+        "and": _bool(musts=[T(a), T(b)]),
+        "or": _bool(shoulds=[T(a), T(b), T(c)]),
+        "req_opt": _bool(musts=[T(a)], shoulds=[T(b)]),
+        "phrase": _phrase(ev, a, b),
+        "sloppy": _phrase(ev, a, b, slop=2),
+        "filter": _bool(musts=[T(a)], filters=[T(b)]),
+        "must_not": _bool(musts=[T(a)], nots=[T(b), _phrase(ev, c, d)]),
+        "msm2": _bool(shoulds=[T(a), T(b), T(c)], msm=2),
+        "nested": _bool(musts=[_bool(shoulds=[T(b), T(c)]), T(a)], shoulds=[T(d)]),
+        "phrase_req_opt": _bool(musts=[_phrase(ev, a, b, slop=1)], shoulds=[T(c)]),
+        # FILTER / MUST_NOT clauses the selector cannot bound gate
+        # nothing, and run as they are on each window view
+        "filter_prefix": _bool(
+            shoulds=[T(a), T(c)],
+            filters=[{"op": "dict_pred", "score": 1.0, "kind": "prefix", "prefix": b}],
+        ),
+        "filter_spans": _bool(
+            musts=[T(a)],
+            filters=[
+                {
+                    "op": "span_near",
+                    "terms": [a, b],
+                    "slop": 1,
+                    "in_order": True,
+                    "weight": 1.0,
+                }
+            ],
+            nots=[
+                {
+                    "op": "multi_phrase",
+                    "groups": [[c, d], [a]],
+                    "offsets": [0, 1],
+                    "slop": 0,
+                    "weight": 1.0,
+                }
+            ],
+        ),
+        # an unbounded scoring clause: the segment is evaluated whole
+        "unbounded": _bool(shoulds=[T(a), {"op": "const", "sub": T(b), "score": 1.0}]),
+    }
+    plan = shapes[draw(st.sampled_from(sorted(shapes)))]
+    n_dead = int(len(seg_docs) * draw(st.sampled_from([0, 0.1, 0.5])))
+    tombs = np.sort(rng.choice(seg_docs, n_dead, replace=False))
+    # the cursor is a live hit at a drawn rank, when there is one
+    docs, scores = ev.eval(plan)
+    live = ~np.isin(docs, tombs)
+    docs, scores = docs[live], scores[live]
+    order = np.lexsort((docs, -scores.astype(np.float64)))
+    rank = draw(st.one_of(st.none(), st.integers(0, 40)))
+    after = None
+    if rank is not None and rank < len(order):
+        after = (scores[order[rank]], int(docs[order[rank]]))
+    return ev, plan, tombs, after, draw(st.integers(1, 25))
+
+
+@settings(max_examples=100, deadline=None)
+@given(_selector_cases())
+def test_window_selector_matches_exhaustive(case):
+    """The block-max window selector returns exactly the top-k of
+    ``accept(ev.eval(plan))`` — the same ids and score bits — over random
+    multi-window segments, plan shapes, tombstone sets and cursors."""
+    ev, plan, tombs, after, k = case
+
+    def accept(docs, scores):
+        keep = ~np.isin(docs, tombs)
+        if after is not None:
+            keep &= (scores < after[0]) | ((scores == after[0]) & (docs > after[1]))
+        return docs[keep], scores[keep]
+
+    assert _top(*ev.top_hits(plan, k, accept), k) == _top(*accept(*ev.eval(plan)), k)
 
 
 def test_batched_queries_one_job(searcher, tiny_oracle):

@@ -168,7 +168,7 @@ def main() -> int:
         # wikimedium mix — the round-5 re-evidence run exercises the new
         # scored-expansion kernel path, not just term/AND/OR.
         heavy = os.environ.get("SCALING_HEAVY", "0") == "1"
-        searcher = SegmentSearcher(spark, six, mode="float32", prune="block_max")
+        searcher = SegmentSearcher(spark, six, mode="float32")
         sample = [r["content"] for r in corpus.limit(20).collect()]
         qset = generate_queryset(
             spark,
