@@ -24,7 +24,9 @@ Kernel operators (reference semantics, vectorized):
   feedback, ``search/WANDScorer.java:273-335``,
   ``TopScoreDocCollector.java:84-98``) — windows with ub == θ still run so
   tie-breaks stay exact. A window batch decodes only the posting blocks
-  that overlap it.
+  that overlap it, through the segment's per-block decode memo. Skipping
+  saves only decoding, so a segment of at most two windows, or a plan
+  whose blocks the memo already holds, is evaluated whole.
 - acceptDocs: liveDocs and the searchAfter cursor filter every batch's
   hits before θ is taken, so deleted or already-paged docs never hold a
   top-k slot.
@@ -829,14 +831,19 @@ class _SegmentEval:
         self.cache_f32 = cache_f32
         self.inv_f64 = inv_f64
         self.sim = sim  # pluggable similarity: weight payload = list
-        # origin of the segment's _WINDOW-doc window grid
+        # origin and size of the segment's _WINDOW-doc window grid
         self.lo = int(seg_docs[0]) if len(seg_docs) else 0
-        self._decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+        self.n_win = int(seg_docs[-1] - self.lo) // _WINDOW + 1 if len(seg_docs) else 0
+        # per-term (docs, tfs) and per-(term, weight) (scores,) memos over
+        # the term's full posting list, filled block by block (_fill): a
+        # block is decoded, and scored per weight, once per segment,
+        # whichever window batch or whole-segment query asks first.
+        # Benchmark query sets reuse terms across many queries, so this
+        # amortizes the kernel across the whole batch
+        self._blocks: dict = {}
+        self._scores: dict = {}
         self._gmax_cache: dict[str, np.ndarray] = {}  # per-window, per term
-        # per-(term, weight) scored-postings memo: benchmark query sets
-        # reuse terms across many queries; scoring each term once per
-        # segment amortizes the kernel across the whole batch
-        self._term_score_cache: dict[tuple[str, float], tuple[np.ndarray, np.ndarray]] = {}
+        self._bwin: dict[str, tuple[np.ndarray, np.ndarray]] = {}
         self._dict_arr = None  # lazy Arrow term-dictionary array
 
     def dict_arr(self):
@@ -855,21 +862,62 @@ class _SegmentEval:
         return (docs - self.lo) // _WINDOW
 
     def postings(self, term: str) -> tuple[np.ndarray, np.ndarray]:
-        if term not in self._decoded:
-            enc = self.term_enc.get(term)
-            if enc is None:
-                self._decoded[term] = (
-                    np.empty(0, np.int64),
-                    np.empty(0, np.int64),
-                )
-            else:
-                self._decoded[term] = decode_blocks(enc, None)
-        return self._decoded[term]
+        if term not in self.term_enc:
+            return np.empty(0, np.int64), np.empty(0, np.int64)
+        return self._decode(term, None)
+
+    def _decode(self, term: str, ids) -> tuple[np.ndarray, np.ndarray]:
+        """``term``'s (docs, tfs), decoded at least at blocks ``ids``."""
+        enc = self.term_enc[term]
+        return self._fill(
+            self._blocks, term, enc, ids, lambda need, at: decode_blocks(enc, need)
+        )
+
+    def _scored(self, term: str, weight, ids) -> np.ndarray:
+        """``term``'s scores under ``weight``, at least at blocks ``ids``."""
+        enc = self.term_enc[term]
+
+        def score(need, at):
+            docs, tfs = self._decode(term, need)
+            return (self.score_tf_norm(tfs[at], self.norms_of(docs[at]), weight),)
+
+        key = (term, tuple(weight) if isinstance(weight, list) else weight)
+        return self._fill(self._scores, key, enc, ids, score)[0]
+
+    @staticmethod
+    def _fill(memo: dict, key, enc: EncodedPostings, ids, compute) -> tuple:
+        """Arrays over ``enc``'s full posting list, memoized in ``memo``
+        under ``key`` and valid at least at blocks ``ids`` (every block
+        when None). ``compute(need, at)`` gives their values at the
+        postings ``at`` of blocks ``need``; a whole-list fill passes
+        (None, slice(None)) and keeps the arrays it returns. A complete
+        entry holds None in place of its filled-block mask."""
+        hit = memo.get(key)
+        if hit is not None and hit[1] is None:
+            return hit[0]
+        if hit is None and ids is None:
+            memo[key] = compute(None, slice(None)), None
+            return memo[key][0]
+        arrays, done = hit or (None, np.zeros(len(enc.block_last), bool))
+        need = np.flatnonzero(~done) if ids is None else ids[~done[ids]]
+        if need.size:
+            at = _posting_slots(enc, need)
+            part = compute(need, at)
+            if arrays is None:
+                arrays = tuple(np.empty(enc.df, p.dtype) for p in part)
+            for a, p in zip(arrays, part):
+                a[at] = p
+        done[need] = True
+        memo[key] = arrays, None if done.all() else done
+        return arrays
 
     def posting_index(self, term: str, docs: np.ndarray) -> np.ndarray:
         """Indexes of ``docs`` (all in ``term``'s postings) in the term's
         full posting list — what its position offsets are keyed by."""
         return np.searchsorted(self.postings(term)[0], docs)
+
+    def _term_hits(self, term: str, weight) -> tuple[np.ndarray, np.ndarray]:
+        return self.postings(term)[0], self._scored(term, weight, None)
 
     def norms_of(self, docs: np.ndarray) -> np.ndarray:
         idx = np.searchsorted(self.seg_docs, docs)
@@ -910,18 +958,9 @@ class _SegmentEval:
         if op == "none":
             return empty
         if op == "term":
-            w = plan["weight"]
-            key = (plan["term"], tuple(w) if isinstance(w, list) else w)
-            hit = self._term_score_cache.get(key)
-            if hit is not None:
-                return hit
-            docs, tfs = self.postings(plan["term"])
-            if not docs.size:
-                self._term_score_cache[key] = empty
+            if plan["term"] not in self.term_enc:
                 return empty
-            out = (docs, self.score_tf_norm(tfs, self.norms_of(docs), plan["weight"]))
-            self._term_score_cache[key] = out
-            return out
+            return self._term_hits(plan["term"], plan["weight"])
         if op == "synonym":
             parts = [self.postings(t) for t in plan["terms"]]
             alldocs = np.concatenate([p[0] for p in parts])
@@ -1315,11 +1354,16 @@ class _SegmentEval:
         and every remaining window with ub >= θ runs in one last batch.
         A doc in a skipped window scores <= ub < θ, so it cannot enter
         the top k; ub == θ windows run, so the (score desc, doc asc)
-        tie-break stays exact. A segment that fits one window, or a plan
-        with an unbounded window, runs whole on ``self`` (and its
-        cross-query term-score memo)."""
-        seg = self.seg_docs
-        if not k or not seg.size or seg[-1] - seg[0] < _WINDOW:
+        tie-break stays exact.
+
+        Skipping a window saves decoding its blocks, at the cost of a
+        second batch. So the plan runs whole on ``self`` (and its
+        cross-query memos) when that cannot pay: a segment of at most two
+        windows, a plan whose blocks the memo already holds, or a plan
+        with an unbounded window. When θ leaves no window to skip, the
+        last batch is the whole segment too: the memo already holds the
+        blocks the first batches decoded."""
+        if not k or self.n_win < 3 or not self._undecoded(plan):
             return accept(*self.eval(plan))
         ub = self.window_ub(plan)
         if np.isposinf(ub).any():
@@ -1337,6 +1381,8 @@ class _SegmentEval:
         if n_hits >= k:
             theta = np.partition(np.concatenate(scores), -k)[-k]
             rest = order[start:][ub[order[start:]] >= theta]
+            if start + rest.size == self.n_win:
+                return accept(*self.eval(plan))
             if rest.size:
                 d, s = accept(*_WindowView(self, rest).eval(plan))
                 docs.append(d)
@@ -1357,7 +1403,7 @@ class _SegmentEval:
         its MUSTs and SHOULDs; FILTER and MUST_NOT add 0, and the MUSTs
         and FILTERs (else the SHOULDs' union) gate where it can match
         (Boolean2ScorerSupplier.java:109-151)."""
-        n_win = int(self._window_of(self.seg_docs[-1])) + 1
+        n_win = self.n_win
         op = plan["op"]
         if op == "none":
             return np.full(n_win, -np.inf)
@@ -1398,14 +1444,35 @@ class _SegmentEval:
                     1.0 - 1.0 / (1.0 + f * self.inv_f64[n]),
                     np.asarray(enc.imp_off[:-1], np.int64),
                 )
-                first, last = self._block_range(enc)
-                w0 = self._window_of(first)
-                span = self._window_of(last) - w0 + 1
+                w0, w1 = self._block_windows(term)
+                span = w1 - w0 + 1
                 wins = np.repeat(w0 - np.cumsum(span) + span, span)
                 wins += np.arange(len(wins))
                 np.maximum.at(g, wins, np.repeat(per_block, span))
             self._gmax_cache[term] = g
         return g
+
+    def _undecoded(self, plan: dict) -> bool:
+        """Whether a block of one of ``plan``'s terms is not yet decoded."""
+        if plan["op"] == "bool":
+            return any(
+                self._undecoded(p)
+                for c in ("musts", "filters", "shoulds", "nots")
+                for p in plan[c]
+            )
+        terms = [plan["term"]] if plan["op"] == "term" else plan.get("terms", ())
+        memo = self._blocks
+        return any(
+            t in self.term_enc and (t not in memo or memo[t][1] is not None)
+            for t in terms
+        )
+
+    def _block_windows(self, term: str) -> tuple[np.ndarray, np.ndarray]:
+        """First and last window of each of ``term``'s blocks."""
+        if term not in self._bwin:
+            first, last = self._block_range(self.term_enc[term])
+            self._bwin[term] = self._window_of(first), self._window_of(last)
+        return self._bwin[term]
 
     def _block_range(self, enc: EncodedPostings) -> tuple[np.ndarray, np.ndarray]:
         """(first, last) doc of each of ``enc``'s blocks. The tail block's
@@ -1427,11 +1494,12 @@ class _SegmentEval:
 
 class _WindowView(_SegmentEval):
     """``ev`` restricted to some of its doc windows: the same evaluator,
-    over postings decoded only from the blocks that overlap the windows
-    (``decode_blocks``' ``block_ids``) and masked to them."""
+    over the postings of the blocks that overlap the windows, masked to
+    them. Blocks are decoded and scored through ``ev``'s memos, so a
+    block shared by two batches, or by two queries, is decoded once."""
 
     def __init__(self, ev: _SegmentEval, windows: np.ndarray):
-        self._sel = np.zeros(int(ev._window_of(ev.seg_docs[-1])) + 1, bool)
+        self._sel = np.zeros(ev.n_win, bool)
         self._sel[windows] = True
         self._csel = np.r_[0, np.cumsum(self._sel)]
         keep = self._sel[ev._window_of(ev.seg_docs)]
@@ -1444,35 +1512,50 @@ class _WindowView(_SegmentEval):
             ev.inv_f64,
             ev.sim,
         )
-        self.lo = ev.lo
+        self.lo, self.n_win = ev.lo, ev.n_win
         self._ev = ev
-        self._gidx: dict[str, np.ndarray] = {}
+        # term -> (docs, tfs, ids of the blocks that overlap the windows,
+        # full-list index of each posting)
+        self._view: dict[str, tuple[np.ndarray, ...]] = {}
 
     def dict_arr(self):
         return self._ev.dict_arr()
 
-    def postings(self, term: str) -> tuple[np.ndarray, np.ndarray]:
-        if term not in self._decoded:
-            docs = tfs = gidx = np.empty(0, np.int64)
+    def _slice(self, term: str) -> tuple[np.ndarray, ...]:
+        if term not in self._view:
+            docs = tfs = ids = at = np.empty(0, np.int64)
             enc = self.term_enc.get(term)
             if enc is not None:
-                first, last = self._block_range(enc)
-                w0, w1 = self._window_of(first), self._window_of(last)
-                ids = np.nonzero(self._csel[w1 + 1] > self._csel[w0])[0]
+                w0, w1 = self._ev._block_windows(term)
+                ids = np.flatnonzero(self._csel[w1 + 1] > self._csel[w0])
                 if ids.size:
-                    docs, tfs = decode_blocks(enc, ids)
-                    size = np.minimum(enc.df - ids * BLOCK_SIZE, BLOCK_SIZE)
-                    gidx = np.repeat(ids * BLOCK_SIZE - np.cumsum(size) + size, size)
-                    gidx += np.arange(len(gidx))
+                    at = _posting_slots(enc, ids)
+                    docs, tfs = (a[at] for a in self._ev._decode(term, ids))
                     keep = self._sel[self._window_of(docs)]
-                    docs, tfs, gidx = docs[keep], tfs[keep], gidx[keep]
-            self._decoded[term] = (docs, tfs)
-            self._gidx[term] = gidx
-        return self._decoded[term]
+                    docs, tfs, at = docs[keep], tfs[keep], at[keep]
+            self._view[term] = docs, tfs, ids, at
+        return self._view[term]
+
+    def postings(self, term: str) -> tuple[np.ndarray, np.ndarray]:
+        return self._slice(term)[:2]
 
     def posting_index(self, term: str, docs: np.ndarray) -> np.ndarray:
-        d, _ = self.postings(term)
-        return self._gidx[term][np.searchsorted(d, docs)]
+        d, _, _, at = self._slice(term)
+        return at[np.searchsorted(d, docs)]
+
+    def _term_hits(self, term: str, weight) -> tuple[np.ndarray, np.ndarray]:
+        docs, _, ids, at = self._slice(term)
+        if not docs.size:
+            return docs, np.empty(0, self._out_dtype())
+        return docs, self._ev._scored(term, weight, ids)[at]
+
+
+def _posting_slots(enc: EncodedPostings, ids: np.ndarray) -> np.ndarray:
+    """Indexes, in ``enc``'s full posting list, of the postings of its
+    blocks ``ids`` (ascending)."""
+    size = np.minimum(enc.df - ids * BLOCK_SIZE, BLOCK_SIZE)
+    at = np.repeat(ids * BLOCK_SIZE - np.cumsum(size) + size, size)
+    return at + np.arange(len(at))
 
 
 # ---------------------------------------------------------------- searcher

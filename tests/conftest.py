@@ -70,11 +70,12 @@ def multiwindow_base(spark, multiwindow_rows, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("multiwindow"))
     build_segments(ix, base, segment_size=MW_SEGMENT_SIZE)
     # the precondition that keeps the tests on this fixture from going
-    # vacuous: every segment spans >= 2 windows, and head terms have
-    # several full 128-posting blocks (block bounds vary inside a term)
+    # vacuous: every segment spans >= 3 windows (the selector evaluates a
+    # segment of two windows whole), and head terms have several full
+    # 128-posting blocks (block bounds vary inside a term)
     segs = SegmentIndex.open(base).manifest()["segments"]
     assert len(segs) == 2
-    assert all(s["max_doc"] - s["min_doc"] >= _WINDOW for s in segs)
+    assert all(s["max_doc"] - s["min_doc"] >= 2 * _WINDOW for s in segs)
     blocks = pq.read_table(f"{base}/segments", columns=["n_full_blocks"])
     assert max(blocks["n_full_blocks"].to_pylist()) >= 2
     return base

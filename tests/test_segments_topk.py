@@ -222,7 +222,7 @@ def test_blockmax_multiwindow_coverage_regression():
             "msm": 0,
         }
         exhaustive = topk(*ev.eval(plan))
-        pruned = topk(*ev.top_hits(plan, 10, lambda d, s: (d, s)))
+        pruned = topk(*_fresh(ev).top_hits(plan, 10, lambda d, s: (d, s)))
         assert pruned == exhaustive
         assert len(exhaustive) > 0
     # the conjunction has exactly the 4 sparse-term docs as hits
@@ -254,6 +254,14 @@ def _eval_over(seg_docs, seg_norms, postings, mode="float32"):
         1.2 * (0.25 + 0.75 * bm25.LENGTH_TABLE_F32.astype(np.float64) / _AVGDL)
     )
     return _SegmentEval(enc, seg_docs, seg_norms, mode, cache_f32, inv_f64)
+
+
+def _fresh(ev):
+    """A new evaluator over ``ev``'s segment with empty memos: the window
+    selector runs only on plans whose blocks are not all decoded yet."""
+    return _SegmentEval(
+        ev.term_enc, ev.seg_docs, ev.seg_norms, ev.mode, ev.cache_f32, ev.inv_f64
+    )
 
 
 def _top(docs, scores, k):
@@ -341,11 +349,11 @@ def test_tail_block_window_grid_high_base(monkeypatch):
     for name, plan in plans.items():
         evaluated.clear()
         assert len(ev.window_ub(plan)) == 32, name
-        got = _top(*ev.top_hits(plan, 10, lambda d, s: (d, s)), 10)
+        got = _top(*_fresh(ev).top_hits(plan, 10, lambda d, s: (d, s)), 10)
         assert got == _top(*ev.eval(plan), 10), name
         assert len(got) == 10 and evaluated, name
     evaluated.clear()
-    ev.top_hits(plans["h"], 10, lambda d, s: (d, s))
+    _fresh(ev).top_hits(plans["h"], 10, lambda d, s: (d, s))
     assert sorted(evaluated) == [3, 17]
 
 
@@ -355,7 +363,7 @@ def _selector_cases(draw):
     a searchAfter cursor, k and a scoring mode."""
     rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
     base = draw(st.sampled_from([0, 3000, 64 * 65536]))
-    n_win = draw(st.integers(2, 8))
+    n_win = draw(st.integers(3, 8))
     seg_docs = base + np.flatnonzero(
         rng.random(n_win * 2048) < draw(st.sampled_from([0.25, 0.5, 1.0]))
     )
@@ -450,7 +458,75 @@ def test_window_selector_matches_exhaustive(case):
             keep &= (scores < after[0]) | ((scores == after[0]) & (docs > after[1]))
         return docs[keep], scores[keep]
 
-    assert _top(*ev.top_hits(plan, k, accept), k) == _top(*accept(*ev.eval(plan)), k)
+    got = _top(*_fresh(ev).top_hits(plan, k, accept), k)
+    assert got == _top(*accept(*ev.eval(plan)), k)
+
+
+def test_selector_shares_decoded_blocks(monkeypatch):
+    """Window batches and queries that share a term share its decoded
+    blocks: over a batch of plans on one evaluator, no block is decoded
+    twice. A plan whose blocks the memo already holds, and a segment of
+    two windows, run whole, with no window view."""
+    seg_docs = np.arange(0, 12 * 2048, 2, dtype=np.int64)
+    seg_norms = np.full(len(seg_docs), smallfloat.int_to_byte4(40), np.int64)
+    rng = np.random.default_rng(3)
+
+    def postings(docs, tfs):
+        return docs, tfs, [np.arange(tf, dtype=np.int64) for tf in tfs.tolist()]
+
+    h = seg_docs[::3]
+    h_tf = np.where(np.isin(h // 2048, [2, 9]), 8, 1)
+    s = np.sort(rng.choice(seg_docs, 900, replace=False))
+    ev = _eval_over(
+        seg_docs,
+        seg_norms,
+        {"h": postings(h, h_tf), "s": postings(s, rng.integers(1, 4, len(s)))},
+    )
+    plans = [
+        _term(ev, "h"),
+        _bool(musts=[_term(ev, "h"), _term(ev, "s")]),
+        _bool(shoulds=[_term(ev, "s"), _term(ev, "h")]),
+        _phrase(ev, "s", "h", slop=1),
+        _term(ev, "s"),
+    ]
+    want = [_top(*_fresh(ev).eval(plan), 10) for plan in plans]
+    decoded: list[tuple[int, int]] = []
+    real_decode = topk_mod.decode_blocks
+
+    def recording_decode(enc, block_ids=None):
+        ids = range(len(enc.block_last)) if block_ids is None else block_ids
+        decoded.extend((id(enc), int(b)) for b in ids)
+        return real_decode(enc, block_ids)
+
+    views: list[int] = []
+
+    class RecordingView(topk_mod._WindowView):
+        def __init__(self, ev, windows):
+            views.append(len(windows))
+            super().__init__(ev, windows)
+
+    monkeypatch.setattr(topk_mod, "decode_blocks", recording_decode)
+    monkeypatch.setattr(topk_mod, "_WindowView", RecordingView)
+    for plan, top in zip(plans, want):
+        assert _top(*ev.top_hits(plan, 10, lambda d, s: (d, s)), 10) == top
+    assert views, "the selector never ran"
+    assert len(decoded) == len(set(decoded)), "a block was decoded twice"
+
+    ev.eval(plans[1])  # the memo now holds every block of h and s
+    views.clear()
+    for plan, top in zip(plans, want):
+        assert _top(*ev.top_hits(plan, 10, lambda d, s: (d, s)), 10) == top
+    assert not views
+
+    two = _eval_over(
+        seg_docs[seg_docs < 2 * 2048],
+        seg_norms[seg_docs < 2 * 2048],
+        {"h": postings(h[h < 2 * 2048], h_tf[h < 2 * 2048])},
+    )
+    assert two.n_win == 2
+    got = _top(*two.top_hits(_term(two, "h"), 10, lambda d, s: (d, s)), 10)
+    assert got == _top(*_fresh(two).eval(_term(two, "h")), 10)
+    assert not views
 
 
 def test_batched_queries_one_job(searcher, tiny_oracle):
