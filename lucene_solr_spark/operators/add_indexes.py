@@ -5,12 +5,15 @@ The reference copies incoming segment files verbatim and rebases their
 doc IDs by the destination's maxDoc. The same property holds here by
 construction: postings blobs store per-block doc DELTAS, so shifting a
 segment to a new doc base only touches the absolute metadata columns —
-``block_first`` / ``block_last`` / ``singleton_doc`` (plain column
-arithmetic inside whole-stage codegen) — never the packed blocks. The
-single exception is the tail VInt stream of postings with NO full
-blocks: its first code encodes ``first_doc+1`` absolutely, so exactly
-one VInt per such (small, df<128) posting is rewritten in an Arrow
-batch pass. tf blobs, positions, and impacts are doc-base-invariant.
+``block_first`` / ``block_last`` / ``singleton_doc`` — never the packed
+blocks. The single exception is the tail VInt stream of postings with NO
+full blocks: its first code encodes ``first_doc+1`` absolutely, so
+exactly one VInt per such (small, df<128) posting is rewritten. tf
+blobs, positions, and impacts are doc-base-invariant. One Spark task per
+source segment reads its files, shifts them and writes them with the
+segment writer every index writer shares
+(``operators.segments.write_segment``), which returns the grafted
+segment's manifest row; one ``commit`` publishes them all.
 
 Doc IDs are rebased to the next segment boundary (incoming segment k
 becomes segment n_dst+k), which may leave an ID gap after the
@@ -20,61 +23,62 @@ never compacts doc IDs.
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from lucene_solr_spark.codecs.postings_codec import vint_decode, vint_encode
 from lucene_solr_spark.operators.segments import (
     SegmentIndex,
     clear_orphans,
     commit,
     fresh_name,
+    read_segment,
+    write_segment,
 )
 
 __all__ = ["add_indexes"]
 
 
-def _shift_tail_udf(offset: int):
-    """Rewrite the first tail VInt for tail-only postings: the stream's
-    first code is ((first_doc+1)<<1 | tf==1), every later code is a
-    doc delta — so += offset<<1 on code 0 rebases the whole posting."""
+def _graft_task(src: str, dst: str, sid: int, seg_shift: int, offset: int) -> dict:
+    """Rebase source segment ``sid`` by ``offset`` docs and write it into
+    ``dst`` as segment ``sid + seg_shift``; returns its manifest row.
 
-    @F.pandas_udf("binary")
-    def fix(tail: pd.Series, nfb: pd.Series, single: pd.Series) -> pd.Series:
-        import numpy as np
+    Only the absolute doc columns change. The one exception in the blobs
+    is the tail VInt stream of a posting with no full blocks: its first
+    code is ((first_doc+1)<<1 | tf==1) and every later code a doc delta,
+    so += offset<<1 on code 0 rebases the whole posting."""
+    rows = read_segment(src, "segments", sid)
+    docs = read_segment(src, "seg_docs", sid)
 
-        from lucene_solr_spark.codecs.postings_codec import (
-            vint_decode,
-            vint_encode,
+    def shifted(name: str) -> pa.Array:
+        return pa.array(
+            [None if v is None else [d + offset for d in v] for v in rows[name].to_pylist()],
+            rows.schema.field(name).type,
         )
 
-        out = []
-        for blob, n_full, sdoc in zip(tail, nfb, single):
-            if blob is None or len(blob) == 0 or int(n_full) > 0 or int(sdoc) >= 0:
-                out.append(blob)
-                continue
-            stream = vint_decode(bytes(blob))
+    tails = []
+    for blob, n_full, single in zip(
+        *(rows[c].to_pylist() for c in ("tail_blob", "n_full_blocks", "singleton_doc"))
+    ):
+        if blob and n_full == 0 and single < 0:
+            stream = vint_decode(blob)
             stream[0] = int(stream[0]) + (offset << 1)
-            out.append(vint_encode(np.asarray(stream, dtype=np.int64)))
-        return pd.Series(out)
-
-    return fix
-
-
-def _shift_segments(src_seg: DataFrame, seg_shift: int, offset: int) -> DataFrame:
-    fix_tail = _shift_tail_udf(offset)
-    shift_arr = lambda c: F.transform(F.col(c), lambda x: x + F.lit(offset))  # noqa: E731
-    return (
-        src_seg.withColumn("tail_blob", fix_tail("tail_blob", "n_full_blocks", "singleton_doc"))
-        .withColumn("segment_id", F.col("segment_id") + F.lit(seg_shift))
-        .withColumn("block_first", shift_arr("block_first"))
-        .withColumn("block_last", shift_arr("block_last"))
-        .withColumn(
-            "singleton_doc",
-            F.when(F.col("singleton_doc") >= 0, F.col("singleton_doc") + F.lit(offset))
-            .otherwise(F.col("singleton_doc")),
-        )
-    )
+            blob = vint_encode(np.asarray(stream, dtype=np.int64))
+        tails.append(blob)
+    single = rows["singleton_doc"]
+    columns = {
+        "tail_blob": pa.array(tails, pa.binary()),
+        "block_first": shifted("block_first"),
+        "block_last": shifted("block_last"),
+        "singleton_doc": pc.if_else(pc.greater_equal(single, 0), pc.add(single, offset), single),
+    }
+    for name, col in columns.items():
+        rows = rows.set_column(rows.schema.get_field_index(name), rows.schema.field(name), col)
+    docs = docs.set_column(0, docs.schema.field("doc_id"), pc.add(docs["doc_id"], offset))
+    return write_segment(dst, sid + seg_shift, rows, docs)
 
 
 def add_indexes(
@@ -89,22 +93,16 @@ def add_indexes(
         )
     seg_shift = max(s["segment_id"] for s in mdst["segments"]) + 1
     offset = seg_shift * dst.segment_size
-    # a crashed graft's leftovers would mix into the partitioned appends
+    # drop a crashed writer's leftover segment dirs
     clear_orphans(dst.base, mdst)
 
-    # segments: shift metadata columns, append (no re-encode)
-    _shift_segments(src.segments(spark), seg_shift, offset).write.mode(
-        "append"
-    ).partitionBy("segment_id").parquet(dst.segments_path)
-
-    # per-doc table: same rebase
-    (
-        src.seg_docs(spark)
-        .withColumn("doc_id", F.col("doc_id") + F.lit(offset))
-        .withColumn("segment_id", F.col("segment_id") + F.lit(seg_shift))
-        .write.mode("append")
-        .partitionBy("segment_id")
-        .parquet(dst.seg_docs_path)
+    # segments: one task per source segment shifts and writes it
+    src_base, dst_base = src.base, dst.base
+    src_ids = [int(s["segment_id"]) for s in msrc["segments"]]
+    grafted = (
+        spark.sparkContext.parallelize(src_ids, len(src_ids))
+        .map(lambda sid: _graft_task(src_base, dst_base, sid, seg_shift, offset))
+        .collect()
     )
 
     # dictionary: merge into a fresh table
@@ -120,37 +118,6 @@ def add_indexes(
         .parquet(f"{dst.base}/{ts_name}")
     )
 
-    # lineage for the grafted segments: recompute the content CRC from
-    # the WRITTEN rows (singleton_doc / tail_blob changed), scanning
-    # only the appended partitions
-    appended_ids = [int(s["segment_id"]) + seg_shift for s in msrc["segments"]]
-    crc_rows = (
-        spark.read.option("basePath", dst.segments_path)
-        .parquet(*(f"{dst.segments_path}/segment_id={i}" for i in appended_ids))
-        .groupBy("segment_id")
-        .agg(
-            F.sum(
-                F.crc32(F.encode(F.col("term"), "utf-8"))
-                + F.crc32(F.coalesce(F.col("doc_blob"), F.lit(b"")))
-                + F.crc32(F.coalesce(F.col("tf_blob"), F.lit(b"")))
-                + F.crc32(F.coalesce(F.col("tail_blob"), F.lit(b"")))
-                + F.col("df")
-                + F.col("singleton_doc")
-            ).alias("content_crc")
-        )
-        .collect()
-    )
-    crc = {int(r["segment_id"]): int(r["content_crc"]) for r in crc_rows}
-    grafted = [
-        {
-            **s,
-            "segment_id": int(s["segment_id"]) + seg_shift,
-            "content_crc": crc[int(s["segment_id"]) + seg_shift],
-            "min_doc": int(s["min_doc"]) + offset,
-            "max_doc": int(s["max_doc"]) + offset,
-        }
-        for s in msrc["segments"]
-    ]
     manifest = {
         **mdst,
         "doc_count": mdst["doc_count"] + msrc["doc_count"],

@@ -18,10 +18,12 @@ per-term (decoded, executor-side):
   * every doc_id belongs to this segment's doc range
 
 cross-file (relational):
-  * seg_docs doc_ids unique and inside the segment range
   * Σ per-segment (df, ttf) per term == global term_stats dictionary
-  * manifest doc_count / sum_ttf / per-segment lineage counts match
-    the recomputed aggregates
+  * seg_docs doc_ids unique per segment
+  * every field of every manifest segment row (n_terms, n_postings,
+    sum_tf, content_crc from the term rows; n_docs, min_doc, max_doc from
+    seg_docs) and the manifest's doc_count / sum_ttf equal the aggregates
+    recomputed from the files
 """
 
 from __future__ import annotations
@@ -127,37 +129,6 @@ def check_index(spark: SparkSession, index: SegmentIndex) -> dict:
     )
     problems += [r.asDict() for r in decoded_bad]
 
-    # ---- seg_docs integrity -------------------------------------------
-    orphan = (
-        docs.groupBy("segment_id")
-        .agg(F.countDistinct("doc_id").alias("n"), F.count("*").alias("rows"))
-        .filter(F.col("n") != F.col("rows"))
-        .collect()
-    )
-    for r in orphan:
-        problems.append(
-            {
-                "segment_id": int(r["segment_id"]),
-                "term": None,
-                "problem": f"seg_docs has duplicate doc_ids ({r['rows']}-{r['n']})",
-            }
-        )
-    bad_range = (
-        docs.join(ranges, "segment_id")
-        .filter((F.col("doc_id") < F.col("min_doc")) | (F.col("doc_id") > F.col("max_doc")))
-        .groupBy("segment_id")
-        .count()
-        .collect()
-    )
-    for r in bad_range:
-        problems.append(
-            {
-                "segment_id": int(r["segment_id"]),
-                "term": None,
-                "problem": f"{r['count']} seg_docs rows outside segment range",
-            }
-        )
-
     # ---- dictionary consistency: Σ segment stats == term_stats --------
     agg = seg.groupBy("term").agg(
         F.sum("df").alias("df_sum"), F.sum("ttf").alias("ttf_sum")
@@ -186,53 +157,75 @@ def check_index(spark: SparkSession, index: SegmentIndex) -> dict:
             }
         )
 
-    # ---- manifest vs recomputed aggregates ----------------------------
-    doc_count = docs.count()
-    if doc_count != manifest["doc_count"]:
-        problems.append(
-            {
-                "segment_id": None,
-                "term": None,
-                "problem": f"manifest doc_count {manifest['doc_count']} != {doc_count}",
-            }
-        )
-    sum_ttf = seg.agg(F.sum("ttf")).collect()[0][0] or 0
-    if int(sum_ttf) != manifest["sum_ttf"]:
-        problems.append(
-            {
-                "segment_id": None,
-                "term": None,
-                "problem": f"manifest sum_ttf {manifest['sum_ttf']} != {int(sum_ttf)}",
-            }
-        )
-    per_seg = {
-        int(r["segment_id"]): (int(r["n_terms"]), int(r["n_postings"]))
+    # ---- every manifest row field, recomputed from the files ---------
+    from_terms = {
+        int(r["segment_id"]): r.asDict()
         for r in seg.groupBy("segment_id")
-        .agg(F.count("*").alias("n_terms"), F.sum("df").alias("n_postings"))
+        .agg(
+            F.count("*").alias("n_terms"),
+            F.sum("df").alias("n_postings"),
+            F.sum("ttf").alias("sum_tf"),
+            F.sum(
+                F.crc32(F.encode(F.col("term"), "utf-8"))
+                + F.crc32(F.coalesce(F.col("doc_blob"), F.lit(b"")))
+                + F.crc32(F.coalesce(F.col("tf_blob"), F.lit(b"")))
+                + F.crc32(F.coalesce(F.col("tail_blob"), F.lit(b"")))
+                + F.col("df")
+                + F.col("singleton_doc")
+            ).alias("content_crc"),
+        )
         .collect()
     }
+    from_docs = {
+        int(r["segment_id"]): r.asDict()
+        for r in docs.groupBy("segment_id")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.countDistinct("doc_id").alias("distinct_docs"),
+            F.min("doc_id").alias("min_doc"),
+            F.max("doc_id").alias("max_doc"),
+        )
+        .collect()
+    }
+    for sid, r in sorted(from_docs.items()):
+        if r["distinct_docs"] != r["n_docs"]:
+            problems.append(
+                {
+                    "segment_id": sid,
+                    "term": None,
+                    "problem": f"seg_docs has duplicate doc_ids ({r['n_docs']}-{r['distinct_docs']})",
+                }
+            )
+    doc_count = sum(r["n_docs"] for r in from_docs.values())
+    sum_ttf = sum(r["sum_tf"] for r in from_terms.values())
+    for field, got in (("doc_count", doc_count), ("sum_ttf", sum_ttf)):
+        if manifest[field] != got:
+            problems.append(
+                {
+                    "segment_id": None,
+                    "term": None,
+                    "problem": f"manifest {field} {manifest[field]} != {got}",
+                }
+            )
+    # a segment without term rows or docs rows recomputes to these
+    empty = dict(
+        n_terms=0, n_postings=0, sum_tf=0, content_crc=0, n_docs=0, min_doc=-1, max_doc=-1
+    )
     for m in manifest["segments"]:
         sid = int(m["segment_id"])
-        got = per_seg.get(sid)
-        if got is None:
-            problems.append(
-                {
-                    "segment_id": sid,
-                    "term": None,
-                    "problem": "manifest segment missing on disk",
-                }
-            )
-        elif (m["n_terms"], m["n_postings"]) != got:
-            problems.append(
-                {
-                    "segment_id": sid,
-                    "term": None,
-                    "problem": (
-                        f"lineage mismatch: manifest terms/postings "
-                        f"{m['n_terms']}/{m['n_postings']} vs {got[0]}/{got[1]}"
-                    ),
-                }
-            )
+        got = {**empty, **from_terms.get(sid, {}), **from_docs.get(sid, {})}
+        for field in empty:
+            if m.get(field) != got[field]:
+                problems.append(
+                    {
+                        "segment_id": sid,
+                        "term": None,
+                        "problem": (
+                            f"lineage mismatch: manifest {field} {m.get(field)} "
+                            f"!= {got[field]} in the files"
+                        ),
+                    }
+                )
 
     return {
         "clean": not problems,

@@ -78,18 +78,6 @@ class InvertedIndex:
     #: 1s from column-pruned parquet at 8M postings)
     parquet_backed: bool = False
 
-    #: True when the norm byte is exactly SmallFloat.intToByte4(Σtf per
-    #: doc) over ``postings`` — every standard chain, including DOCS-only
-    #: (tf=1 rows sum to uniqueTermCount). False for synonym-built
-    #: indexes (norm discounts overlaps: length − Σotf, and otf is
-    #: dropped from the postings schema) and for reloaded indexes whose
-    #: build options are unknown. Segment encode uses this to derive
-    #: norms INSIDE the per-segment kernel (a segment is a doc range, so
-    #: a doc's postings never split across groups) instead of
-    #: broadcast-joining the norms table — a broadcast that cannot exist
-    #: at 10^9-doc scale.
-    norm_from_tf: bool = False
-
     #: lazily-persisted (term, doc_id, tf) projection — see postings_slim
     _slim: DataFrame | None = None
 
@@ -442,5 +430,4 @@ def build_index(
         doc_count=int(n),
         sum_ttf=int(s or 0),
         parquet_backed=True,
-        norm_from_tf=not has_otf,
     )

@@ -10,24 +10,22 @@ score candidate merges, picking the LOWEST score:
 ``skew = floorSize(largest) / totalFloored`` (``:658-703``; the deletes
 reclaim factor is 1 here — append-only corpus, SURVEY.md §1.1).
 
-The merge itself is a DISTRIBUTED Spark job over the doc-range segments
-of operators.segments — the ``SegmentMerger``/``DocIDMerger`` path
-(``index/SegmentMerger.java:109-136``) with no docID remapping needed
-(docIDs are globally dense already):
+The merge itself is Lucene's ``SegmentMerger`` (``index/SegmentMerger.java:
+109-136``) over the doc-range segments of operators.segments, with no
+docID remapping needed (docIDs are globally dense already):
 
-1. norms attach per CHILD segment via a cogroup on segment_id (each
-   task touches one child's postings + its own seg_docs — nothing is
-   collected to the driver, peak memory is one child segment);
-2. re-encode runs per TERM over a ``repartitionByRange("term")`` layout
-   with a streaming kernel that carries split term groups across Arrow
-   batches — many parallel tasks, term-sorted output files (row-group
-   stats stay prunable, mirroring Lucene's term-sorted merged segment),
-   no single-task ``coalesce(1)`` bottleneck;
-3. the merged segment is written under its new id, which no manifest
-   names yet, and one ``operators.segments.commit`` publishes it with the
-   shrunk dictionary and tombstone table of a purging merge; the commit
-   then deletes the children — a crash at any point leaves either the
-   old manifest over intact children or the new manifest over the merged
+1. one Spark task per merge reads the children's files with pyarrow —
+   independent merges run as concurrent jobs, one per driver thread;
+2. the task decodes each child term row, drops tombstoned docs and their
+   positions (DocIDMerger skips deleted docs) and re-encodes the
+   survivors term by term with ``operators.segments.encode_segment``, the
+   build's encoder, taking norms from the children's seg_docs rows;
+3. ``operators.segments.write_segment`` writes the merged segment under
+   its new id, which no manifest names yet, and returns its manifest row.
+   One ``operators.segments.commit`` publishes it with the shrunk
+   dictionary and tombstone table of a purging merge; the commit then
+   deletes the children — a crash at any point leaves either the old
+   manifest over intact children or the new manifest over the merged
    segment (``index/IndexWriter.java:3367`` prepareCommit).
 """
 
@@ -37,16 +35,22 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from lucene_solr_spark.codecs.postings_codec import decode_postings, encode_postings
+from lucene_solr_spark.codecs.postings_codec import decode_positions_batch, decode_postings
 from lucene_solr_spark.operators.segments import (
-    SEGMENT_SCHEMA,
     SegmentIndex,
     commit,
+    encode_segment,
     fresh_name,
+    read_segment,
+    segment_path,
     table_path,
+    write_segment,
 )
 
 __all__ = ["TieredMergePolicy", "find_merges", "merge_segments", "run_merges"]
@@ -128,136 +132,48 @@ def find_merges(
     return merges
 
 
-def _encode_term_group(g: pd.DataFrame) -> dict:
-    """Concatenate one term's child rows (disjoint doc ranges, sorted into
-    global doc order) and re-encode postings + impacts + positions."""
+def _merge_task(
+    base: str, child_ids: list[int], tomb_path: str | None, new_id: int
+) -> dict:
+    """``SegmentMerger`` in one task: read the children's files, decode
+    every term row, drop tombstoned docs with their positions (DocIDMerger
+    skips deleted docs), and re-encode the survivors with the build's
+    encoder. A merged segment is thus byte-identical to building its live
+    docs as one segment. Returns the merged segment's manifest row."""
     from lucene_solr_spark.operators.topk import _row_to_encoded
 
-    recs = list(g.itertuples())
-
-    def first_doc(r):
-        if r.singleton_doc >= 0:
-            return r.singleton_doc
-        bf = r.block_first
-        bl = r.block_last
-        if bf is not None and len(bf):
-            return bf[0]
-        return bl[0] if bl is not None and len(bl) else 0
-
-    recs.sort(key=first_doc)
-    has_pos = all(getattr(r, "pos_off", None) is not None for r in recs)
-    docs_parts, tf_parts, norm_parts = [], [], []
-    live_masks = []
-    any_deleted = False
-    for r in recs:
+    rows = pa.concat_tables([read_segment(base, "segments", c) for c in child_ids])
+    docs = pa.concat_tables([read_segment(base, "seg_docs", c) for c in child_ids])
+    dead = np.empty(0, np.int64)
+    if tomb_path is not None and docs.num_rows:
+        ids = docs["doc_id"]
+        lo, hi = pc.min(ids).as_py(), pc.max(ids).as_py()
+        dead = pq.read_table(
+            tomb_path, columns=["doc_id"], filters=[("doc_id", ">=", lo), ("doc_id", "<=", hi)]
+        )["doc_id"].to_numpy()
+        docs = docs.filter(pc.invert(pc.is_in(ids, value_set=pa.array(dead))))
+    has_pos = rows["pos_off"].null_count == 0
+    terms, doc_parts, tf_parts, positions = [], [], [], []
+    for r in rows.to_pandas().itertuples(index=False):
         enc = _row_to_encoded(r)
         d, t = decode_postings(enc)
-        # per-posting norms travel with the merge input so re-encoded
-        # impact frontiers are exact (CompetitiveImpactAccumulator over
-        # the merged lists); norm == -1 marks a TOMBSTONED doc
-        # (DocIDMerger skips deleted docs) — purged here
-        nrm = np.asarray(r.norms_concat, np.int64)
-        live = nrm >= 0
-        if not live.all():
-            any_deleted = True
-            d, t, nrm = d[live], t[live], nrm[live]
-        live_masks.append(live)
-        docs_parts.append(d)
-        tf_parts.append(t)
-        norm_parts.append(nrm)
-    docs = np.concatenate(docs_parts)
-    if docs.size == 0:
-        return None  # every posting of this term was tombstoned
-    tfs = np.concatenate(tf_parts)
-    norms = np.concatenate(norm_parts)
-    enc = encode_postings(docs, tfs, norms)
-    pos_blobs = []
-    pos_offs = [np.zeros(1, np.int64)]
-    if has_pos and not any_deleted:
-        # fast path: positions merge = byte-concat of per-posting blobs in
-        # doc order (each posting's VInt-delta list is self-contained)
-        base_off = 0
-        for r in recs:
-            blob = bytes(r.pos_blob) if r.pos_blob is not None else b""
-            off = np.asarray(r.pos_off, np.int64)
-            pos_blobs.append(blob)
-            pos_offs.append(off[1:] + base_off)
-            base_off += len(blob)
-    elif has_pos:
-        # purge path: re-slice surviving postings' position lists
-        from lucene_solr_spark.codecs.postings_codec import (
-            decode_positions_batch,
-            encode_positions,
-        )
-
-        plists = []
-        for r, live in zip(recs, live_masks):
-            keep_idx = np.nonzero(live)[0]
-            if keep_idx.size == 0:
-                # np.split on zero counts would yield ONE spurious empty
-                # list, shifting every later posting's positions — skip
-                continue
-            enc_r = _row_to_encoded(r)
-            pos, counts = decode_positions_batch(
-                enc_r.pos_blob, enc_r.pos_off, keep_idx
-            )
-            plists.extend(np.split(pos, np.cumsum(counts)[:-1]))
-        blob, offs = encode_positions(plists)
-        pos_blobs = [blob]
-        pos_offs = [offs]
-    return {
-        "term": recs[0].term,
-        "df": enc.df,
-        "ttf": enc.ttf,
-        "doc_blob": enc.doc_blob,
-        "tf_blob": enc.tf_blob,
-        "tail_blob": enc.tail_blob,
-        "n_full_blocks": enc.n_full_blocks,
-        "block_first": enc.block_first.tolist(),
-        "block_last": enc.block_last.tolist(),
-        "imp_freq": enc.imp_freq.tolist(),
-        "imp_norm": enc.imp_norm.tolist(),
-        "imp_off": enc.imp_off.tolist(),
-        "singleton_doc": enc.singleton_doc,
-        "singleton_tf": enc.singleton_tf,
-        "pos_blob": b"".join(pos_blobs) if has_pos else None,
-        "pos_off": np.concatenate(pos_offs).tolist() if has_pos else None,
-    }
-
-
-_OUT_COLS = [f.name for f in SEGMENT_SCHEMA.fields if f.name != "segment_id"]
-
-
-def _reencode_stream(pdf_iter):
-    """Streaming per-term re-encode over a term-range partition.
-
-    Rows arrive term-sorted (repartitionByRange + sortWithinPartitions);
-    a term split across Arrow batch boundaries is buffered and finished in
-    the next batch, so memory is bounded by one batch + one term."""
-    buf: pd.DataFrame | None = None
-    for pdf in pdf_iter:
-        if pdf.empty:
-            continue
-        if buf is not None:
-            pdf = pd.concat([buf, pdf], ignore_index=True)
-        last_term = pdf["term"].iloc[-1]
-        tail_mask = pdf["term"].to_numpy() == last_term
-        complete = pdf[~tail_mask]
-        buf = pdf[tail_mask]
-        if not complete.empty:
-            rows = [
-                r
-                for _, g in complete.groupby("term", sort=True)
-                if (r := _encode_term_group(g)) is not None
-            ]
-            yield pd.DataFrame(rows, columns=_OUT_COLS)
-    if buf is not None and not buf.empty:
-        rows = [
-            r
-            for _, g in buf.groupby("term", sort=True)
-            if (r := _encode_term_group(g)) is not None
-        ]
-        yield pd.DataFrame(rows, columns=_OUT_COLS)
+        keep = np.flatnonzero(~np.isin(d, dead))
+        terms.append(np.full(keep.size, r.term, dtype=object))
+        doc_parts.append(d[keep])
+        tf_parts.append(t[keep])
+        if has_pos and keep.size:
+            pos, counts = decode_positions_batch(enc.pos_blob, enc.pos_off, keep)
+            positions += np.split(pos, np.cumsum(counts)[:-1])
+    postings = pd.DataFrame(
+        {
+            "term": np.concatenate(terms) if terms else np.empty(0, object),
+            "doc_id": np.concatenate(doc_parts) if doc_parts else np.empty(0, np.int64),
+            "tf": np.concatenate(tf_parts) if tf_parts else np.empty(0, np.int64),
+        }
+    )
+    if has_pos:
+        postings["positions"] = positions
+    return write_segment(base, new_id, encode_segment(postings, docs.to_pandas()), docs)
 
 
 def merge_segments(
@@ -265,8 +181,8 @@ def merge_segments(
 ) -> int:
     """Merge the given segments into one new segment; returns its id.
 
-    Fully distributed: no stage materializes more than one child segment
-    (norm attach) or one term-range partition (re-encode) per task."""
+    One Spark task holds the whole merge, as ``SegmentMerger`` does: its
+    peak memory is the decoded postings of the children."""
     manifest = index.manifest()
     # ids are opaque ordinals (doc ranges live in the manifest); max+1 is
     # always collision-free, including with streaming-appended segments
@@ -283,123 +199,21 @@ def _build_merged_segment(
     child_ids: list[int],
     new_id: int,
 ) -> dict:
-    """Build phase: all the distributed work of a merge — decode, purge,
-    re-encode, write the merged segment under ``new_id``, compute its
-    stats. Writes only the (not yet committed) ``new_id`` dirs and reads
-    only this merge's child dirs, so independent merges (disjoint child
-    sets) can run this concurrently from driver threads."""
+    """Build phase: one Spark task merges the children and writes the
+    merged segment under ``new_id`` (``_merge_task``). It writes only the
+    (not yet committed) ``new_id`` dirs and reads only this merge's child
+    dirs, so independent merges (disjoint child sets) can run this
+    concurrently from driver threads."""
     by_id = {s["segment_id"]: s for s in manifest["segments"]}
     children = [by_id[c] for c in child_ids]
-
-    seg_paths = [f"{index.segments_path}/segment_id={c}" for c in child_ids]
-    doc_paths = [f"{index.seg_docs_path}/segment_id={c}" for c in child_ids]
-    # basePath keeps the segment_id partition column for the cogroup key
-    rows = spark.read.option("basePath", index.segments_path).parquet(*seg_paths)
-    seg_docs = spark.read.option("basePath", index.seg_docs_path).parquet(
-        *doc_paths
-    )
-    # merge purges tombstoned docs (DocIDMerger skips deleted): anti-join
-    # the live-docs table down BEFORE the norm attach — decoded postings
-    # that miss from seg_docs are then recognized as deleted in the kernel
-    tomb_path = table_path(index.base, manifest, "tombstones")
-    if tomb_path is not None:
-        tombs_df = spark.read.parquet(tomb_path).select("doc_id")
-        seg_docs = seg_docs.join(tombs_df, "doc_id", "left_anti")
-
-    import pyspark.sql.types as T
-
-    with_norms_schema = T.StructType(
-        [f for f in rows.schema.fields if f.name != "segment_id"]
-        + [T.StructField("norms_concat", T.ArrayType(T.LongType()), True)]
-    )
-
-    def add_norms(key: tuple, rows_pdf: pd.DataFrame, docs_pdf: pd.DataFrame):
-        """Attach per-posting norms from THIS child's seg_docs only — a
-        child's postings reference only its own doc range, so the cogroup
-        is exact and per-task memory is one child segment."""
-        from lucene_solr_spark.operators.topk import _row_to_encoded
-
-        if rows_pdf.empty:
-            return pd.DataFrame(columns=[f.name for f in with_norms_schema.fields])
-        docs_pdf = docs_pdf.sort_values("doc_id")
-        sdocs = docs_pdf["doc_id"].to_numpy(np.int64)
-        snorms = docs_pdf["norm"].to_numpy(np.int64)
-        out = rows_pdf.drop(columns=["segment_id"]).copy()
-        norms_col = []
-        for r in rows_pdf.itertuples():
-            d, _ = decode_postings(_row_to_encoded(r))
-            if len(sdocs) == 0:
-                norms_col.append([-1] * len(d))
-                continue
-            idx = np.searchsorted(sdocs, d)
-            idxc = np.clip(idx, 0, len(sdocs) - 1)
-            # -1 = tombstoned (doc anti-joined out of seg_docs)
-            n = np.where(sdocs[idxc] == d, snorms[idxc], -1)
-            norms_col.append(n.tolist())
-        out["norms_concat"] = norms_col
-        return out
-
-    enriched = (
-        rows.groupBy("segment_id")
-        .cogroup(seg_docs.select("segment_id", "doc_id", "norm").groupBy("segment_id"))
-        .applyInPandas(add_norms, schema=with_norms_schema)
-    )
-
-    # parallel re-encode: term-range partitions sized to the merge
-    # (≈2M postings per task), term-sorted files → row-group stats prune
-    total_postings = sum(c["n_postings"] for c in children)
-    n_parts = max(1, min(256, total_postings // 2_000_000 + 1))
-    out_schema = T.StructType(
-        [f for f in SEGMENT_SCHEMA.fields if f.name != "segment_id"]
-    )
-    merged = (
-        enriched.repartitionByRange(n_parts, "term")
-        .sortWithinPartitions("term")
-        .mapInPandas(_reencode_stream, schema=out_schema)
-    )
-
-    seg_path = f"{index.segments_path}/segment_id={new_id}"
-    merged.write.mode("overwrite").parquet(seg_path)
-
-    # seg_docs for the merged range = concat of children (already disjoint)
-    total_docs = sum(c["n_docs"] for c in children)
-    doc_parts = max(1, min(64, total_docs // 4_000_000 + 1))
-    docs_path = f"{index.seg_docs_path}/segment_id={new_id}"
-    seg_docs.drop("segment_id").repartitionByRange(
-        doc_parts, "doc_id"
-    ).sortWithinPartitions("doc_id").write.mode("overwrite").parquet(docs_path)
-
-    # merged-segment stats from the WRITTEN data (a purging merge shrinks
-    # doc/posting counts — SegmentMerger writes exact per-segment stats)
-    stats = (
-        spark.read.parquet(seg_path)
-        .agg(
-            F.count("*").alias("nt"),
-            F.sum("df").alias("np"),
-            F.sum("ttf").alias("st"),
-        )
+    base = index.base
+    tomb_path = table_path(base, manifest, "tombstones")
+    meta = (
+        spark.sparkContext.parallelize([new_id], 1)
+        .map(lambda sid: _merge_task(base, child_ids, tomb_path, sid))
         .collect()[0]
     )
-    dstats = (
-        spark.read.parquet(docs_path)
-        .agg(
-            F.count("*").alias("n"),
-            F.min("doc_id").alias("mn"),
-            F.max("doc_id").alias("mx"),
-        )
-        .collect()[0]
-    )
-    merged_meta = {
-        "segment_id": int(new_id),
-        "n_docs": int(dstats["n"]),
-        "min_doc": int(dstats["mn"]) if dstats["mn"] is not None else -1,
-        "max_doc": int(dstats["mx"]) if dstats["mx"] is not None else -1,
-        "n_terms": int(stats["nt"] or 0),
-        "n_postings": int(stats["np"] or 0),
-        "sum_tf": int(stats["st"] or 0),
-        "content_crc": 0,
-    }
-    return {"meta": merged_meta, "children": children}
+    return {"meta": meta, "children": children}
 
 
 def _commit_merged_segment(
@@ -436,7 +250,7 @@ def _commit_merged_segment(
             spark.read.option("basePath", index.segments_path)
             .parquet(
                 *(
-                    f"{index.segments_path}/segment_id={s['segment_id']}"
+                    segment_path(index.base, "segments", s["segment_id"])
                     for s in manifest["segments"]
                 )
             )

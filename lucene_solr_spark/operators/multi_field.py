@@ -190,7 +190,6 @@ def build_multi_field_index(
             doc_count=n,
             sum_ttf=s,
             parquet_backed=True,
-            norm_from_tf=True,  # no synonym chain in the multi-field path
         )
     return MultiFieldIndex(
         fields=out, default_field=default_field, corpus_doc_count=int(corpus_n)

@@ -20,10 +20,20 @@ Scale properties:
 - postings are written sorted by term within each segment file → Parquet
   row-group min/max stats on ``term`` prune query scans (the FST term-index
   role, ``codecs/lucene90/blocktree/...:172-187``).
-- per-segment manifest row with lineage (doc range, row counts, content
-  sha256 of the encoded blobs) written AFTER segment data — resume =
-  anti-join manifest (idempotent: same input partition → byte-identical
-  segment, the checkpoint contract of BASELINE.json north_rule).
+
+One writer makes every segment (the DWPT flush,
+``index/DocumentsWriterPerThread.java``): ``encode_segment`` encodes a
+segment's term rows, and ``write_segment`` writes its two files with
+pyarrow inside the Spark task that holds the segment and returns the
+segment's manifest row — doc range, row counts and ``content_crc``, a sum
+of CRC32s over the encoded term rows — computed from what it wrote. Build
+and append write their segments in one Spark job, a merge in one task per
+merged segment, ``add_indexes`` in one task per grafted segment. The
+driver then publishes the returned rows with ``commit``, the one commit
+point, so a crashed writer leaves only files that no manifest names.
+Resume skips the segments the manifest names (idempotent: same input →
+byte-identical segment, the checkpoint contract of BASELINE.json
+north_rule).
 """
 
 from __future__ import annotations
@@ -33,18 +43,32 @@ import json
 import os
 import shutil
 import tempfile
+import zlib
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from lucene_solr_spark.codecs.postings_codec import encode_positions, encode_postings
 from lucene_solr_spark.operators.index_build import InvertedIndex
 
-__all__ = ["SegmentIndex", "build_segments", "commit", "SEGMENT_SCHEMA"]
+__all__ = [
+    "SegmentIndex",
+    "build_segments",
+    "commit",
+    "encode_segment",
+    "segment_path",
+    "write_segment",
+    "SEGMENT_SCHEMA",
+    "SEG_DOCS_SCHEMA",
+]
 
 SEGMENT_SCHEMA = T.StructType(
     [
@@ -67,6 +91,41 @@ SEGMENT_SCHEMA = T.StructType(
         T.StructField("pos_off", T.ArrayType(T.LongType()), True),
     ]
 )
+SEG_DOCS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("length", T.LongType(), False),
+        T.StructField("norm", T.IntegerType(), True),
+    ]
+)
+
+# The file schemas: the directory name carries ``segment_id``, so the
+# term rows hold the rest of SEGMENT_SCHEMA. Both mirror what Spark
+# writes for these types, so one read spans files of either writer.
+ROWS_ARROW = to_arrow_schema(T.StructType(SEGMENT_SCHEMA.fields[1:]))
+DOCS_ARROW = to_arrow_schema(SEG_DOCS_SCHEMA)
+
+
+def _leaf(f: pa.Field) -> str:
+    return f"{f.name}.list.element" if pa.types.is_list(f.type) else f.name
+
+
+# pyarrow writer settings: no dictionary for the unique ``term`` column,
+# min/max statistics only on the sort key that scans prune by, and no
+# Arrow schema footer. Files come out no larger than Spark's.
+_WRITE_OPTIONS = {
+    "segments": dict(
+        use_dictionary=[_leaf(f) for f in ROWS_ARROW if f.name != "term"],
+        write_statistics=["term"],
+        store_schema=False,
+    ),
+    "seg_docs": dict(write_statistics=["doc_id"], store_schema=False),
+}
+
+_ROW_DDL = (
+    "segment_id long, n_terms long, n_postings long, sum_tf long, "
+    "n_docs long, min_doc long, max_doc long, content_crc long"
+)
 
 
 @dataclass
@@ -75,19 +134,20 @@ class SegmentIndex:
 
     base/
       manifest.json                     the commit point: collection stats,
-                                        per-segment lineage, table names
+                                        one row per segment, table names
       segments/segment_id=N/*.parquet   encoded term rows (term-sorted)
       seg_docs/segment_id=N/*.parquet   (doc_id, length, norm)
       term_stats[_G]/*.parquet          global (term, df, ttf) dictionary
       tombstones_G/*.parquet            deleted doc_ids (operators.deletes)
 
-    Writers put new data under names no committed manifest uses and
-    publish it with ``commit``. Readers resolve every file through the
-    manifest at call time, never by listing a directory, so a writer's
-    uncommitted or orphaned files are never read. The manifest's
-    ``term_stats`` key names the live dictionary (absent: the bare
-    ``term_stats/`` of a fresh build) and its ``tombstones`` key the
-    tombstone table (absent: no deletes).
+    ``write_segment`` makes every ``segment_id=N`` dir, and
+    ``segment_path`` names it. Writers put new data under names no
+    committed manifest uses and publish it with ``commit``. Readers
+    resolve every file through the manifest at call time, never by
+    listing a directory, so a writer's uncommitted or orphaned files are
+    never read. The manifest's ``term_stats`` key names the live
+    dictionary (absent: the bare ``term_stats/`` of a fresh build) and
+    its ``tombstones`` key the tombstone table (absent: no deletes).
     """
 
     base: str
@@ -111,29 +171,30 @@ class SegmentIndex:
         return table_path(self.base, self.manifest(), "term_stats")
 
     def _cached(
-        self, spark: SparkSession, root: str, parts: tuple[str, ...] | None = None
+        self, spark: SparkSession, root: str, paths: tuple[str, ...] | None = None
     ) -> DataFrame:
         if self._df_cache is None:
             object.__setattr__(self, "_df_cache", {})
-        key = (root, parts)
+        key = (root, paths)
         if key not in self._df_cache:
             self._df_cache[key] = (
-                spark.read.option("basePath", root).parquet(*(f"{root}/{p}" for p in parts))
-                if parts is not None
+                spark.read.option("basePath", root).parquet(*paths)
+                if paths is not None
                 else spark.read.parquet(root)
             )
         return self._df_cache[key]
 
-    def _committed(self, spark: SparkSession, root: str) -> DataFrame:
+    def _committed(self, spark: SparkSession, table: str) -> DataFrame:
         """The manifest's segments of one per-segment table."""
         ids = [s["segment_id"] for s in self.manifest()["segments"]]
-        return self._cached(spark, root, tuple(f"segment_id={i}" for i in ids))
+        paths = tuple(segment_path(self.base, table, i) for i in ids)
+        return self._cached(spark, f"{self.base}/{table}", paths)
 
     def segments(self, spark: SparkSession) -> DataFrame:
-        return self._committed(spark, self.segments_path)
+        return self._committed(spark, "segments")
 
     def seg_docs(self, spark: SparkSession) -> DataFrame:
-        return self._committed(spark, self.seg_docs_path)
+        return self._committed(spark, "seg_docs")
 
     def term_stats(self, spark: SparkSession) -> DataFrame:
         return self._cached(spark, self.term_stats_path)
@@ -166,6 +227,12 @@ def table_path(base: str, manifest: dict, table: str) -> str | None:
     return None if name is None else f"{base}/{name}"
 
 
+def segment_path(base: str, table: str, segment_id: int) -> str:
+    """The directory of one segment's files in ``table``: ``segments``
+    (encoded term rows) or ``seg_docs`` (docs rows)."""
+    return f"{base}/{table}/segment_id={segment_id}"
+
+
 def fresh_name(manifest: dict, table: str) -> str:
     """A name for ``table`` that the commit following ``manifest`` may
     publish: ``commit`` bumps the generation, so no committed manifest of
@@ -176,8 +243,8 @@ def fresh_name(manifest: dict, table: str) -> str:
 def _named(base: str, manifest: dict) -> set[str]:
     paths = {table_path(base, manifest, t) for t in ("term_stats", "tombstones")}
     for s in manifest["segments"]:
-        paths.add(f"{base}/segments/segment_id={s['segment_id']}")
-        paths.add(f"{base}/seg_docs/segment_id={s['segment_id']}")
+        paths.add(segment_path(base, "segments", s["segment_id"]))
+        paths.add(segment_path(base, "seg_docs", s["segment_id"]))
     return paths - {None}
 
 
@@ -215,79 +282,195 @@ def commit(base: str, manifest: dict) -> None:
 
 
 def clear_orphans(base: str, manifest: dict) -> None:
-    """Delete segment dirs ``manifest`` does not name (left by a crashed
-    writer), so a partitioned append cannot mix them with new files."""
+    """Delete the segment dirs ``manifest`` does not name, which a crashed
+    writer left behind. Best effort, like ``commit``'s deletions."""
     named = _named(base, manifest)
     for table in ("segments", "seg_docs"):
         root = f"{base}/{table}"
         for d in os.listdir(root) if os.path.isdir(root) else ():
             if d.startswith("segment_id=") and f"{root}/{d}" not in named:
-                shutil.rmtree(f"{root}/{d}")
+                shutil.rmtree(f"{root}/{d}", ignore_errors=True)
 
 
-def _encode_partition(segment_size: int):
-    """applyInPandas kernel: one call per segment_id group; encodes every
-    term's postings (the per-segment flush,
-    ``index/IndexingChain.java:229-296`` sort terms → write postings)."""
+# ------------------------------------------------------------ the writer
 
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        seg_id = int(key[0])
-        if "norm" not in pdf.columns:
-            # Norm derived IN-GROUP: the segment is a doc range, so every
-            # posting row of a doc is in this group and the norm byte is
-            # SmallFloat.intToByte4(Σtf) by definition (DOCS-only rows
-            # carry tf=1, summing to uniqueTermCount). Guarded by
-            # InvertedIndex.norm_from_tf — encode_frame joins the stored
-            # norms instead when the equality does not hold (synonyms).
-            from lucene_solr_spark.oracle.smallfloat import int_to_byte4_np
 
-            lengths = pdf.groupby("doc_id")["tf"].sum()
-            norm_map = pd.Series(
-                int_to_byte4_np(lengths.to_numpy()).astype(np.int64),
-                index=lengths.index,
+def encode_segment(postings: pd.DataFrame, docs: pd.DataFrame) -> pa.Table:
+    """Encode one segment's term rows, term-sorted (the per-segment flush,
+    ``index/IndexingChain.java:229-296``: sort terms, write postings).
+
+    ``postings`` has ``term, doc_id, tf`` and, when the index stores
+    them, ``positions``. ``docs`` has the segment's ``doc_id, norm`` rows,
+    the one source of the norm byte the impacts are computed from."""
+    docs = docs.sort_values("doc_id")
+    ids = docs["doc_id"].to_numpy(np.int64)
+    postings = postings.sort_values(["term", "doc_id"], kind="mergesort")
+    terms = postings["term"].to_numpy()
+    doc_ids = postings["doc_id"].to_numpy(np.int64)
+    tfs = postings["tf"].to_numpy(np.int64)
+    at = np.searchsorted(ids, doc_ids)
+    found = at < len(ids)
+    found[found] = ids[at[found]] == doc_ids[found]
+    if not found.all():
+        raise ValueError(f"no docs row for doc {doc_ids[~found][0]} of a posting")
+    norms = docs["norm"].to_numpy(np.int64)[at]
+    positions = postings["positions"].to_numpy() if "positions" in postings else None
+    cuts = np.flatnonzero(terms[1:] != terms[:-1]) + 1
+    bounds = zip(np.r_[0, cuts], np.r_[cuts, len(terms)]) if len(terms) else ()
+    rows = []
+    for lo, hi in bounds:
+        enc = encode_postings(doc_ids[lo:hi], tfs[lo:hi], norms[lo:hi])
+        pos_blob, pos_off = None, None
+        if positions is not None:
+            pos_blob, pos_off = encode_positions(
+                [np.asarray(p, np.int64) for p in positions[lo:hi]]
             )
-            pdf = pdf.assign(norm=pdf["doc_id"].map(norm_map))
-        pdf = pdf.sort_values(["term", "doc_id"], kind="mergesort")
-        has_pos = "positions" in pdf.columns
-        rows = []
-        for term, g in pdf.groupby("term", sort=True):
-            enc = encode_postings(
-                g["doc_id"].to_numpy(np.int64),
-                g["tf"].to_numpy(np.int64),
-                g["norm"].to_numpy(np.int64),
-            )
-            if has_pos:
-                pos_blob, pos_off = encode_positions(
-                    [np.asarray(p, np.int64) for p in g["positions"]]
-                )
-            else:
-                pos_blob, pos_off = None, None
-            rows.append(
-                {
-                    "segment_id": seg_id,
-                    "term": term,
-                    "df": enc.df,
-                    "ttf": enc.ttf,
-                    "doc_blob": enc.doc_blob,
-                    "tf_blob": enc.tf_blob,
-                    "tail_blob": enc.tail_blob,
-                    "n_full_blocks": enc.n_full_blocks,
-                    "block_first": enc.block_first.tolist(),
-                    "block_last": enc.block_last.tolist(),
-                    "imp_freq": enc.imp_freq.tolist(),
-                    "imp_norm": enc.imp_norm.tolist(),
-                    "imp_off": enc.imp_off.tolist(),
-                    "singleton_doc": enc.singleton_doc,
-                    "singleton_tf": enc.singleton_tf,
-                    "pos_blob": pos_blob,
-                    "pos_off": pos_off.tolist() if pos_off is not None else None,
-                }
-            )
-        return pd.DataFrame(
-            rows, columns=[f.name for f in SEGMENT_SCHEMA.fields]
+        rows.append(
+            {
+                "term": terms[lo],
+                "df": enc.df,
+                "ttf": enc.ttf,
+                "doc_blob": enc.doc_blob,
+                "tf_blob": enc.tf_blob,
+                "tail_blob": enc.tail_blob,
+                "n_full_blocks": enc.n_full_blocks,
+                "block_first": enc.block_first.tolist(),
+                "block_last": enc.block_last.tolist(),
+                "imp_freq": enc.imp_freq.tolist(),
+                "imp_norm": enc.imp_norm.tolist(),
+                "imp_off": enc.imp_off.tolist(),
+                "singleton_doc": enc.singleton_doc,
+                "singleton_tf": enc.singleton_tf,
+                "pos_blob": pos_blob,
+                "pos_off": pos_off.tolist() if pos_off is not None else None,
+            }
         )
+    return pa.Table.from_pylist(rows, schema=ROWS_ARROW)
 
-    return fn
+
+def content_crc(rows: pa.Table) -> int:
+    """The manifest's checksum of a segment's term rows: the sum over rows
+    of CRC32(term) + CRC32 of each of doc_blob, tf_blob and tail_blob
+    (a missing blob counts as empty) + df + singleton_doc."""
+    cols = ("term", "doc_blob", "tf_blob", "tail_blob", "df", "singleton_doc")
+    return sum(
+        zlib.crc32(term.encode())
+        + zlib.crc32(doc or b"")
+        + zlib.crc32(tf or b"")
+        + zlib.crc32(tail or b"")
+        + df
+        + single
+        for term, doc, tf, tail, df, single in zip(*(rows[c].to_pylist() for c in cols))
+    )
+
+
+def _table(data, schema: pa.Schema) -> pa.Table:
+    if isinstance(data, pd.DataFrame):
+        return pa.Table.from_pandas(data[schema.names], schema=schema, preserve_index=False)
+    return data.select(schema.names).cast(schema)
+
+
+def write_segment(base: str, segment_id: int, rows, docs) -> dict:
+    """Write one segment and return its manifest row.
+
+    ``rows`` are the encoded term rows (``ROWS_ARROW``, term-sorted) and
+    ``docs`` the docs rows (``DOCS_ARROW``); either may be a pyarrow
+    Table or a pandas DataFrame. Each goes to the only file of a fresh
+    ``segment_path`` dir: files an earlier, crashed writer left there
+    would otherwise be read beside the new one. The row's counts, doc
+    range and ``content_crc`` are computed from the tables written."""
+    rows = _table(rows, ROWS_ARROW)
+    docs = _table(docs, DOCS_ARROW).sort_by("doc_id")
+    for table, data in (("segments", rows), ("seg_docs", docs)):
+        path = segment_path(base, table, segment_id)
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        pq.write_table(data, f"{path}/part-00000.parquet", **_WRITE_OPTIONS[table])
+    ids = docs["doc_id"]
+    return {
+        "segment_id": int(segment_id),
+        "n_terms": rows.num_rows,
+        "n_postings": pc.sum(rows["df"]).as_py() or 0,
+        "sum_tf": pc.sum(rows["ttf"]).as_py() or 0,
+        "n_docs": docs.num_rows,
+        "min_doc": pc.min(ids).as_py() if len(ids) else -1,
+        "max_doc": pc.max(ids).as_py() if len(ids) else -1,
+        "content_crc": content_crc(rows),
+    }
+
+
+def read_segment(base: str, table: str, segment_id: int) -> pa.Table:
+    """One segment's files in ``table``, read with pyarrow."""
+    schema = ROWS_ARROW if table == "segments" else DOCS_ARROW
+    return pq.read_table(segment_path(base, table, segment_id), schema=schema)
+
+
+# ------------------------------------------------------ the Spark drivers
+
+
+def _segment_groups(
+    ix: InvertedIndex, segment_id: Column, n_parts: int, skip: list[int] | None = None
+):
+    """``ix``'s posting rows and docs rows in one frame, grouped by the
+    ``segment_id`` each doc falls in. The docs rows are unioned in with a
+    null ``term``, so every group holds one whole segment, and the frame
+    is range-partitioned on ``segment_id`` before the grouping.
+
+    Bucket-skew guard (measured: the 2x encode-scaling ceiling at N=16
+    was NOT IO — tmpfs shuffle dirs changed nothing — but segment ids
+    HASHING into only spark.sql.shuffle.partitions buckets: 59 segments
+    over 16 buckets puts ~2x the mean into the worst bucket, and the
+    stage runs at the speed of that bucket). Range partitioning keeps
+    contiguous ids per partition with boundaries from the row sampler, so
+    tasks are balanced by rows. RangePartitioning(segment_id) satisfies
+    the groupBy's ClusteredDistribution, so Catalyst inserts NO second
+    exchange before the grouped kernel."""
+    pos_cols = ["positions"] if "positions" in ix.postings.columns else []
+    rows = (
+        ix.postings.select("term", "doc_id", "tf", *pos_cols)
+        .unionByName(ix.docs.select("doc_id", "length", "norm"), allowMissingColumns=True)
+        .withColumn("segment_id", segment_id.cast("long"))
+    )
+    if skip:
+        rows = rows.filter(~F.col("segment_id").isin(skip))
+    return rows.repartitionByRange(n_parts, "segment_id").groupBy("segment_id")
+
+
+def _split(pdf: pd.DataFrame) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """One group of ``_segment_groups`` → (postings, docs)."""
+    is_doc = pdf["term"].isna().to_numpy()
+    postings = pdf[~is_doc].drop(columns=["segment_id", "length", "norm"])
+    docs = pdf.loc[is_doc, ["doc_id", "length", "norm"]]
+    return postings.astype({"tf": np.int64}), docs.astype({"length": np.int64, "norm": np.int32})
+
+
+def _doc_range_parts(ix: InvertedIndex, segment_size: int) -> tuple[Column, int]:
+    """Doc-range segment ids, and the task count: one per segment up to 4x
+    the cluster parallelism, so tiny tasks never dominate small builds and
+    web-scale builds don't schedule one task per 10^6 segments."""
+    n_segments = max(1, -(-int(ix.doc_count) // segment_size))
+    par = max(1, ix.postings.sparkSession.sparkContext.defaultParallelism)
+    return F.col("doc_id") / segment_size, min(n_segments, 4 * par)
+
+
+def write_segments(
+    ix: InvertedIndex,
+    base: str,
+    segment_id: Column,
+    n_parts: int,
+    skip: list[int] | None = None,
+) -> list[dict]:
+    """Encode and write every segment of ``ix`` in one Spark job: each
+    task holds whole segments, and for each one calls ``encode_segment``
+    and ``write_segment``. Returns the manifest rows, uncommitted."""
+
+    def flush(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        postings, docs = _split(pdf)
+        row = write_segment(base, int(key[0]), encode_segment(postings, docs), docs)
+        return pd.DataFrame([row])
+
+    groups = _segment_groups(ix, segment_id, n_parts, skip)
+    return [r.asDict() for r in groups.applyInPandas(flush, schema=_ROW_DDL).collect()]
 
 
 def encode_frame(
@@ -295,55 +478,18 @@ def encode_frame(
     segment_size: int = 1 << 16,
     skip_segment_ids: list[int] | None = None,
 ):
-    """The segment ENCODE pipeline as a DataFrame, unsunk: doc-range
-    segment assignment → one groupBy(segment_id) shuffle → the
-    applyInPandas block/impact/position encode kernel emitting term-sorted
-    SEGMENT_SCHEMA rows. ``build_segments`` writes this frame; the scaling
-    harness (tools/scaling_workload.py) drives it into the ``noop`` sink
-    to time encode COMPUTE separately from the parquet write — the
-    split the round-3 verdict asked for on the encode+write leg."""
-    pos_cols = ["positions"] if "positions" in ix.postings.columns else []
-    if getattr(ix, "norm_from_tf", False):
-        # No norms join at all: the kernel re-derives the norm byte from
-        # Σtf inside each doc-range group (see _encode_partition). This
-        # removes a per-doc broadcast that is impossible at 10^9-doc
-        # scale (the hint forces it past the autoBroadcast threshold),
-        # its driver-side collect+serialize (measured as a data-
-        # proportional, core-count-independent cost on the encode leg),
-        # and the norm column from every shuffled posting row.
-        with_seg = ix.postings.withColumn(
-            "segment_id", (F.col("doc_id") / segment_size).cast("long")
-        ).select("segment_id", "term", "doc_id", "tf", *pos_cols)
-    else:
-        with_seg = (
-            ix.postings.join(F.broadcast(ix.norms), "doc_id")
-            .withColumn("segment_id", (F.col("doc_id") / segment_size).cast("long"))
-            .select("segment_id", "term", "doc_id", "tf", "norm", *pos_cols)
-        )
-    if skip_segment_ids:
-        with_seg = with_seg.filter(~F.col("segment_id").isin(skip_segment_ids))
-    # Bucket-skew guard (measured: the 2x encode-scaling ceiling at N=16
-    # was NOT IO — tmpfs shuffle dirs changed nothing — but segment ids
-    # HASHING into only spark.sql.shuffle.partitions buckets: 59 segments
-    # over 16 buckets puts ~2x the mean into the worst bucket, and the
-    # stage runs at the speed of that bucket). Fix: RANGE-partition the
-    # encode shuffle on segment_id — contiguous ids per partition,
-    # boundaries from the row sampler, so partitions are balanced by ROWS
-    # (imbalance ≤ ceil(S/p)/(S/p) instead of the hash-collision tail).
-    # Task count is bounded at 4x the cluster parallelism, so tiny-task
-    # overhead never dominates small builds and web-scale builds don't
-    # schedule one task per 10^6 segments. RangePartitioning(segment_id)
-    # satisfies the groupBy's ClusteredDistribution, so Catalyst inserts
-    # NO second exchange before applyInPandas.
-    spark = ix.postings.sparkSession
-    n_segments = max(1, -(-int(ix.doc_count) // segment_size))
-    par = max(1, spark.sparkContext.defaultParallelism)
-    n_parts = min(n_segments, 4 * par)
-    return (
-        with_seg.repartitionByRange(n_parts, "segment_id")
-        .groupBy("segment_id")
-        .applyInPandas(_encode_partition(segment_size), schema=SEGMENT_SCHEMA)
-    )
+    """The segment ENCODE pipeline as a DataFrame of SEGMENT_SCHEMA rows,
+    unsunk: the build's doc-range grouping and ``encode_segment``, without
+    the write. The scaling harness (tools/scaling_workload.py) drives it
+    into the ``noop`` sink to time encode COMPUTE apart from the write."""
+
+    def encode(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        rows = encode_segment(*_split(pdf)).to_pandas()
+        return rows.assign(segment_id=int(key[0]))[SEGMENT_SCHEMA.fieldNames()]
+
+    segment_id, n_parts = _doc_range_parts(ix, segment_size)
+    groups = _segment_groups(ix, segment_id, n_parts, skip_segment_ids)
+    return groups.applyInPandas(encode, schema=SEGMENT_SCHEMA)
 
 
 def build_segments(
@@ -358,126 +504,33 @@ def build_segments(
     ``resume=True`` skips segments already recorded in the manifest (the
     prepareCommit/commit two-phase contract: data files first, manifest
     row only after — ``index/IndexWriter.java:3367``)."""
-    spark = ix.postings.sparkSession
     prev: dict = {}
     if resume and os.path.exists(f"{base}/manifest.json"):
         prev = read_manifest(base)
         clear_orphans(base, prev)
     done = [int(s["segment_id"]) for s in prev.get("segments", [])]
 
-    enc = encode_frame(ix, segment_size, skip_segment_ids=done)
-    # No repartition before the write: the groupBy already placed each
-    # segment wholly inside one task, and _encode_partition emits its rows
-    # term-sorted (groupby(sort=True)), so partitionBy still yields one
-    # term-sorted file per segment dir. Re-shuffling the encoded blobs a
-    # second time doubled the heaviest IO of the whole flush for nothing.
-    (
-        enc.write.mode("append" if done else "overwrite")
-        .partitionBy("segment_id")
-        .parquet(f"{base}/segments")
-    )
+    segment_id, n_parts = _doc_range_parts(ix, segment_size)
+    written = write_segments(ix, base, segment_id, n_parts, skip=done)
 
-    docs = ix.docs.withColumn(
-        "segment_id", (F.col("doc_id") / segment_size).cast("long")
-    )
-    if done:
-        docs = docs.filter(~F.col("segment_id").isin(done))
-    (
-        docs.select("segment_id", "doc_id", "length", "norm")
-        .repartition(F.col("segment_id"))
-        .sortWithinPartitions("doc_id")
-        .write.mode("append" if done else "overwrite")
-        .partitionBy("segment_id")
-        .parquet(f"{base}/seg_docs")
-    )
-
-    # post-write bookkeeping: three SMALL independent jobs (dictionary
-    # write, lineage hash, doc ranges) — run concurrently under the FAIR
-    # scheduler; each is metadata-sized, so wall-clock ≈ the slowest one
-    def _new(table: str) -> DataFrame:
-        df = spark.read.parquet(f"{base}/{table}")
-        return df.filter(~F.col("segment_id").isin(done)) if done else df
-
-    # a resumed build must not overwrite the committed dictionary
+    # global dictionary: per-segment dfs/ttfs sum to the collection stats
+    # BY CONSTRUCTION (each posting lands in exactly one doc-range
+    # segment), so the relational index's term_stats IS the dictionary.
+    # A resumed build must not overwrite the committed one.
     ts_name = fresh_name(prev, "term_stats") if prev else "term_stats"
-
-    def _write_term_stats():
-        # global dictionary: per-segment dfs/ttfs sum to the collection
-        # stats BY CONSTRUCTION (each posting lands in exactly one doc-
-        # range segment), so the relational index's term_stats IS the
-        # dictionary — reuse it instead of re-aggregating written segments
-        (
-            ix.term_stats.repartitionByRange(4, "term")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .parquet(f"{base}/{ts_name}")
-        )
-
-    def _lineage():
-        # lineage + content hash per segment from the WRITTEN data
-        # (resume/idempotency key)
-        return (
-            _new("segments")
-            .groupBy("segment_id")
-            .agg(
-                F.count("*").alias("n_terms"),
-                F.sum("df").alias("n_postings"),
-                F.sum("ttf").alias("sum_tf"),
-                F.sum(
-                    F.crc32(F.encode(F.col("term"), "utf-8"))
-                    + F.crc32(F.coalesce(F.col("doc_blob"), F.lit(b"")))
-                    + F.crc32(F.coalesce(F.col("tf_blob"), F.lit(b"")))
-                    + F.crc32(F.coalesce(F.col("tail_blob"), F.lit(b"")))
-                    + F.col("df")
-                    + F.col("singleton_doc")
-                ).alias("content_crc"),
-            )
-            .collect()
-        )
-
-    def _doc_counts():
-        return {
-            int(r["segment_id"]): (int(r["n"]), int(r["mn"]), int(r["mx"]))
-            for r in _new("seg_docs")
-            .groupBy("segment_id")
-            .agg(
-                F.count("*").alias("n"),
-                F.min("doc_id").alias("mn"),
-                F.max("doc_id").alias("mx"),
-            )
-            .collect()
-        }
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        fut_ts = pool.submit(_write_term_stats)
-        fut_lin = pool.submit(_lineage)
-        fut_dc = pool.submit(_doc_counts)
-        fut_ts.result()
-        lineage = fut_lin.result()
-        doc_counts = fut_dc.result()
-    segments_meta = [
-        {
-            "segment_id": int(r["segment_id"]),
-            "n_terms": int(r["n_terms"]),
-            "n_postings": int(r["n_postings"]),
-            "sum_tf": int(r["sum_tf"]),
-            "content_crc": int(r["content_crc"]),
-            "n_docs": doc_counts.get(int(r["segment_id"]), (0, -1, -1))[0],
-            "min_doc": doc_counts.get(int(r["segment_id"]), (0, -1, -1))[1],
-            "max_doc": doc_counts.get(int(r["segment_id"]), (0, -1, -1))[2],
-        }
-        for r in lineage
-    ]
+    (
+        ix.term_stats.repartitionByRange(4, "term")
+        .sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .parquet(f"{base}/{ts_name}")
+    )
     manifest = {
         **prev,
         "doc_count": ix.doc_count,
         "sum_ttf": ix.sum_ttf,
         "segment_size": segment_size,
         "segments": sorted(
-            prev.get("segments", []) + segments_meta,
-            key=lambda s: s["segment_id"],
+            prev.get("segments", []) + written, key=lambda s: s["segment_id"]
         ),
     }
     if prev:

@@ -55,7 +55,7 @@ from lucene_solr_spark.codecs.postings_codec import (
     EncodedPostings,
     decode_blocks,
 )
-from lucene_solr_spark.operators.segments import SegmentIndex, table_path
+from lucene_solr_spark.operators.segments import SegmentIndex, segment_path, table_path
 from lucene_solr_spark.oracle import bm25
 from lucene_solr_spark.plans import ir
 from lucene_solr_spark.plans.rewriter import rewrite
@@ -1903,11 +1903,11 @@ class SegmentSearcher:
             for pdf in iterator:
                 for sid in pdf["segment_id"].tolist():
                     post_tbl = pq.read_table(
-                        f"{base}/segments/segment_id={sid}",
+                        segment_path(base, "segments", sid),
                         filters=pq_filters,
                     )
                     docs_tbl = pq.read_table(
-                        f"{base}/seg_docs/segment_id={sid}",
+                        segment_path(base, "seg_docs", sid),
                         columns=["doc_id", "norm"],
                     )
                     tombs = None

@@ -6,11 +6,13 @@ searchable on reader reopen (``index/DirectoryReader.java:72``
 ``DirectoryReader.open(IndexWriter)``, ``search/SearcherManager.java``).
 
 Spark re-expression: ``readStream → foreachBatch(append_batch)``. Each
-micro-batch becomes ONE new immutable segment, published together with
-its merged dictionary by one ``operators.segments.commit`` — exactly a
-DWPT flush (``index/DocumentsWriterPerThread.java``) at micro-batch
-cadence. "Reopen" = ``SegmentIndex.open(base)`` reading the latest
-manifest — a SearcherManager.maybeRefresh. Late data is a non-issue:
+micro-batch becomes ONE new immutable segment, encoded and written in one
+Spark task by the segment writer every index writer shares
+(``operators.segments.write_segment``) and published together with its
+merged dictionary by one ``operators.segments.commit`` — exactly a DWPT
+flush (``index/DocumentsWriterPerThread.java``) at micro-batch cadence.
+"Reopen" = ``SegmentIndex.open(base)`` reading the latest manifest — a
+SearcherManager.maybeRefresh. Late data is a non-issue:
 docIDs are assigned append-only per batch (batch base = the manifest's
 ``next_doc_id`` watermark), matching Lucene's arrival-order docIDs for
 NRT writers.
@@ -33,13 +35,12 @@ from pyspark.sql import functions as F
 
 from lucene_solr_spark.operators.index_build import assign_doc_ids, build_index
 from lucene_solr_spark.operators.segments import (
-    SEGMENT_SCHEMA,
     SegmentIndex,
-    _encode_partition,
     commit,
     fresh_name,
     read_manifest,
     table_path,
+    write_segments,
 )
 
 __all__ = ["append_batch", "index_stream"]
@@ -58,9 +59,10 @@ def append_batch(
     """Index one (micro-)batch as a new segment; returns its id.
 
     Callable directly on a static DataFrame (unit tests / backfill) or
-    from ``foreachBatch``. The segment, its seg_docs and the merged
-    dictionary are written under fresh names, then one ``commit``
-    publishes them (a crash before it leaves unreferenced files that no
+    from ``foreachBatch``. One Spark task encodes and writes the segment
+    and returns its manifest row (``operators.segments.write_segments``);
+    the merged dictionary goes to a fresh name; then one ``commit``
+    publishes both (a crash before it leaves unreferenced files that no
     reader resolves).
 
     ``batch_id`` makes the append idempotent per micro-batch: Structured
@@ -101,26 +103,12 @@ def append_batch(
         stopwords=stopwords,
     )
 
-    pos_cols = ["positions"] if "positions" in ix.postings.columns else []
-    enc = (
-        ix.postings.join(F.broadcast(ix.norms), "doc_id")
-        .withColumn("segment_id", F.lit(seg_id).cast("long"))
-        .select("segment_id", "term", "doc_id", "tf", "norm", *pos_cols)
-        .groupBy("segment_id")
-        .applyInPandas(_encode_partition(0), schema=SEGMENT_SCHEMA)
-    )
-    seg_path = f"{base}/segments/segment_id={seg_id}"
-    enc.drop("segment_id").coalesce(1).sortWithinPartitions("term").write.mode(
-        "overwrite"
-    ).parquet(seg_path)
+    # the whole batch is one segment: one task encodes and writes it
+    written = write_segments(ix, base, F.lit(seg_id), 1)
 
-    docs_path = f"{base}/seg_docs/segment_id={seg_id}"
-    ix.docs.select("doc_id", "length", "norm").coalesce(1).sortWithinPartitions(
-        "doc_id"
-    ).write.mode("overwrite").parquet(docs_path)
-
-    # dictionary merge: old ∪ new, summed, into a fresh table
-    stats = spark.read.parquet(seg_path).select("term", "df", "ttf")
+    # dictionary merge: old ∪ the batch's own (term, df, ttf), summed,
+    # into a fresh table
+    stats = ix.term_stats.select("term", "df", "ttf")
     if manifest["segments"]:
         stats = spark.read.parquet(
             table_path(base, manifest, "term_stats")
@@ -132,23 +120,7 @@ def append_batch(
         "overwrite"
     ).parquet(f"{base}/{ts_name}")
 
-    seg_stats = (
-        spark.read.parquet(seg_path)
-        .agg(F.count("*").alias("nt"), F.sum("df").alias("np"), F.sum("ttf").alias("st"))
-        .collect()[0]
-    )
-    manifest["segments"].append(
-        {
-            "segment_id": int(seg_id),
-            "n_docs": ix.doc_count,
-            "min_doc": base_doc,
-            "max_doc": base_doc + ix.doc_count - 1,
-            "n_terms": int(seg_stats["nt"]),
-            "n_postings": int(seg_stats["np"]),
-            "sum_tf": int(seg_stats["st"]),
-            "content_crc": 0,
-        }
-    )
+    manifest["segments"] += written
     manifest["doc_count"] = manifest["doc_count"] + ix.doc_count
     manifest["next_doc_id"] = base_doc + ix.doc_count
     manifest["sum_ttf"] = manifest["sum_ttf"] + ix.sum_ttf

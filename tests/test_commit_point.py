@@ -1,11 +1,18 @@
 """Crash consistency of the index commit point.
 
-Every index writer is crashed at each of its filesystem steps: the n-th
-call of ``os.replace``, ``json.dump``, ``shutil.rmtree`` or
-``DataFrameWriter.parquet`` raises instead of running, for every n the
-writer reaches. The failure is injected at the I/O level, so the cases
-do not depend on how a writer orders its steps. After each crash the
-index is reopened and must
+Every index writer is crashed at each of its filesystem steps, for every
+step the writer reaches:
+
+* in the driver, the n-th call of ``os.replace``, ``json.dump``,
+  ``shutil.rmtree`` or ``DataFrameWriter.parquet`` raises instead of
+  running;
+* in the Spark tasks, which run in other processes, the write of the
+  n-th segment dir a clean run creates fails because a file already sits
+  where that dir must go.
+
+The failure is injected at the I/O level, so the cases do not depend on
+how a writer orders its steps. After each crash the index is reopened
+and must
 
 * parse;
 * equal the snapshot before the operation or the one after it in
@@ -14,8 +21,9 @@ index is reopened and must
 * rank top-10 ids and float32 score bits exactly as ``OracleIndex`` does
   over that snapshot's documents.
 
-A static guard at the end keeps every manifest write inside
-``operators.segments.commit``.
+Static guards at the end keep every manifest write inside
+``operators.segments.commit`` and every segment file write inside
+``operators.segments``.
 """
 
 from __future__ import annotations
@@ -64,7 +72,7 @@ QUERIES = {
         0,
     ),
 }
-CALLS = ["replace", "dump", "rmtree", "parquet"]
+CALLS = ["replace", "dump", "rmtree", "parquet", "segment_dir"]
 
 
 class InjectedCrash(Exception):
@@ -161,6 +169,21 @@ def _patch(monkeypatch, fail_at: dict[str, int], counts: dict[str, int]) -> None
         monkeypatch.setattr(owner, attr, wrapper)
 
 
+def _segment_dirs(base: str) -> set[str]:
+    return {
+        f"{table}/{d}"
+        for table in ("segments", "seg_docs")
+        for d in os.listdir(f"{base}/{table}")
+        if d.startswith("segment_id=")
+    }
+
+
+def _block(base: str, segment_dir: str) -> None:
+    """Put a file where a writer task must create ``segment_dir``."""
+    with open(f"{base}/{segment_dir}", "wb"):
+        pass
+
+
 def _snapshot(base: str) -> tuple:
     """What a commit publishes: doc_count, segment list, tombstones."""
     idx = SegmentIndex.open(base)
@@ -206,7 +229,8 @@ def _engine(spark, base: str) -> dict:
 @pytest.fixture(scope="module")
 def references(spark, setup, tmp_path_factory):
     """Per scenario: the before and after snapshots with their oracle
-    rankings, and how often a clean run calls each I/O function."""
+    rankings, how often a clean run calls each I/O function, and the
+    segment dirs its tasks create."""
     out = {}
 
     def get(name):
@@ -220,12 +244,14 @@ def references(spark, setup, tmp_path_factory):
             with pytest.MonkeyPatch.context() as mp:
                 _patch(mp, {}, counts)
                 op(spark, after, setup)
+            created = sorted(_segment_dirs(after) - _segment_dirs(before))
+            counts["segment_dir"] = len(created)
             snaps = {
                 _snapshot(before): _expected(before, content),
                 _snapshot(after): _expected(after, content),
             }
             assert len(snaps) == 2, f"{name} did not change the index"
-            out[name] = (snaps, counts)
+            out[name] = (snaps, counts, created)
         return out[name]
 
     return get
@@ -234,17 +260,22 @@ def references(spark, setup, tmp_path_factory):
 @pytest.mark.parametrize("call", CALLS)
 @pytest.mark.parametrize("scenario", list(SCENARIOS))
 def test_crash_leaves_old_or_new_snapshot(spark, setup, references, tmp_path, scenario, call):
-    snaps, counts = references(scenario)
+    snaps, counts, created = references(scenario)
     src_key, op, _ = SCENARIOS[scenario]
     for n in range(1, counts.get(call, 0) + 1):
         base = str(tmp_path / f"crash_{n}")
         shutil.copytree(setup[src_key], base)
-        with pytest.MonkeyPatch.context() as mp:
-            _patch(mp, {call: n}, {})
-            try:
+        if call == "segment_dir":
+            _block(base, created[n - 1])
+            with pytest.raises(Exception, match="FileExistsError"):
                 op(spark, base, setup)
-            except InjectedCrash:
-                pass
+        else:
+            with pytest.MonkeyPatch.context() as mp:
+                _patch(mp, {call: n}, {})
+                try:
+                    op(spark, base, setup)
+                except InjectedCrash:
+                    pass
         where = f"{scenario}: crash at {call} call {n}"
         try:
             snap = _snapshot(base)
@@ -257,15 +288,19 @@ def test_crash_leaves_old_or_new_snapshot(spark, setup, references, tmp_path, sc
 
 
 def test_resume_after_a_crash_converges(spark, setup, references, tmp_path):
-    """A crashed resume leaves partial segment dirs the manifest does not
-    name; resuming again clears them instead of appending beside them."""
-    snaps, _ = references("build_resume")
+    """A crashed resume leaves segment files the manifest does not name;
+    once the fault is gone, resuming again replaces them and converges."""
+    snaps, _, _ = references("build_resume")
     base = str(tmp_path / "ix")
     shutil.copytree(setup["partial"], base)
-    with pytest.MonkeyPatch.context() as mp:
-        _patch(mp, {"parquet": 2}, {})  # after the segment rows are written
-        with pytest.raises(InjectedCrash):
-            build_segments(setup["full"], base, segment_size=SEG, resume=True)
+    last = N_BASE // SEG - 1
+    # the task writing the last segment fails after its term rows
+    _block(base, f"seg_docs/segment_id={last}")
+    with pytest.raises(Exception, match="FileExistsError"):
+        build_segments(setup["full"], base, segment_size=SEG, resume=True)
+    assert os.listdir(f"{base}/segments/segment_id={last}")
+    assert last not in {s["segment_id"] for s in SegmentIndex.open(base).manifest()["segments"]}
+    os.remove(f"{base}/seg_docs/segment_id={last}")
     build_segments(setup["full"], base, segment_size=SEG, resume=True)
     snap = _snapshot(base)
     assert snap == max(snaps, key=lambda s: s[0])  # the larger, resumed one
@@ -311,4 +346,28 @@ def test_only_commit_writes_the_manifest():
             for c in ast.walk(tree):
                 if isinstance(c, ast.Call) and ast.unparse(c.func) in ("os.replace", "os.rename"):
                     bad.append(f"{rel}:{c.lineno} renames outside the commit point")
+    assert not bad, bad
+
+
+def _writes_segment_files(call: ast.Call) -> bool:
+    f = ast.unparse(call.func)
+    if f.endswith(("write_table", "write_dataset")):
+        return True
+    return f.endswith(".partitionBy") and any(
+        isinstance(a, ast.Constant) and a.value == "segment_id" for a in call.args
+    )
+
+
+def test_only_the_segment_writer_writes_segments():
+    """Nothing outside ``operators/segments.py`` writes under
+    ``segments/`` or ``seg_docs/``: no pyarrow ``write_table`` and no
+    ``partitionBy("segment_id")`` Spark write — every writer goes through
+    ``write_segment``."""
+    bad = [
+        f"{rel}:{c.lineno} {ast.unparse(c.func)}"
+        for path in sorted(PKG.rglob("*.py"))
+        if (rel := path.relative_to(PKG).as_posix()) != "operators/segments.py"
+        for c in ast.walk(ast.parse(path.read_text()))
+        if isinstance(c, ast.Call) and _writes_segment_files(c)
+    ]
     assert not bad, bad
